@@ -12,11 +12,13 @@ import org.apache.spark.sql.functions._
   * shard can materialize each sequence independently.
   *
   * Scale design: the only global state is the running token offset,
-  * computed with the same range-repartition + per-partition prefix +
-  * tiny prefix-combine window machinery the lowered window family uses
-  * ([[graft.plans.Lower.runningOverOrder]]) — two distributed shuffles,
-  * no single-task OrderBarrier, no driver collect. The explode is a
-  * narrow per-row fan-out of (tokens/budget + 1) rows max.
+  * computed with the same order-bucket machinery the lowered window
+  * family uses ([[graft.plans.Lower.runningOverOrder]]): a plan-time
+  * key sample fixes the bucket of every row, one shuffle by bucket
+  * carries the rows, and a tiny prefix-combine window over the
+  * partial-agged per-bucket totals supplies each bucket's offset — no
+  * single-task OrderBarrier, no driver collect of rows. The explode is
+  * a narrow per-row fan-out of (tokens/budget + 1) rows max.
   */
 object Pack {
 
@@ -69,7 +71,7 @@ object Pack {
     * by `budget` elements — group state never exceeds one sequence. */
   def sequences(df: DataFrame, idCol: String, toksCol: String,
                 orderCol: String, budget: Long): DataFrame = {
-    // only (id, order, count) ride the prefix machinery's two shuffles;
+    // only (id, order, count) ride the prefix machinery's shuffle;
     // the arrays join back afterwards
     val slim = df.withColumn("__n_tok", size(col(toksCol)).cast("long"))
       .select(Seq(idCol, orderCol).distinct.map(col) :+ col("__n_tok"): _*)

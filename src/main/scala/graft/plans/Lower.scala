@@ -1758,13 +1758,14 @@ object Lower {
   // §4.4). The helpers below replace that barrier with distributed
   // shapes that scale with the cluster:
   //
-  //   runningOverOrder — range-repartition on the order keys (partition
-  //     ids are then monotone with the key ranges and equal keys stay in
-  //     one partition), aggregate each partition's lane, prefix-combine
-  //     the ≤#partitions per-partition aggregates in a tiny window,
-  //     broadcast the exclusive prefixes back, and combine with the
-  //     within-partition running aggregate. Two distributed shuffles
-  //     replace the single-task sort.
+  //   runningOverOrder — tag every row with its order bucket (an
+  //     `OrderBucket`: boundaries sampled once at plan time, the bucket
+  //     a pure function of the row's key, monotone with the order, equal
+  //     keys in one bucket), aggregate each bucket's lane, prefix-combine
+  //     the ≤#buckets per-bucket aggregates in a tiny window, broadcast
+  //     the exclusive prefixes back, and combine with the within-bucket
+  //     running aggregate. One full-data shuffle (by bucket) replaces
+  //     the single-task sort; the per-bucket aggregate is partial-agged.
   //
   //   withGlobalRn — global row number as a running count(1).
   //
@@ -1775,85 +1776,63 @@ object Lower {
   //     have exactly B ≥ k+1 rows (except the last), so one hop of
   //     carries is always sufficient. Carries are dropped afterwards.
 
-  /** Partition count for the order machinery's range exchanges, passed
-    * EXPLICITLY (`repartitionByRange(N, …)`). Both helpers read the SAME
-    * range exchange from two consumers (the per-partition aggregate and
-    * the row side) and join on `spark_partition_id()` — correctness
-    * therefore requires the two reads to observe identical partitioning.
-    * A user-specified partition count (REPARTITION_BY_NUM) is exactly
-    * what pins that: AQE never coalesces or locally re-reads a
-    * user-numbered repartition, so both consumers read all N reducer
-    * partitions as written, and exchange/stage reuse (asserted by
-    * OrderMachinerySpec) makes them the same physical stage. Derived
-    * from the session's shuffle-partition conf — scale-adaptive, not a
-    * local constant; `spark.graft.lower.rangeParts` overrides. */
+  /** Bucket count of the order machinery (the number of key ranges the
+    * plan-time sample splits the order into). Derived from the
+    * session's shuffle-partition conf — scale-adaptive, not a local
+    * constant; `spark.graft.lower.rangeParts` overrides. */
   private def rangeParts(df: DataFrame): Int = {
     val conf = df.sparkSession.conf
     math.max(1, conf.get("spark.graft.lower.rangeParts",
       conf.get("spark.sql.shuffle.partitions", "200")).toInt)
   }
 
+  /** Running `aggFn(lane)` over the total order `ordCols`, as column
+    * `out` = `combine(exclusive prefix of earlier buckets, running
+    * aggregate within the row's bucket)`.
+    *
+    * Correct by construction: both consumers of the input — the
+    * per-bucket aggregate and the row side — derive `__bucket` from
+    * the same plan-time boundaries as a pure function of the key, and
+    * join on it, so no two samplers, exchange reuse or AQE partition
+    * layout has to agree. `repartitionById` places bucket i on reducer
+    * i — balance only (one key range per task, like a range exchange);
+    * any clustering by `__bucket` would be equally correct. */
   private[graft] def runningOverOrder(
       df: DataFrame, ordCols: Seq[Column], lane: Column,
       aggFn: Column => Column, combine: (Column, Column) => Column,
       out: String): DataFrame = {
-    val parted = df.repartitionByRange(rangeParts(df), ordCols: _*)
-      .withColumn("__pid", spark_partition_id())
+    if (df.isStreaming)
+      bail("total-order machinery samples its input at plan time; streams are unbounded")
+    val n = rangeParts(df)
+    val bucketed = df.withColumn("__bucket", OrderBucket.column(df, ordCols, n))
       .withColumn("__lane", lane)
-    val perPid = parted.groupBy("__pid").agg(aggFn(col("__lane")).as("__t"))
-    // exclusive prefix per pid — a window over ≤ #shuffle-partitions
-    // rows, single-partition BY DESIGN (the frame IS the ≤32-row
-    // aggregate table). The partition key must be a NON-FOLDABLE
-    // constant: Spark 4.1's EliminateWindowPartitions strips foldable
-    // keys like lit(0), reverting to an unpartitioned window whose
-    // moving-all-data warning would mask a real single-task regression.
-    val offs = perPid.select(col("__pid"),
+    val perBucket = bucketed.groupBy("__bucket").agg(aggFn(col("__lane")).as("__t"))
+    // exclusive prefix per bucket — a window over ≤ #buckets rows,
+    // single-partition BY DESIGN (the frame IS the tiny aggregate
+    // table). The partition key must be a NON-FOLDABLE constant: Spark
+    // 4.1's EliminateWindowPartitions strips foldable keys like lit(0),
+    // reverting to an unpartitioned window whose moving-all-data
+    // warning would mask a real single-task regression.
+    val offs = perBucket.select(col("__bucket"),
       aggFn(col("__t")).over(
-        Window.partitionBy(onePartition(col("__pid")))
-          .orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1))
+        Window.partitionBy(onePartition(col("__bucket")))
+          .orderBy("__bucket").rowsBetween(Window.unboundedPreceding, -1))
         .as("__pre"))
-    val wIn = Window.partitionBy("__pid").orderBy(ordCols: _*)
+    val wIn = Window.partitionBy("__bucket").orderBy(ordCols: _*)
       .rowsBetween(Window.unboundedPreceding, 0)
-    parted.join(broadcast(offs), Seq("__pid"))
+    bucketed.repartitionById(n, col("__bucket"))
+      .join(broadcast(offs), Seq("__bucket"))
       .withColumn(out, combine(col("__pre"), aggFn(col("__lane")).over(wIn)))
-      .drop("__pid", "__pre", "__lane")
+      .drop("__bucket", "__pre", "__lane")
   }
 
   /** Global 1-based row number over `ordCols` without a single-task
-    * barrier. Ties (equal keys) get an arbitrary stable intra-order,
-    * same as the unpartitioned-window mapping this replaces.
-    *
-    * Cheaper than `runningOverOrder(lit(1L), sum, …)` by one FULL-DATA
-    * exchange and one window sort (r11, guide §2.4): the running
-    * count(1) within a range partition is just the row's position in
-    * the partition's sort order, and after `sortWithinPartitions` that
-    * position is the low 33 bits of `monotonically_increasing_id()`
-    * (documented encoding: partition id ≪ 33 | record index) — no
-    * Window, so no hashpartitioning(__pid) re-shuffle of the data. The
-    * per-partition COUNTS (for the exclusive prefix) aggregate on the
-    * unsorted side of the same exchange (partial-agged, ≤ #partitions
-    * rows), so Catalyst reuses the range exchange for both consumers.
-    * Tie order within equal keys is the partition-local physical order
-    * after the sort — exactly as arbitrary-but-stable as the
-    * row_number() form this replaces. */
-  private def withGlobalRn(df: DataFrame, ordCols: Seq[Column], out: String): DataFrame = {
-    val ranged = df.repartitionByRange(rangeParts(df), ordCols: _*)
-    val counts = ranged
-      .groupBy(spark_partition_id().as("__pid"))
-      .agg(count(lit(1)).as("__t"))
-    val offs = counts.select(col("__pid"),
-      sum(col("__t")).over(
-        Window.partitionBy(onePartition(col("__pid")))
-          .orderBy("__pid").rowsBetween(Window.unboundedPreceding, -1))
-        .as("__pre"))
-    ranged.sortWithinPartitions(ordCols: _*)
-      .withColumn("__pid", spark_partition_id())
-      .withColumn("__lidx",
-        monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1)))
-      .join(broadcast(offs), Seq("__pid"))
-      .withColumn(out, coalesce(col("__pre"), lit(0L)) + col("__lidx") + 1)
-      .drop("__pid", "__lidx", "__pre")
-  }
+    * barrier: the running count(1) of [[runningOverOrder]]. Ties (equal
+    * keys) share a bucket and number in an arbitrary order among
+    * themselves, as in the unpartitioned-window mapping this replaces. */
+  private def withGlobalRn(df: DataFrame, ordCols: Seq[Column], out: String): DataFrame =
+    runningOverOrder(df, ordCols, lit(1L), sum,
+      (pre, w) => coalesce(pre, lit(0L)) + w, out)
 
   /** Run `compute(aug, w)` where `w` is a by-block window whose frames
     * see `back` rows before / `fwd` rows after every row; the computed
@@ -1872,7 +1851,7 @@ object Lower {
     // Each row fans out to its own block plus (when it sits in a block's
     // boundary band) the neighbouring block — ONE generate pass instead
     // of union-of-filtered-branches: the union form re-executed the
-    // whole global-row-number subtree (range shuffle → per-partition
+    // whole global-row-number subtree (bucket shuffle → per-bucket
     // aggregate → prefix window → broadcast join → running window) once
     // per branch, which the plan showed as a full duplicate of the
     // machinery (2× Sort+Window+Join over the data even with exchange

@@ -167,9 +167,9 @@ class PlanQualitySpec extends SparkSpec {
       df.collect() // finalize the adaptive plan
       val wins = nodes(executed(df)).collect { case w: WindowExec => w }
       assert(wins.nonEmpty, e)
-      // every data-frame window partitions (by __blk or __pid); the only
-      // unpartitioned windows allowed are the prefix-combines over the
-      // per-partition stats aggregate (≤ #shuffle-partitions rows)
+      // every data-frame window partitions (by __blk or __bucket); the
+      // only unpartitioned windows allowed are the prefix-combines over
+      // the per-bucket stats aggregate (≤ #buckets rows)
       wins.filter(_.partitionSpec.isEmpty).foreach { w =>
         assert(nodes(w).exists(_.isInstanceOf[BaseAggregateExec]),
           s"$e: unpartitioned window over a non-aggregated frame:\n$w")
@@ -229,8 +229,8 @@ class PlanQualitySpec extends SparkSpec {
     val wins = nodes(executed(df)).collect { case w: WindowExec => w }
     assert(wins.nonEmpty)
     // the only unpartitioned window allowed is the tiny prefix-combine
-    // over the per-partition totals aggregate (≤ #shuffle-partitions
-    // rows); the full-table running sum must partition by __pid
+    // over the per-bucket totals aggregate (≤ #buckets rows); the
+    // full-table running sum must partition by __bucket
     wins.filter(_.partitionSpec.isEmpty).foreach { w =>
       assert(nodes(w).exists(_.isInstanceOf[BaseAggregateExec]),
         s"unpartitioned window over a non-aggregated frame:\n$w")
