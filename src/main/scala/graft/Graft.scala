@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.core.Tables
+import graft.core.{Intermediate, Tables}
 import graft.jexpr.{Expr, Jetro, JValue}
 import graft.plans.Lower
 
@@ -263,125 +263,42 @@ object Graft {
       .as(org.apache.spark.sql.Encoders.STRING)
   }
 
-  // Rowwise string-cache generations: rowwiseCompile persists the
-  // interpreter output so schema inference (when needed — see the
-  // static-schema shortcut below) and the parse pass both read the SAME
-  // materialised strings instead of re-running the interpreter. A small
-  // LRU keyed by (session, sfDir, table, expr) — rather than the single
-  // latest-generation slot rounds 7-9 kept — lets two interleaved
-  // rowwise queries coexist without evicting each other (each eviction
-  // costs one extra interpreter pass on the next materialization).
-  // Eviction is always safe because the parse carries an EXPLICIT
-  // schema — a recompute is ONE interpreter pass, never inference+parse.
-  private final case class RowwiseKey(
-      session: SparkSession, sfDir: String, table: String, expr: String)
-  private final case class RowwiseGen(
-      ds: org.apache.spark.sql.Dataset[String],
-      schema: org.apache.spark.sql.types.StructType,
-      static: Boolean)
-
-  private val rowwiseCacheCap = 4
-  private val rowwiseCache =
-    new java.util.LinkedHashMap[RowwiseKey, RowwiseGen](8, 0.75f, true) {
-      override def removeEldestEntry(
-          e: java.util.Map.Entry[RowwiseKey, RowwiseGen]): Boolean = {
-        val evict = size() > rowwiseCacheCap
-        if (evict) safeUnpersist(e.getValue.ds)
-        evict
-      }
-    }
-
-  private def safeUnpersist(ds: org.apache.spark.sql.Dataset[String]): Unit =
-    // a stale generation may belong to a SparkSession that has since
-    // stopped (its blocks died with the context) — eviction is
-    // best-effort bookkeeping, never worth failing the new query over
-    try {
-      if (!ds.sparkSession.sparkContext.isStopped)
-        ds.unpersist(blocking = false)
-    } catch { case scala.util.control.NonFatal(_) => () }
-
-  /** Drop every retained rowwise string cache generation (e.g. between
-    * benchmark sweeps). Queries already compiled stay correct — they
-    * reparse with their explicit schema in one interpreter pass. */
-  def clearRowwiseCache(): Unit = rowwiseCache.synchronized {
-    rowwiseCache.values().forEach(g => safeUnpersist(g.ds))
-    rowwiseCache.clear()
-  }
-
+  /** The rowwise rung: the interpreter's JSON output, parsed into rows.
+    * ONE distributed interpreter pass per compiled query, not two —
+    * schema inference over `spark.read.json` is a full scan of the UDF
+    * output and the parse is a second, so the strings are materialised
+    * for the query's lifetime ([[Intermediate.persist]], MEMORY_AND_DISK:
+    * at scale the spill is the price of not re-running the interpreter)
+    * and both read them. When the static walker proves the pipeline's
+    * output shape (Lower.rowwiseStaticSchema), the inference scan is
+    * skipped and the interpreter runs when the result is first read.
+    * Nothing outlives the returned DataFrame: compiling the same text
+    * again reads the table as it is now. */
   private[graft] def rowwiseCompile(
       spark: SparkSession, sfDir: String, expr: String): Option[DataFrame] =
     rowwisePlan(expr).filter(p => Tables.names.contains(p._1)).map {
       case (table, evalExpr) =>
-        val key = RowwiseKey(spark, sfDir, table, evalExpr)
-        val hit = rowwiseCache.synchronized {
-          Option(rowwiseCache.get(key)) match {
-            case Some(g) if g.ds.sparkSession.sparkContext.isStopped =>
-              // purge on access: a stopped session's blocks are gone,
-              // but the entry would otherwise hold the dead session
-              // until capacity eviction
-              rowwiseCache.remove(key); None
-            case other => other
-          }
+        // per-row interpreter work dwarfs one narrow-row shuffle, so
+        // spread an under-parallelised scan first (rowwise chains are
+        // per-row independent — input order never matters here)
+        val src = Tables.spreadCompute(Tables(spark, sfDir, table))
+        val ds = Intermediate.persist(rowwiseJson(src, table, evalExpr),
+          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        Lower.rowwiseStaticSchema(src.schema, evalExpr) match {
+          // STATIC path: parse with the from_json expression. The static
+          // walker only ever proves OBJECT streams, where no
+          // corrupt-record line can occur, and from_json drives the same
+          // JacksonParser in PERMISSIVE mode as the reader.
+          case Some(schema) =>
+            import org.apache.spark.sql.functions.{col, from_json}
+            ds.select(from_json(col(ds.columns.head), schema).as("__r"))
+              .select(col("__r.*"))
+          // inference path: the reader form in PERMISSIVE (default) mode
+          // keeps scalar-stream behaviour byte-identical to docFallback's
+          // read.json (bare scalars land in _corrupt_record)
+          case None =>
+            spark.read.schema(spark.read.json(ds).schema).json(ds)
         }
-        val gen = hit.getOrElse {
-          // ONE distributed interpreter pass, not two: schema inference
-          // over spark.read.json is a full scan of the UDF output, and
-          // the parse is a second — so persist the string dataset
-          // (MEMORY_AND_DISK: at scale the spill is the price of not
-          // re-running the interpreter) and parse the CACHE with an
-          // EXPLICIT schema. When the static walker proves the
-          // pipeline's output shape (Lower.rowwiseStaticSchema), the
-          // inference full-scan is skipped entirely; otherwise
-          // inference runs once and materialises the cache as before.
-          // PERMISSIVE (default) mode keeps scalar-stream behavior
-          // byte-identical to the inference path (bare scalars land in
-          // _corrupt_record, exactly as docFallback's read.json does) —
-          // the static path only ever proves object streams, where no
-          // corrupt-record line can occur.
-          // per-row interpreter work dwarfs one narrow-row shuffle, so
-          // spread an under-parallelised scan first (rowwise chains are
-          // per-row independent — input order never matters here)
-          val src = Tables.spreadCompute(Tables(spark, sfDir, table))
-          val ds = rowwiseJson(src, table, evalExpr)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          val staticSchema = Lower.rowwiseStaticSchema(src.schema, evalExpr)
-          val schema = staticSchema.getOrElse(spark.read.json(ds).schema)
-          val g = RowwiseGen(ds, schema, staticSchema.isDefined)
-          // two concurrent misses on the same key can both reach here;
-          // re-check under the lock so exactly one generation survives
-          // and the loser's persisted blocks are released (a bare
-          // put-over-existing would strand the overwritten generation —
-          // removeEldestEntry never sees it)
-          rowwiseCache.synchronized {
-            Option(rowwiseCache.get(key))
-              .filter(w => !w.ds.sparkSession.sparkContext.isStopped) match {
-              case Some(winner) =>
-                safeUnpersist(g.ds)
-                winner
-              case None =>
-                val prev = rowwiseCache.put(key, g)
-                if (prev != null) safeUnpersist(prev.ds)
-                g
-            }
-          }
-        }
-        // STATIC path: parse with the from_json EXPRESSION, not
-        // DataFrameReader.json — the reader form calls `.rdd` on the
-        // string dataset, and under AQE a plan carrying an exchange
-        // (the compute-spread) then materialises its query stages AT
-        // COMPILE TIME, running the interpreter pass eagerly. from_json
-        // keeps the whole pipeline lazy. Semantically identical here:
-        // the static walker only ever proves OBJECT streams, where no
-        // corrupt-record line can occur, and both forms drive the same
-        // JacksonParser in PERMISSIVE mode. The inference path keeps
-        // the reader form — its schema may carry _corrupt_record
-        // semantics from bare-scalar streams.
-        if (gen.static) {
-          import org.apache.spark.sql.functions.{col, from_json}
-          gen.ds.select(
-            from_json(col(gen.ds.columns.head), gen.schema).as("__r"))
-            .select(col("__r.*"))
-        } else spark.read.schema(gen.schema).json(gen.ds)
     }
 
   /** Document-mode fallback: build `{table: [rows…]}` for every table

@@ -66,9 +66,10 @@ object Tables {
   // Round 12 (guide §2.5, §2.3; r11 verdict items 1/5):
   //  * The under-parallelism probe no longer calls `df.rdd`: on an input
   //    that already carries an exchange, `.rdd` materializes AQE query
-  //    stages — running real jobs — at PLAN-BUILD time (the same
-  //    compile-time-execution bug class r11 fixed in the rowwise
-  //    reader). The spread now applies only to bare scan lineages
+  //    stages — running real jobs — at PLAN-BUILD time (a probe must
+  //    not pay that; [[Intermediate.persist]] pays it knowingly, for an
+  //    intermediate its query reads more than once). The spread now
+  //    applies only to bare scan lineages
   //    (Project/Filter over one file relation), where effective
   //    parallelism is read driver-side from the file index + parquet
   //    footers. Row groups, not byte splits, are the probe's unit: a

@@ -110,16 +110,19 @@ object Dedup {
       minJaccard: Double = 0.5, maxBucket: Int = 1000): DataFrame = {
     require(k % bands == 0, "bands must divide k")
     // The signature table is read three times (banding + both verify
-    // joins); persisting beats re-shingling the full text. DISK_ONLY so
-    // corpus-sized shingle arrays never compete with shuffle/agg memory
-    // at 100 TB (the unified pool borrows from execution); measured r11:
-    // MEMORY_AND_DISK is no faster even at bench scale (the three reads
-    // hit the OS page cache either way), so the safe level is also the
-    // fast one. Conf'able for other deployments.
+    // joins); materialising it for the query's lifetime
+    // (graft.core.Intermediate) beats re-shingling the full text.
+    // DISK_ONLY so corpus-sized shingle arrays never compete with
+    // shuffle/agg memory at 100 TB (the unified pool borrows from
+    // execution); measured r11: MEMORY_AND_DISK is no faster even at
+    // bench scale (the three reads hit the OS page cache either way), so
+    // the safe level is also the fast one. Conf'able for other
+    // deployments.
     val level = org.apache.spark.storage.StorageLevel.fromString(
       df.sparkSession.conf
         .get("spark.graft.minhash.storage", "DISK_ONLY"))
-    val signed = withSignature(df, idCol, textCol, k).persist(level)
+    val signed = graft.core.Intermediate.persist(
+      withSignature(df, idCol, textCol, k), level)
 
     // band hash = xxhash64 of the band's signature slice + band index.
     // Only (id, band, bucket) flows into the self-join: 24-byte rows,

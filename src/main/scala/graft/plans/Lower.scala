@@ -217,7 +217,7 @@ object Lower {
     * whose every leaf the static walker types. The returned schema
     * reproduces what inference WOULD produce on the same lines —
     * struct fields sorted by name recursively (Spark's JSON inference
-    * canonicalises that way, probed in tools/InferProbe), every field
+    * canonicalises that way; RowwiseFallbackSpec pins it), every field
     * nullable, integral kinds widened to long, fractional to double
     * (renderDouble always keeps a `.` so a double lane can never infer
     * integral), dates/timestamps/binary as the strings RowBridge

@@ -15,10 +15,11 @@ package graft.queries
   * tail bytes) fold via `list_reduce` with the init value prepended
   * (DuckDB 1.0 list_reduce has no init parameter).
   *
-  * Every generated fragment is validated bit-for-bit against Spark's
-  * own `xxhash64` output over ~900 reference vectors (strings of every
-  * tail-length class incl. multi-stripe, longs, ints, multi-arg
-  * chains) — see the round-11 validation probe graft.tools.XxRefProbe.
+  * Every generated fragment was validated bit-for-bit in round 11
+  * against Spark's own `xxhash64` output over ~900 reference vectors
+  * (strings of every tail-length class incl. multi-stripe, longs, ints,
+  * multi-arg chains); the oracle's xxhash dedup queries (TextQueries)
+  * cross-check the same fragments end to end on every run.
   */
 object XxSql {
   private val M = "18446744073709551616" // 2^64

@@ -253,4 +253,30 @@ class DedupSpec extends SparkSpec {
     assert(strCapped.forall { case (a5, b5, _) =>
       Set(a5, b5).subsetOf(Set("x1", "x2", "x4", "x5", "x6")) })
   }
+
+  test("minhash near-dups release their signature table once the result is dropped") {
+    // the signature table lives as long as the query's DataFrame: once
+    // the result is collected and unreachable, Spark's ContextCleaner
+    // drops the persisted RDD (the ContextCleanerSuite idiom: GC, then
+    // poll)
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.SpanSugar._
+    val sc = spark.sparkContext
+    // ids copied out of the map: a keySet view would hold its RDDs
+    def persisted(): Set[Int] = sc.getPersistentRDDs.keysIterator.toSet
+    val before = persisted()
+    def runAndDrop(): Set[Int] = {
+      val pairs = Dedup.minhashNearDups(docs.filter(col("doc_id") < 200),
+        "doc_id", "text", minJaccard = 0.5)
+      pairs.collect()
+      persisted() -- before
+    }
+    val made = runAndDrop()
+    assert(made.nonEmpty, "minhashNearDups persisted nothing")
+    eventually(timeout(30.seconds), interval(200.millis)) {
+      System.gc()
+      assert((persisted() & made).isEmpty)
+      assert(sc.getPersistentRDDs.size <= before.size)
+    }
+  }
 }

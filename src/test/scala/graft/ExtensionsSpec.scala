@@ -1,13 +1,12 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The SparkSessionExtensions entry point: a session configured with
   * `spark.sql.extensions=graft.GraftExtensions` can call the native
   * expressions from SQL text with no programmatic registration.
   */
-class ExtensionsSpec extends AnyFunSuite {
+class ExtensionsSpec extends NoCachedLeftovers {
 
   test("extension-injected functions resolve from SQL") {
     // All suites share one JVM and one SparkContext. `spark.sql

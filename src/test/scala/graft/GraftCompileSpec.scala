@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 import graft.jexpr.{JValue, Jetro}
 
 /** Relational-lowering contract (SURVEY §7.0/§7.2): the SAME jetro
@@ -11,7 +10,7 @@ import graft.jexpr.{JValue, Jetro}
   * collected as one JSON document. This is the two-backend differential
   * the reference guarantees across its own backends (README.md:269-271).
   */
-class GraftCompileSpec extends AnyFunSuite with BeforeAndAfterAll {
+class GraftCompileSpec extends NoCachedLeftovers with BeforeAndAfterAll {
 
   private val sfDir = "/root/testdata/sf0.001"
   private var spark: SparkSession = _

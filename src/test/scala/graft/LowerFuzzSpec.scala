@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 import graft.jexpr.{JValue, Jetro}
 
 /** Randomized two-backend differential: generated pipelines are compiled
@@ -19,7 +18,7 @@ import graft.jexpr.{JValue, Jetro}
   * bit. Comparison-only ops (min/max/lag/lead/cum/take/skip/reverse)
   * also fuzz the double column.
   */
-class LowerFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
+class LowerFuzzSpec extends NoCachedLeftovers with BeforeAndAfterAll {
 
   private val sfDir = "/root/testdata/sf0.001"
   private def fuzzSeed(default: Long): Long = FuzzSeed(default)

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 import graft.jexpr.{JValue, Jetro}
 
 /** Randomized null-operand differential over the VALUE-position bool
@@ -15,7 +14,7 @@ import graft.jexpr.{JValue, Jetro}
   * nulls the cell — a documented rung-granularity divergence, not a
   * comparison surface.
   */
-class NullSemanticsFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
+class NullSemanticsFuzzSpec extends NoCachedLeftovers with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
   private var df: org.apache.spark.sql.DataFrame = _
@@ -209,15 +208,16 @@ class NullSemanticsFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
           catch { case _: EvalException => true }
         assert(docThrew == pr.exists(_.isLeft), s"doc loudness for: $e")
         // tier 2 — rowwise rung: errored rows DROPPED and COUNTED.
-        // Persist around read.json exactly as rowwiseCompile does —
-        // the raw two-pass read would run the interpreter (and count
-        // every drop) TWICE.
+        // Materialise around read.json with the helper rowwiseCompile
+        // uses — the raw two-pass read would run the interpreter (and
+        // count every drop) TWICE.
         val c = Graft.rowwiseCounters(spark)
         val before = c.errored.value
-        val ds = Graft.rowwiseJson(df, "t", s"$$.t.map({id: id, v: ($e)})").persist()
+        val ds = graft.core.Intermediate.persist(
+          Graft.rowwiseJson(df, "t", s"$$.t.map({id: id, v: ($e)})"),
+          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val rw = spark.read.json(ds)
         val rwRows = rw.toJSON.collect().toVector.map(s2 => canon(JValue.parse(s2))).sorted
-        ds.unpersist(blocking = false)
         assert(c.errored.value - before == pr.count(_.isLeft),
           s"rowwise drop count for: $e")
         assert(rwRows == normalize(succJson), s"rowwise survivors for: $e")

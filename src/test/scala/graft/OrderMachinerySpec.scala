@@ -9,7 +9,6 @@ import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.execution.joins.{HashJoin, SortMergeJoinExec}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.scalatest.{Failed, Outcome, Succeeded}
 
 /** Pins the distributed order machinery (`Lower.runningOverOrder`,
   * and `withGlobalRn` on top of it): the per-bucket aggregate side and
@@ -69,18 +68,6 @@ class OrderMachinerySpec extends SparkSpec {
 
   private def withReuse[A](on: Boolean)(body: => A): A =
     withConf("spark.sql.exchange.reuse", on)(body)
-
-  /** No order-machinery query may leave a persisted intermediate
-    * behind. Suites share one session, so the cache is emptied before
-    * every test and checked after it, the unchanged tests included. */
-  override def withFixture(test: NoArgTest): Outcome = {
-    spark.sharedState.cacheManager.clearCache()
-    super.withFixture(test) match {
-      case Succeeded if !spark.sharedState.cacheManager.isEmpty =>
-        Failed(s"${test.name}: a query left cached blocks behind")
-      case o => o
-    }
-  }
 
   /** `df` collected as FULL rows, asserting it persisted nothing. */
   private def collected(df: DataFrame): Array[Row] = {

@@ -140,14 +140,13 @@ class RowwiseFallbackSpec extends SparkSpec {
       "patch $ { supplier[*].s_acctbal: @.abs(), region[*].r_name: @.upper().rec(@) }").isEmpty)
   }
 
-  // ── round 10: (table, expr)-keyed LRU + static-schema shortcut ──
+  // ── query-scoped materialisation + static-schema shortcut ──
 
   test("interleaved rowwise queries do not evict each other's cache") {
-    // two distinct rowwise pipelines alternate: with the (table, expr)
-    // LRU (Graft.rowwiseCache) every materialization after the first
-    // reads the persisted string cache — the single-generation slot of
-    // rounds 7-9 would re-run the interpreter once per switch
-    Graft.clearRowwiseCache()
+    // each compiled DataFrame holds its own materialised interpreter
+    // output for its lifetime (graft.core.Intermediate): two pipelines
+    // alternate without evicting each other, and nothing is kept across
+    // compiles — a re-compile runs the interpreter once more
     val c = Graft.rowwiseCounters(spark)
     val ea = """$.region.map({k: r_regionkey, u: r_name.title_case().rec(@)})"""
     val eb = """$.nation.map({k: n_nationkey, u: n_name.title_case().rec(@)})"""
@@ -160,12 +159,42 @@ class RowwiseFallbackSpec extends SparkSpec {
     // one interpreter pass each (these chains carry rec → inference path)
     assert(c.evaluated.value - before == na + nb,
       s"expected ${na + nb} evaluations, got ${c.evaluated.value - before}")
-    // alternating re-materializations and re-compiles stay free
+    // alternating re-materializations stay free
     dfa.collect(); dfb.collect()
-    Graft.rowwiseCompile(spark, sf, ea).get.collect()
-    Graft.rowwiseCompile(spark, sf, eb).get.collect()
     assert(c.evaluated.value - before == na + nb,
       s"re-evaluated: ${c.evaluated.value - before} != ${na + nb}")
+    // a re-compile costs exactly one more interpreter pass
+    Graft.rowwiseCompile(spark, sf, ea).get.collect()
+    assert(c.evaluated.value - before == 2 * na + nb,
+      s"re-compile: ${c.evaluated.value - before} != ${2 * na + nb}")
+    Graft.rowwiseCompile(spark, sf, eb).get.collect()
+    assert(c.evaluated.value - before == 2 * (na + nb),
+      s"re-compile: ${c.evaluated.value - before} != ${2 * (na + nb)}")
+  }
+
+  test("a rewritten table is read as it is now, not as an earlier compile saw it") {
+    // the same rowwise text (q_lower_rowwise_fallback's), compiled again
+    // in the same session after the table was overwritten at the same
+    // path, must answer from the new files
+    val e = """$.documents.filter(lang == "en")
+              |.map({id: doc_id, nw: text.words().len().rec(@),
+              |      blank: text.is_blank().rec(@)})""".stripMargin
+    val dir = java.nio.file.Files.createTempDirectory("graft-rewrite").toString
+    try {
+      val docs = graft.core.Tables(spark, sf, "documents")
+      docs.write.parquet(s"$dir/documents.parquet")
+      assert(Graft.backend(spark, dir, e) == "rowwise")
+      val ids = (df: DataFrame) =>
+        df.select("id").collect().map(_.getLong(0)).toSet
+      val first = ids(Graft.query(spark, dir, e))
+      val enIds = docs.filter("lang = 'en'").select("doc_id")
+        .collect().map(_.getLong(0)).toSet
+      assert(first.nonEmpty && first == enIds)
+      docs.filter("doc_id % 2 = 0")
+        .write.mode("overwrite").parquet(s"$dir/documents.parquet")
+      val second = ids(Graft.query(spark, dir, e))
+      assert(second == enIds.filter(_ % 2 == 0))
+    } finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
   }
 
   test("static schema shortcut matches what inference would produce") {
@@ -239,7 +268,6 @@ class RowwiseFallbackSpec extends SparkSpec {
   }
 
   test("provable chains compile with ZERO interpreter work (no inference scan)") {
-    Graft.clearRowwiseCache()
     val c = Graft.rowwiseCounters(spark)
     // the guarded field bails the relational shape lowering (shapeCols:
     // "map shape field unsupported") but still types statically, so the
@@ -252,8 +280,8 @@ class RowwiseFallbackSpec extends SparkSpec {
     assert(c.evaluated.value == before,
       s"compile ran the interpreter ${c.evaluated.value - before} times")
     val n = graft.core.Tables(spark, sf, "supplier").count()
-    rw.collect() // the one interpreter pass, materialising the cache
-    rw.collect() // cached
+    rw.collect() // the one interpreter pass, materialising the strings
+    rw.collect() // this DataFrame's own materialised strings
     assert(c.evaluated.value - before == n,
       s"interpreter ran ${c.evaluated.value - before} times for $n rows")
     // and the rows equal the document interpreter's (inference path)

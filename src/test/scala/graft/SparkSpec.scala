@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.{Failed, Outcome, Succeeded}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Fuzz seeds are fixed for CI determinism; exploratory runs can sweep
@@ -11,7 +12,7 @@ object FuzzSeed {
 }
 
 /** Shared local SparkSession for specs (one per suite via lazy val). */
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends NoCachedLeftovers {
   def fuzzSeed(default: Long): Long = FuzzSeed(default)
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[8]")
@@ -21,4 +22,26 @@ trait SparkSpec extends AnyFunSuite {
     .getOrCreate()
 
   val sf: String = "/root/testdata/sf0.001"
+}
+
+/** No test may leave a CacheManager entry behind. Nothing in the program
+  * persists through the CacheManager (intermediates are query-scoped,
+  * graft.core.Intermediate), so an entry after a test is a leak: that
+  * test fails, and the entry is dropped so the suites after it, which
+  * share the session, are judged on their own. Every suite that starts
+  * Spark mixes this in (SparkSpec does). */
+trait NoCachedLeftovers extends AnyFunSuite {
+  override def withFixture(test: NoArgTest): Outcome = {
+    val outcome = super.withFixture(test)
+    SparkSession.getDefaultSession.map(_.sharedState.cacheManager)
+      .filterNot(_.isEmpty) match {
+      case Some(cm) =>
+        cm.clearCache()
+        outcome match {
+          case Succeeded => Failed(s"${test.name}: left cached blocks behind")
+          case o         => o
+        }
+      case None => outcome
+    }
+  }
 }

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
-import org.scalatest.funsuite.AnyFunSuite
 import graft.jexpr.{JValue, Jetro}
 
 /** Randomized differential for the lowered STRING-builtin surface:
@@ -20,7 +19,7 @@ import graft.jexpr.{JValue, Jetro}
   * The jetro parser reads string literals RAW (no escapes), so edge
   * literals embed real tabs/newlines/NBSP/astral chars directly.
   */
-class StringFuzzSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StringFuzzSpec extends NoCachedLeftovers with BeforeAndAfterAll {
 
   private val sfDir = "/root/testdata/sf0.001"
   private var spark: SparkSession = _
