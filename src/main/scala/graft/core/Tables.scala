@@ -1,15 +1,34 @@
 package graft.core
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, SubqueryAlias}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.types.StructType
+import scala.jdk.CollectionConverters._
 
 /** Table access over the driver-generated TPC-H-ish parquet layout
-  * (TESTDATA.md). One parquet file per table under `sfDir`.
+  * (TESTDATA.md). One parquet file (or directory of part files) per
+  * table under `sfDir`.
   *
   * All engine queries read through here so that scan-level concerns
   * (pushdown-friendly reads, schema expectations) live in one place.
-  * At 100 TB these would be partitioned/ bucketed tables registered in a
-  * catalog; the accessor indirection means swapping `spark.read.parquet`
-  * for `spark.table` is a one-line change.
+  *
+  * Each table path is resolved once per file version. Schema inference
+  * runs a Spark job; its result is memoised per path, keyed on the
+  * sorted (path, len, mtime) listing of the read's data files (Spark's
+  * file index, which skips names starting with `_` or `.`) and on the
+  * session's `spark.sql.parquet.*` / `spark.sql.legacy.parquet.*` confs,
+  * which change what inference returns. A later read passes the memoised
+  * schema (`spark.read.schema(s).parquet`, no job) and keeps it only if
+  * that DataFrame's own file index lists exactly the key's files;
+  * otherwise it infers again and replaces the entry. So a rewrite at the
+  * same path is read as it is now, whenever it happened. Only metadata
+  * is memoised: every read is a new DataFrame with fresh attribute ids
+  * (a self-join `$.t … $.t` stays unambiguous), and no rows or results
+  * are kept. Tables are deliberately not registered in a session
+  * catalog: its relation cache keeps a file listing, and a rewritten
+  * table would be read through its deleted files.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -37,8 +56,62 @@ object Tables {
   private def raw(spark: SparkSession, sfDir: String, name: String): DataFrame = {
     if (name == "events")
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    val path = s"$sfDir/$name.parquet"
+    val conf = spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }
+    val memo = Option(resolved.get(path)).filter(_.conf == conf)
+    memo.map(m => spark.read.schema(m.schema).parquet(path))
+      .filter(df => files(df) == memo.map(_.files))
+      .getOrElse {
+        val df = spark.read.parquet(path)
+        files(df).foreach(fs => resolved.put(path, new Resolved(fs, conf, df.schema)))
+        df
+      }
   }
+
+  /** One table path's metadata, valid for exactly the data files in
+    * `files` read under the parquet confs `conf`: the inferred schema,
+    * and the row-group count read from the footers on first use. */
+  private final class Resolved(
+      val files: Seq[(String, Long, Long)],
+      val conf: Map[String, String],
+      val schema: StructType) {
+    @volatile private var groups = -1
+    def rowGroups(hc: Configuration): Int = {
+      if (groups < 0) groups = countRowGroups(files, hc)
+      groups
+    }
+  }
+
+  /** One entry per table path, replaced when its listing or confs change. */
+  private val resolved =
+    new java.util.concurrent.ConcurrentHashMap[String, Resolved]()
+
+  /** The file relation under a bare scan lineage (Project/Filter/alias
+    * over one file relation), or None for any other plan. */
+  @annotation.tailrec
+  private def relation(p: LogicalPlan): Option[HadoopFsRelation] = p match {
+    case Project(_, c)       => relation(c)
+    case Filter(_, c)        => relation(c)
+    case SubqueryAlias(_, c) => relation(c)
+    case l: LogicalRelation  => l.relation match {
+      case fs: HadoopFsRelation => Some(fs)
+      case _                    => None
+    }
+    case _ => None
+  }
+
+  /** The relation's data files as sorted (path, len, mtime), from its
+    * own file index (listed when the read was analyzed; no I/O here). */
+  private def listing(fs: HadoopFsRelation): Seq[(String, Long, Long)] =
+    fs.location.listFiles(Nil, Nil).flatMap(_.files)
+      .map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+      .sortBy(_._1)
+
+  /** A plain read's data files, as its analyzed plan lists them. */
+  private def files(df: DataFrame): Option[Seq[(String, Long, Long)]] =
+    relation(df.queryExecution.analyzed).map(listing)
 
   // ── compute-spread: repartition unsplittable inputs under HEAVY
   //    per-row operators ──
@@ -102,66 +175,36 @@ object Tables {
     * the plan is anything else (derived frames are left alone — probing
     * them risks compile-time execution, and their exchanges already
     * parallelise). Cheap and job-free: the file listing is the read's
-    * own cached InMemoryFileIndex; parquet footers are read driver-side
-    * once per (path, size, mtime) and memoised process-wide.
+    * own cached InMemoryFileIndex; parquet footers are read driver-side,
+    * once per file version for a table read through here.
     */
-  private def bareScanParallelism(df: DataFrame, want: Int): Option[Int] = {
-    import org.apache.spark.sql.catalyst.plans.logical._
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    @annotation.tailrec
-    def relation(p: LogicalPlan): Option[HadoopFsRelation] = p match {
-      case Project(_, c)          => relation(c)
-      case Filter(_, c)           => relation(c)
-      case SubqueryAlias(_, c)    => relation(c)
-      case l: LogicalRelation     => l.relation match {
-        case fs: HadoopFsRelation => Some(fs)
-        case _                    => None
-      }
-      case _ => None
-    }
+  private def bareScanParallelism(df: DataFrame, want: Int): Option[Int] =
     relation(df.queryExecution.logical).map { fs =>
-      val files = fs.location.listFiles(Nil, Nil).flatMap(_.files)
-      if (files.length >= want) files.length
+      val listed = listing(fs)
+      if (listed.length >= want) listed.length
       else {
-        val conf = df.sparkSession.sparkContext.hadoopConfiguration
-        var groups = 0
-        val it = files.iterator
-        // early-stop: past `want` groups the exact count is irrelevant
-        while (it.hasNext && groups < want) {
-          val f = it.next()
-          groups += rowGroups(f.getPath, f.getLen, f.getModificationTime, conf)
-        }
-        math.max(groups, 1)
+        val hc = df.sparkSession.sparkContext.hadoopConfiguration
+        val memo = resolved.values.iterator.asScala.find(_.files == listed)
+        math.max(memo.fold(countRowGroups(listed, hc))(_.rowGroups(hc)), 1)
       }
     }
-  }
 
-  /** Row-group count per parquet file, memoised on (path, len, mtime).
-    * Non-parquet/unreadable files fall back to a byte-split estimate at
-    * the default 128 MB split size. */
-  private val rowGroupCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Integer]()
-
-  private def rowGroups(
-      path: org.apache.hadoop.fs.Path, len: Long, mtime: Long,
-      conf: org.apache.hadoop.conf.Configuration): Int = {
-    val key = s"$path#$len#$mtime"
-    val hit = rowGroupCache.get(key)
-    if (hit != null) hit.intValue()
-    else {
-      val n: Int =
-        try {
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(path, conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getRowGroups.size() finally r.close()
-        } catch {
-          case scala.util.control.NonFatal(_) =>
-            math.max(1L, len / (128L << 20)).toInt
-        }
-      rowGroupCache.put(key, Int.box(n))
-      n
-    }
-  }
+  /** Row groups over the files, from their parquet footers. A
+    * non-parquet/unreadable file counts as a byte-split estimate at the
+    * default 128 MB split size. */
+  private def countRowGroups(
+      files: Seq[(String, Long, Long)], hc: Configuration): Int =
+    files.map { case (path, len, _) =>
+      try {
+        val in = org.apache.parquet.hadoop.util.HadoopInputFile
+          .fromPath(new org.apache.hadoop.fs.Path(path), hc)
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+        try r.getRowGroups.size() finally r.close()
+      } catch {
+        case scala.util.control.NonFatal(_) =>
+          math.max(1L, len / (128L << 20)).toInt
+      }
+    }.sum
 
   /** xxhash64 over every hashable column — the deterministic spread key
     * (maps and other unhashable types are skipped; None when no column

@@ -147,12 +147,15 @@ object Builtins {
   }
 
   /** sort with `-key` meaning descending (SortSpec, pipeline.rs:182-205);
-    * a two-param lambda is a less-than comparator (examples.rs:411). */
+    * a two-param lambda is a less-than comparator (examples.rs:411).
+    * Key sorts are stable both ways: equal keys keep input order, and
+    * each element's key is evaluated once. */
   private def sorted(xs: Vector[JValue], args: Vector[Arg], env: Env): Vector[JValue] = {
     args.headOption.map(_.e) match {
       case Some(l @ Expr.Lambda(ps, _)) if ps.length == 2 =>
         val f = Interp.eval(l, env).asInstanceOf[JFun]
         xs.sortWith((a, b) => Interp.applyFun(f, Vector(a, b), env).truthy)
+      case _ if xs.length < 2 => xs
       case _ =>
         val (keyFn, desc) =
           if (args.isEmpty) (identity[JValue] _, false)
@@ -160,8 +163,8 @@ object Builtins {
             case Expr.Unary("-", inner) => (Interp.body(inner, env), true)
             case other                  => (Interp.body(other, env), false)
           }
-        val s = xs.sortWith((a, b) => JValue.cmp(keyFn(a), keyFn(b)) < 0)
-        if (desc) s.reverse else s
+        val byKey = Ordering.fromLessThan[(JValue, JValue)]((a, b) => JValue.cmp(a._1, b._1) < 0)
+        xs.map(x => (keyFn(x), x)).sorted(if (desc) byKey.reverse else byKey).map(_._2)
     }
   }
 

@@ -1175,9 +1175,9 @@ object Lower {
     * key form: (K in terms of `@`, descending). The reference feeds the
     * comparator as a strict less-than to a stable sort
     * (examples.rs:411, Builtins.sorted), so `<` is the plain stable
-    * ascending key sort and `>` the stable DESCENDING one — ties keep
-    * their relative order in BOTH directions, unlike `-key`
-    * (ascending-then-reverse). Mirror check: the two operands must be
+    * ascending key sort and `>` the stable DESCENDING one (the same
+    * sort as `-key`) — ties keep their relative order in both
+    * directions. Mirror check: the two operands must be
     * the same expression with the params swapped, each side referencing
     * only its own param ([[keyLambdaBody]]'s safety rules). */
   private def comparatorKey(ps: Vector[String], body: Expr): Option[(Expr, Boolean)] = {
@@ -3402,37 +3402,32 @@ object Lower {
       case "unique" | "distinct" => (array_distinct(nz(c)), someArr) // keep-first
       case "reverse" => (reverse(c), someArr)
       case "sort" | "sort_by" =>
-        // jetro's sorted (Builtins.sorted:114-129): stable ASCENDING
-        // sort by the key via JValue.cmp — incomparable pairs (incl.
-        // null keys) TIE and keep their relative order — and a `-key`
-        // prefix means sort ascending THEN reverse (desc flag, not key
-        // negation): ties come out REVERSED under `-`, and string keys
-        // work. The lowering mirrors that exactly: strip the `-`, sort
-        // asc with a cmp-style comparator (null comparisons fall
-        // through both whens to 0; array_sort's TimSort and the
-        // interpreter's sortWith are both stable), then reverse().
-        // Mirrored two-param comparator lambdas rewrite to key form
-        // (comparatorKey); `>` is the STABLE descending sort — swap the
-        // comparator operands, do NOT reverse, so ties keep their
-        // relative order exactly like sortWith does.
-        // modes: 0 asc · 1 desc-by-reverse (`-key`) · 2 stable desc
-        val (keyExpr, mode) =
+        // jetro's sorted (Builtins.sorted): a STABLE key sort via
+        // JValue.cmp — incomparable pairs (incl. null keys) TIE and keep
+        // their relative order — where a `-key` prefix means descending
+        // (a desc flag, not key negation, so string keys work). Mirrored
+        // two-param comparator lambdas rewrite to key form
+        // (comparatorKey), `>` being descending. The lowering mirrors
+        // that: a cmp-style comparator (null comparisons fall through
+        // both whens to 0) with its operands swapped for descending, fed
+        // to array_sort's TimSort, which is stable like the interpreter's
+        // sort — ties keep input order both ways.
+        val (keyExpr, desc) =
           (if (args.isEmpty) Current else args(0).e) match {
             case Lambda(ps, b) if ps.length == 2 =>
-              comparatorKey(ps, b).map { case (k, d) => (k, if (d) 2 else 0) }
+              comparatorKey(ps, b)
                 .getOrElse(bail("comparator-lambda sort has no columnar lowering"))
-            case Unary("-", inner) => (inner, 1)
-            case other             => (other, 0)
+            case Unary("-", inner) => (inner, true)
+            case other             => (other, false)
           }
         val b = new EBody(at, keyExpr)
         val kd = b.dt.getOrElse(bail("sort key type unknown"))
         if (!numericDt(kd) && kd != StringType && kd != BooleanType)
           bail(s"sort key must be atomic, got ${kd.simpleString}")
-        val sorted = array_sort(nz(c), (x, y) => {
-          val (kx, ky) = if (mode == 2) (b(y), b(x)) else (b(x), b(y))
+        (array_sort(nz(c), (x, y) => {
+          val (kx, ky) = if (desc) (b(y), b(x)) else (b(x), b(y))
           when(kx < ky, lit(-1)).when(kx > ky, lit(1)).otherwise(lit(0))
-        })
-        (if (mode == 1) reverse(sorted) else sorted, someArr)
+        }), someArr)
       case "any" | "exists" =>
         (coalesce(exists(c, x => body(0).predStrict(x)), lit(false)),
           Some(BooleanType))

@@ -158,14 +158,14 @@ class DocColumnSpec extends SparkSpec {
     "$.nums.sort()",
     "$.items.sort_by(-qty).first()",
     "$.items.flat_map(tag).sort().unique()",
-    // ties: `-key` is sort-asc-then-REVERSE in the interpreter, so tied
-    // elements come out reversed under `-` and in place without it
+    // ties: key sorts are stable both ways, so tied elements keep
+    // their input order under `-` and without it
     "$.items.sort_by(qty % 2).map(qty)",
     "$.items.sort_by(-(qty % 2)).map(qty)",
     "$.items.sort_by(-tag).map(tag)",
     // comparator lambdas (reference examples.rs:411): strict less-than
-    // fed to a STABLE sort — `>` keeps tie order (unlike `-key`, which
-    // reverses it); the flipped-operand mirror is the same sort
+    // fed to a STABLE sort — `>` keeps tie order (like `-key`); the
+    // flipped-operand mirror is the same sort
     "$.items.sort(lambda a, b: a.qty < b.qty).map(qty)",
     "$.items.sort(lambda a, b: a.qty % 2 < b.qty % 2).map(qty)",
     "$.items.sort(lambda a, b: a.qty % 2 > b.qty % 2).map(qty)",

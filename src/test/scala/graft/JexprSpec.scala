@@ -95,6 +95,17 @@ class JexprSpec extends AnyFunSuite {
     assert(run(store, "$.store.books.sort_by(-price).take_while(price > 9).map(id)") == """["b2","b1"]""")
   }
 
+  test("key sorts are stable: equal keys keep input order both ways") {
+    val doc = """{"xs": [{"id": 1, "k": 2}, {"id": 2, "k": 1}, {"id": 3, "k": 2},
+                        {"id": 4, "k": 1}, {"id": 5, "k": 3}, {"id": 6, "k": 2}]}"""
+    assert(run(doc, "$.xs.sort_by(k).map(id)") == "[2,4,1,3,6,5]")
+    assert(run(doc, "$.xs.sort_by(-k).map(id)") == "[5,1,3,6,2,4]")
+    assert(run(doc, "$.xs.sort(-k).map(id)") == "[5,1,3,6,2,4]")
+    assert(run(doc, "$.xs.sort_by(-k).take(2).map(id)") == "[5,1]")
+    assert(run(doc, "$.xs.map(k).sort(-@)") == "[3,2,2,2,1,1]")
+    assert(run("""{"xs": [7]}""", "$.xs.sort(-@)") == "[7]")
+  }
+
   // ── expressions ───────────────────────────────────────────────────────
   test("ternary, coalesce, try") {
     assert(run(store, """$.store.books.map("out" if stock == 0 else "ok")""") == """["ok","out","ok"]""")

@@ -365,7 +365,7 @@ class PlanQualitySpec extends SparkSpec {
     // compute-spread on under-parallelised scans (r11) — that input-
     // layout remedy is orthogonal to the rewrite shape pinned here, so
     // assert with it off, then separately pin that the spread (when on)
-    // is the ONLY exchange and is the deterministic xxhash64 hash
+    // is present, is the ONLY exchange and is the deterministic xxhash64 hash
     // repartition directly over the scan (r12: round-robin's
     // sortBeforeRepartition ran a full local sort inside the single
     // scan task; the hash key is also retry-deterministic)
@@ -383,8 +383,9 @@ class PlanQualitySpec extends SparkSpec {
       """patch $ { events[*].props.k: @ * 2 when @ < 50,
         |          events[*].props.z: 9 }""".stripMargin, _ => shaped)
       .queryExecution.executedPlan.toString
-    assert("Exchange".r.findAllIn(spreadPlan).length
-      == "hashpartitioning\\(xxhash64".r.findAllIn(spreadPlan).length, spreadPlan)
+    val spreads = "hashpartitioning\\(xxhash64".r.findAllIn(spreadPlan).length
+    assert(spreads >= 1, spreadPlan)
+    assert("Exchange".r.findAllIn(spreadPlan).length == spreads, spreadPlan)
   }
 
   test("snapshot diff shuffles digests, never payload columns") {

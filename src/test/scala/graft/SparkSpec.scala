@@ -24,6 +24,25 @@ trait SparkSpec extends NoCachedLeftovers {
   val sf: String = "/root/testdata/sf0.001"
 }
 
+object SparkSpec {
+  /** Spark jobs started while `body` ran: a listener counts job starts,
+    * and the listener bus is drained before and after, so jobs of earlier
+    * actions are not counted and every job of `body` is. */
+  def jobsDuring(spark: SparkSession)(body: => Any): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    org.apache.spark.specs.Drain(sc)
+    sc.addSparkListener(listener)
+    try { body; org.apache.spark.specs.Drain(sc) }
+    finally sc.removeSparkListener(listener)
+    jobs.get
+  }
+}
+
 /** No test may leave a CacheManager entry behind. Nothing in the program
   * persists through the CacheManager (intermediates are query-scoped,
   * graft.core.Intermediate), so an entry after a test is a leak: that
