@@ -34,7 +34,7 @@ object Graft {
     *   - `"document"`   — driver-side whole-document interpreter. */
   def backend(spark: SparkSession, sfDir: String, expr: String): String =
     if (lowers(spark, sfDir, expr)) "relational"
-    else if (rowwisePlan(expr).exists(p => Tables.names.contains(p._1))) "rowwise"
+    else if (rowwisePlan(expr).exists(p => Tables.names.contains(p.table))) "rowwise"
     else "document"
 
   /** Pipeline stages that distribute over stream concatenation:
@@ -96,17 +96,28 @@ object Graft {
     * long-tail builtins) — but the table never leaves the executors,
     * mirroring the reference's per-element VM dispatch (defs.rs:74-90)
     * instead of its whole-document tape. Output order is the source
-    * partition order (element-wise stages are order-independent). */
+    * partition order (element-wise stages are order-independent).
+    *
+    * A chain admitted to this rung: the table it fans over, the
+    * expression the interpreter evaluates per row, and the chain's
+    * leading filter run (`{p}` and `.filter/.where/.find_all(p…)`
+    * directly after `$.table`, each argument one predicate, in order),
+    * which [[rowwiseJson]] runs in the scan. The run is empty for the
+    * chain-write and `patch $` rewrites: their filtered-out rows come
+    * back unpatched. */
+  private[graft] final case class RowwisePlan(
+      table: String, evalExpr: String, leadingFilters: Vector[Expr])
+
   /** The single-table element-wise qualification check, shared by the
     * batch rung and the streaming rung (StreamOps.rowwiseStream):
-    * `Some((table, evalExpr))` when the expression distributes over
-    * stream concatenation. `evalExpr` is the expression to evaluate per
-    * row — the original text for element-wise pipelines; for root
+    * a [[RowwisePlan]] when the expression distributes over stream
+    * concatenation. `evalExpr` is the expression to evaluate per row —
+    * the original text for element-wise pipelines; for root
     * chain-writes and `patch $` blocks that fan over one table's rows,
     * the rewrite `(expr).table` so the per-row patched document unions
     * back into patched table ROWS (the same table-level convention
     * Lower.patchTable gives `patch $ {t[*]…}` relationally). */
-  private[graft] def rowwisePlan(expr: String): Option[(String, String)] = {
+  private[graft] def rowwisePlan(expr: String): Option[RowwisePlan] = {
     val ast =
       try jexpr.Parser.parse(expr)
       catch { case _: jexpr.ParseException => return None }
@@ -114,16 +125,28 @@ object Graft {
       case Expr.Chain(Expr.Root, steps) if steps.length >= 2 =>
         steps.head match {
           case Expr.Step.Field(table) =>
-            if (steps.tail.forall(elementwiseStep)) Some((table, expr))
+            if (steps.tail.forall(elementwiseStep))
+              Some(RowwisePlan(table, expr, leadingFilters(steps.tail)))
             else if (rowwiseChainWrite(steps.tail))
-              Some((table, s"($expr).$table"))
+              Some(RowwisePlan(table, s"($expr).$table", Vector.empty))
             else None
           case _ => None
         }
       case Expr.Patch(Expr.Root, fields) =>
-        rowwisePatchTable(fields).map(t => (t, s"($expr).$t"))
+        rowwisePatchTable(fields).map(t => RowwisePlan(t, s"($expr).$t", Vector.empty))
       case _ => None
     }
+  }
+
+  /** The predicates of the filter steps that open an element-wise chain,
+    * up to the first step of any other kind. */
+  private def leadingFilters(steps: Vector[Expr.Step]): Vector[Expr] = {
+    import Expr._
+    steps.iterator.map {
+      case Step.InlineFilter(p)                                => Some(Vector(p))
+      case Step.Method("filter" | "where" | "find_all", args) => Some(args.map(_.e))
+      case _                                                   => None
+    }.takeWhile(_.isDefined).flatten.flatten.toVector
   }
 
   /** True when the post-table steps form a row-iterating chain-write
@@ -203,7 +226,11 @@ object Graft {
     * `errored` counts rows silently DROPPED by the per-row error tier
     * (SCALE.md: an EvalException nulls the row and the explode drops
     * it — a malformed row must not kill a 100 TB job, but the dropped
-    * mass must be observable). One pair per session, registered as
+    * mass must be observable). Both count only rows that reach the
+    * interpreter: a row a chain's leading filter rejects in the scan
+    * ([[rowwiseJson]]) is never counted, while a row the scan filter
+    * cannot evaluate is kept for the interpreter, and counted there if
+    * the interpreter raises on it. One pair per session, registered as
     * named Spark accumulators (visible in the UI) and logged at query
     * end whenever the dropped count grew. */
   final class RowwiseCounters private[Graft] (
@@ -242,22 +269,26 @@ object Graft {
     * singleton `{table: [row]}` document on the executors, per-row
     * contributions flattened with `explode`, results as JSON strings.
     * Stateless and shuffle-free, so it runs identically on a bounded
-    * frame or a streaming micro-batch. Interpreter invocations and
+    * frame or a streaming micro-batch. The plan's leading filters run
+    * first, in the scan ([[Lower.scanFilter]]; Catalyst pushes them
+    * below any spread exchange), and the interpreter evaluates the
+    * whole chain on their survivors. Interpreter invocations and
     * error-dropped rows tick the session's [[rowwiseCounters]]. */
   private[graft] def rowwiseJson(
-      df: DataFrame, table: String, expr: String): org.apache.spark.sql.Dataset[String] = {
+      df: DataFrame, plan: RowwisePlan): org.apache.spark.sql.Dataset[String] = {
     import org.apache.spark.sql.functions.{array, col, explode, struct}
     import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
+    val rows = Lower.scanFilter(df, plan.leadingFilters)
     // {table: [row]} — same shape docFallback builds, one row deep,
     // fed to the interpreter as a STRUCT through RowBridge (no per-row
     // to_json + JSON parse on the input side)
     val docType = StructType(Seq(
-      StructField(table, ArrayType(df.schema), nullable = false)))
+      StructField(plan.table, ArrayType(rows.schema), nullable = false)))
     val doc = struct(
-      array(struct(df.columns.map(col).toIndexedSeq: _*)).as(table))
-    val counters = rowwiseCounters(df.sparkSession)
-    df.select(
-      explode(Jetro.jetroEvalElemsStruct(expr, doc, docType,
+      array(struct(rows.columns.map(col).toIndexedSeq: _*)).as(plan.table))
+    val counters = rowwiseCounters(rows.sparkSession)
+    rows.select(
+      explode(Jetro.jetroEvalElemsStruct(plan.evalExpr, doc, docType,
         Some(counters.evaluated), Some(counters.errored))).as("__j"))
       .select(col("__j"))
       .as(org.apache.spark.sql.Encoders.STRING)
@@ -273,32 +304,38 @@ object Graft {
     * output shape (Lower.rowwiseStaticSchema), the inference scan is
     * skipped and the interpreter runs when the result is first read.
     * Nothing outlives the returned DataFrame: compiling the same text
-    * again reads the table as it is now. */
+    * again reads the table as it is now.
+    *
+    * The chain's leading filters run in the scan ([[rowwiseJson]]), so
+    * the interpreter sees only their survivors, and the spread decision
+    * is the unfiltered read's. The scan filter keeps every row it
+    * cannot evaluate (a zero division, an ANSI overflow), so such rows
+    * still reach the interpreter, which stays the authority on them;
+    * `erroredRows` counts only rows that reach the interpreter. */
   private[graft] def rowwiseCompile(
       spark: SparkSession, sfDir: String, expr: String): Option[DataFrame] =
-    rowwisePlan(expr).filter(p => Tables.names.contains(p._1)).map {
-      case (table, evalExpr) =>
-        // per-row interpreter work dwarfs one narrow-row shuffle, so
-        // spread an under-parallelised scan first (rowwise chains are
-        // per-row independent — input order never matters here)
-        val src = Tables.spreadCompute(Tables(spark, sfDir, table))
-        val ds = Intermediate.persist(rowwiseJson(src, table, evalExpr),
-          org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        Lower.rowwiseStaticSchema(src.schema, evalExpr) match {
-          // STATIC path: parse with the from_json expression. The static
-          // walker only ever proves OBJECT streams, where no
-          // corrupt-record line can occur, and from_json drives the same
-          // JacksonParser in PERMISSIVE mode as the reader.
-          case Some(schema) =>
-            import org.apache.spark.sql.functions.{col, from_json}
-            ds.select(from_json(col(ds.columns.head), schema).as("__r"))
-              .select(col("__r.*"))
-          // inference path: the reader form in PERMISSIVE (default) mode
-          // keeps scalar-stream behaviour byte-identical to docFallback's
-          // read.json (bare scalars land in _corrupt_record)
-          case None =>
-            spark.read.schema(spark.read.json(ds).schema).json(ds)
-        }
+    rowwisePlan(expr).filter(p => Tables.names.contains(p.table)).map { plan =>
+      // per-row interpreter work dwarfs one narrow-row shuffle, so
+      // spread an under-parallelised scan first (rowwise chains are
+      // per-row independent — input order never matters here)
+      val src = Tables.spreadCompute(Tables(spark, sfDir, plan.table))
+      val ds = Intermediate.persist(rowwiseJson(src, plan),
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      Lower.rowwiseStaticSchema(src.schema, plan.evalExpr) match {
+        // STATIC path: parse with the from_json expression. The static
+        // walker only ever proves OBJECT streams, where no
+        // corrupt-record line can occur, and from_json drives the same
+        // JacksonParser in PERMISSIVE mode as the reader.
+        case Some(schema) =>
+          import org.apache.spark.sql.functions.{col, from_json}
+          ds.select(from_json(col(ds.columns.head), schema).as("__r"))
+            .select(col("__r.*"))
+        // inference path: the reader form in PERMISSIVE (default) mode
+        // keeps scalar-stream behaviour byte-identical to docFallback's
+        // read.json (bare scalars land in _corrupt_record)
+        case None =>
+          spark.read.schema(spark.read.json(ds).schema).json(ds)
+      }
     }
 
   /** Document-mode fallback: build `{table: [rows…]}` for every table

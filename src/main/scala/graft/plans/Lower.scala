@@ -2538,6 +2538,27 @@ object Lower {
     cl.truthy(cl.colExpr(e), e)
   }
 
+  /** The rowwise rung's scan filter (Graft.rowwiseJson): `df` filtered
+    * by the longest leading run of `preds` that lowers through
+    * [[predIn]], ANDed; `df` itself when the first does not lower. The
+    * interpreter still evaluates the whole chain on the rows kept, so
+    * the filter only has to keep every row the interpreter keeps. A null
+    * predicate is jetro-falsy and drops the row; a row on which the
+    * lowered predicate would raise (the raise_error division, ANSI
+    * arithmetic) is kept for the interpreter to decide. */
+  private[graft] def scanFilter(df: DataFrame, preds: Seq[Expr]): DataFrame = {
+    val lowered = preds.iterator.map { p =>
+      try Some(predIn(df, p))
+      catch { case _: LowerException | _: org.apache.spark.sql.AnalysisException => None }
+    }.takeWhile(_.isDefined).flatten.toVector
+    lowered.reduceOption(_ && _).fold(df) { p =>
+      val kept = coalesce(
+        graft.functions.TryOrNull(coalesce(p, lit(false))), lit(true))
+      try df.filter(kept)
+      catch { case _: org.apache.spark.sql.AnalysisException => df }
+    }
+  }
+
   /** Coarse static type of a jetro expression, for truthiness. */
   private sealed trait Kind
   private object Kind {
@@ -5467,6 +5488,21 @@ object Lower {
     }
   }
 
+  /** True when both operands type statically to different jetro
+    * kinds: number, string or bool. */
+  private def crossKind(lE: Expr, rE: Expr): Boolean = {
+    def kind(dt: DataType): Option[Int] = dt match {
+      case _: NumericType => Some(0)
+      case _: StringType  => Some(1)
+      case BooleanType    => Some(2)
+      case _              => None
+    }
+    (inferDt(lE).flatMap(kind), inferDt(rE).flatMap(kind)) match {
+      case (Some(a), Some(b)) => a != b
+      case _                  => false
+    }
+  }
+
   private def binop(op: String, lE: Expr, rE: Expr): Column = {
     // operands are VALUE position: a nested bool-valued expression
     // (e.g. `(a < b) == p`, `(a < b) ?? q`) must be two-valued BEFORE
@@ -5536,6 +5572,12 @@ object Lower {
           // the interpreter's integer-lane behavior too
           case _ => l % r
         }
+      // operands of different kinds (number, string, bool) are never
+      // equal and never ordered in the interpreter (JValue.eq/cmpOk),
+      // where Spark would cast one side — and under ANSI raise on the
+      // first string that is not a number. Found by RowwiseFuzzSpec.
+      case "==" | "<" | "<=" | ">" | ">=" if crossKind(lE, rE) => lit(false)
+      case "!=" if crossKind(lE, rE) => lit(true)
       // null-SAFE equality: jetro compares null as a value (JValue.eq —
       // `x == null` is a real test, `x != null` keeps non-null rows),
       // while SQL `=` yields NULL and silently drops the row in filter

@@ -401,15 +401,15 @@ object StreamOps {
     * stateless, shuffle-free projection Structured Streaming accepts at
     * any scale (zero state, per-micro-batch). Returns one `json` string
     * column (streaming cannot run batch schema inference; apply
-    * `from_json` with your result schema to get typed columns). None
+    * `from_json` with your result schema to get typed columns). The
+    * chain's leading filters run before the interpreter, in the
+    * micro-batch's scan, as on the batch rung (Graft.rowwiseJson). None
     * when a stage looks across rows — sorts/aggs/windows have no
     * order-free streaming semantics and must be expressed with the
     * watermarked operators above. */
   def rowwiseStream(expr: String, table: String, stream: DataFrame): Option[DataFrame] =
-    graft.Graft.rowwisePlan(expr).filter(_._1 == table).map {
-      case (t, evalExpr) =>
-        graft.Graft.rowwiseJson(stream, t, evalExpr).toDF("json")
-    }
+    graft.Graft.rowwisePlan(expr).filter(_.table == table).map(
+      graft.Graft.rowwiseJson(stream, _).toDF("json"))
 
   /** [[lowerStream]] then [[rowwiseStream]] — the first rung that
     * accepts the expression, tagged with which one it was. */

@@ -214,7 +214,8 @@ class NullSemanticsFuzzSpec extends NoCachedLeftovers with BeforeAndAfterAll {
         val c = Graft.rowwiseCounters(spark)
         val before = c.errored.value
         val ds = graft.core.Intermediate.persist(
-          Graft.rowwiseJson(df, "t", s"$$.t.map({id: id, v: ($e)})"),
+          Graft.rowwiseJson(df,
+            Graft.RowwisePlan("t", s"$$.t.map({id: id, v: ($e)})", Vector.empty)),
           org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         val rw = spark.read.json(ds)
         val rwRows = rw.toJSON.collect().toVector.map(s2 => canon(JValue.parse(s2))).sorted

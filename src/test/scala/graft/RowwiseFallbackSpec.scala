@@ -215,11 +215,11 @@ class RowwiseFallbackSpec extends SparkSpec {
       """$.supplier{s_acctbal < 0}.delete()""",
       """patch $ { documents[*].n_chars: @ * 2 when @ < 50, documents[*].lang: @.upper() }""")
     exprs.foreach { e =>
-      val (table, evalExpr) = Graft.rowwisePlan(e).get
-      val src = graft.core.Tables(spark, sf, table)
-      val stat = graft.plans.Lower.rowwiseStaticSchema(src.schema, evalExpr)
+      val plan = Graft.rowwisePlan(e).get
+      val src = graft.core.Tables(spark, sf, plan.table)
+      val stat = graft.plans.Lower.rowwiseStaticSchema(src.schema, plan.evalExpr)
       assert(stat.isDefined, s"should prove: $e")
-      val inferred = spark.read.json(Graft.rowwiseJson(src, table, evalExpr)).schema
+      val inferred = spark.read.json(Graft.rowwiseJson(src, plan)).schema
       assert(stat.get == inferred, s"static ${stat.get.sql} != inferred ${inferred.sql} for $e")
     }
     // NOT provable: rec (untypeable leaf), compact (per-row shape),
@@ -233,8 +233,8 @@ class RowwiseFallbackSpec extends SparkSpec {
       """$.documents{lang == "en"}.n_chars.modify("s")""").foreach { e =>
       val plan = Graft.rowwisePlan(e)
       assert(plan.isDefined, e)
-      val src = graft.core.Tables(spark, sf, plan.get._1)
-      assert(graft.plans.Lower.rowwiseStaticSchema(src.schema, plan.get._2).isEmpty,
+      val src = graft.core.Tables(spark, sf, plan.get.table)
+      assert(graft.plans.Lower.rowwiseStaticSchema(src.schema, plan.get.evalExpr).isEmpty,
         s"should NOT prove: $e")
     }
   }
@@ -252,8 +252,8 @@ class RowwiseFallbackSpec extends SparkSpec {
       """patch $ { documents[*].n_chars: @ * 1.5 }""").foreach { e =>
       val plan = Graft.rowwisePlan(e)
       assert(plan.isDefined, e)
-      val src = graft.core.Tables(spark, sf, plan.get._1)
-      assert(graft.plans.Lower.rowwiseStaticSchema(src.schema, plan.get._2).isEmpty,
+      val src = graft.core.Tables(spark, sf, plan.get.table)
+      assert(graft.plans.Lower.rowwiseStaticSchema(src.schema, plan.get.evalExpr).isEmpty,
         s"cross-kind write must not prove: $e")
     }
     // behavioral pin: a zero-match guard leaves every n_chars a LONG —
@@ -364,5 +364,111 @@ class RowwiseFallbackSpec extends SparkSpec {
     val mid = c.errored.value
     Graft.rowwiseCompile(spark, sf, rowwiseExpr).get.collect()
     assert(c.errored.value == mid)
+  }
+
+  // ── the chain's leading filters run in the scan ──
+
+  private val words = "nw: s_name.words().len().rec(@)"
+
+  /** Rows of sf0.001 `supplier` (10) matching the SQL predicate. */
+  private def suppliers(sqlPred: String): Long =
+    graft.core.Tables(spark, sf, "supplier").filter(sqlPred).count()
+
+  test("a leading filter runs in the scan: the interpreter sees only its rows") {
+    val e = s"$$.supplier{s_suppkey < 4}.map({k: s_suppkey, $words})"
+    assert(Graft.backend(spark, sf, e) == "rowwise")
+    var got = Vector.empty[String]
+    val n = SparkSpec.interpreterRowsDuring(spark) {
+      got = rowsOf(Graft.rowwiseCompile(spark, sf, e).get)
+    }
+    assert(n == suppliers("s_suppkey < 4") && n == 4, s"interpreter ran on $n rows")
+    assert(got.size == 4 && got == rowsOf(Graft.docFallback(spark, sf, e)))
+  }
+
+  test("a row the scan filter cannot evaluate reaches the interpreter") {
+    // the lowered division raises on a zero denominator (raise_error);
+    // the scan keeps such a row and the interpreter drops and counts it,
+    // exactly as when the interpreter saw every row
+    val e = s"$$.supplier{10 / (s_acctbal - s_acctbal) > 1}.map({k: s_suppkey, $words})"
+    val plan = Graft.rowwisePlan(e).get
+    val src = graft.core.Tables(spark, sf, "supplier")
+    assert(graft.plans.Lower.scanFilter(src, plan.leadingFilters) ne src,
+      "the division predicate should lower into the scan")
+    val errored = Graft.rowwiseCounters(spark).errored
+    val before = errored.value
+    val n = SparkSpec.interpreterRowsDuring(spark) {
+      assert(Graft.rowwiseCompile(spark, sf, e).get.count() == 0)
+    }
+    assert(n == 10 && errored.value - before == 10,
+      s"evaluated $n, errored ${errored.value - before}")
+  }
+
+  test("chain-writes and patch $ keep their unmatched rows: nothing is pushed") {
+    Seq(
+      "$.supplier{s_suppkey < 3}.s_acctbal.set(1)",
+      "patch $ { supplier[* if s_suppkey < 3].s_name: @.upper().rec(@) }").foreach { e =>
+      assert(Graft.backend(spark, sf, e) == "rowwise", e)
+      val rw = Graft.rowwiseCompile(spark, sf, e).get
+      assert(rw.count() == 10, e)
+      assert(rowsOf(rw) ==
+        rowsOf(Graft.docFallback(spark, sf, Graft.rowwisePlan(e).get.evalExpr)), e)
+      assert(Graft.rowwisePlan(e).get.leadingFilters.isEmpty, e)
+    }
+  }
+
+  test("only the leading run of lowerable filters is pushed") {
+    val noLower = "{s_name.words().len().rec(@) >= 1}"
+    // the first filter does not lower: nothing is pushed, not even the
+    // lowerable filter after it
+    val e1 = s"$$.supplier$noLower{s_suppkey < 4}.map({k: s_suppkey, $words})"
+    // a lowerable filter, one that does not lower, and a lowerable one:
+    // only the first is pushed
+    val e2 = s"$$.supplier{s_suppkey < 4}$noLower.filter(s_suppkey > 1).map({k: s_suppkey, $words})"
+    Seq(e1 -> 10L, e2 -> suppliers("s_suppkey < 4")).foreach { case (e, want) =>
+      assert(Graft.backend(spark, sf, e) == "rowwise", e)
+      var got = Vector.empty[String]
+      val n = SparkSpec.interpreterRowsDuring(spark) {
+        got = rowsOf(Graft.rowwiseCompile(spark, sf, e).get)
+      }
+      assert(n == want, s"interpreter ran on $n rows, want $want: $e")
+      assert(got.nonEmpty && got == rowsOf(Graft.docFallback(spark, sf, e)), e)
+    }
+  }
+
+  test("the scan filter sits below the spread exchange and the interpreter") {
+    import org.apache.spark.sql.execution.{FilterExec, GenerateExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec        => Seq(q.plan)
+      case _                        => p.children
+    }).flatMap(nodes)
+    def executed(ds: org.apache.spark.sql.Dataset[_]): SparkPlan = {
+      ds.collect()
+      ds.queryExecution.executedPlan
+    }
+    // `events` is the table the spread repartitions at this scale
+    Seq("events" -> "{event_id < 50}.map({k: event_id, n: props.words().len().rec(@)})",
+        "supplier" -> s"{s_suppkey < 4}.map({k: s_suppkey, $words})").foreach {
+      case (table, chain) =>
+        val plan = Graft.rowwisePlan(s"$$.$table$chain").get
+        val src = graft.core.Tables.spreadCompute(graft.core.Tables(spark, sf, table))
+        val filtered = nodes(executed(Graft.rowwiseJson(src, plan)))
+        val unfiltered = nodes(executed(
+          Graft.rowwiseJson(src, plan.copy(leadingFilters = Vector.empty))))
+        val exchanges = filtered.collect { case x: ShuffleExchangeLike => x }
+        assert(exchanges.size ==
+          unfiltered.count(_.isInstanceOf[ShuffleExchangeLike]), table)
+        if (table == "events") assert(exchanges.nonEmpty, "events should spread")
+        val filter = filtered.collectFirst {
+          case f: FilterExec if f.condition.toString.contains("try_or_null") => f
+        }
+        assert(filter.isDefined, s"no scan filter in ${filtered.head}")
+        def above(p: SparkPlan): Boolean = nodes(p).exists(_ eq filter.get)
+        assert(exchanges.forall(x => above(x.asInstanceOf[SparkPlan])), table)
+        assert(filtered.exists { case g: GenerateExec => above(g); case _ => false },
+          table)
+    }
   }
 }

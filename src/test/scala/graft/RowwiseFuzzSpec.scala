@@ -43,7 +43,7 @@ class RowwiseFuzzSpec extends SparkSpec {
     val plan = Graft.rowwisePlan(e)
     assert(plan.isDefined, s"should qualify for the rowwise rung: $e")
     val rw = canonRows(Graft.rowwiseCompile(spark, sf, e).get)
-    val doc = canonRows(Graft.docFallback(spark, sf, plan.get._2))
+    val doc = canonRows(Graft.docFallback(spark, sf, plan.get.evalExpr))
     assert(rw == doc, s"rowwise != document for: $e")
     graft.plans.Lower.tryCompile(e, t => graft.core.Tables(spark, sf, t)) match {
       case Some(ldf) =>
@@ -56,24 +56,35 @@ class RowwiseFuzzSpec extends SparkSpec {
   private val preds = Seq(
     "c_acctbal > 1000", "c_nationkey < 13", "c_custkey % 3 == 0",
     "c_acctbal > -100 and c_nationkey >= 3", "c_mktsegment == \"BUILDING\"",
-    "c_acctbal > 999999") // empty-result stressor
+    "c_acctbal > 999999", // empty-result stressor
+    // where a lowered predicate and the interpreter's could part: the
+    // rowwise rung runs a chain's leading filters in the scan
+    // (Lower.scanFilter), so each of these must keep what the
+    // interpreter keeps
+    "c_name < \"Customer#000000005\"",                 // string order
+    "c_acctbal", "c_nationkey % 2", "c_mktsegment",     // bare truthiness
+    "c_comment",                                         // absent field
+    "c_name > 5",                                        // across kinds
+    "c_acctbal == null", "c_mktsegment != null",
+    "c_acctbal / (c_nationkey + 1) > 300")              // division
 
   test("random element-wise chains: rowwise == interpreter (== lowered where lowerable)") {
     val rng = new scala.util.Random(fuzzSeed(20260814))
     var lowered = 0
     (0 until 70).foreach { _ =>
       val pred = preds(rng.nextInt(preds.length))
-      val filterStage = rng.nextInt(3) match {
+      val filterStage = rng.nextInt(4) match {
         case 0 => s"{$pred}"
         case 1 => s".filter($pred)"
-        case _ => s".where($pred)"
+        case 2 => s".where($pred)"
+        case _ => s"{$pred}$unlowered" // only the first filter lowers
       }
       // shape slot: lowerable projections and interpreter-only builtins
       // mix so the Lower leg runs on a real subset of cases
       val shape = rng.nextInt(6) match {
         case 0 => ".map({k: c_custkey, seg: c_mktsegment})"
         case 1 => ".map({k: c_custkey, u: c_name.upper(), b: c_acctbal * 2})"
-        case 2 => ".map({k: c_custkey, s: c_name.title_case()})" // no lowering
+        case 2 => ".map({k: c_custkey, s: c_name.title_case()})"
         case 3 => ".map({k: c_custkey, w: c_mktsegment.words()})" // array lane
         case 4 => s".pick(${"\"c_custkey\", \"c_mktsegment\""})"
         case _ => s".omit(${"\"c_name\", \"c_acctbal\""})"
@@ -99,6 +110,18 @@ class RowwiseFuzzSpec extends SparkSpec {
     }
     // the pool must genuinely exercise the Lower leg too
     assert(lowered > 5, s"only $lowered generated chains lowered")
+  }
+
+  /** A filter with no relational lowering that keeps most rows. */
+  private val unlowered = """{c_mktsegment.rec(@) != "AUTOMOBILE"}"""
+
+  test("every predicate as a leading filter: rowwise == interpreter") {
+    // the non-lowerable shape keeps each chain off the relational rung,
+    // so every predicate runs in the rowwise rung's scan
+    val shape = ".map({k: c_custkey, s: c_name.title_case().rec(@)})"
+    for (p <- preds; stage <- Seq(s"{$p}", s".filter($p)", s"{$p}$unlowered",
+                                 s"$unlowered{$p}"))
+      check(s"$$.customer$stage$shape")
   }
 
   test("random chain-writes and patch batches: rowwise == interpreter") {

@@ -41,6 +41,15 @@ object SparkSpec {
     finally sc.removeSparkListener(listener)
     jobs.get
   }
+
+  /** Rows the rowwise rungs fed to the per-row interpreter while `body`
+    * ran: the growth of the session's `graft.rowwise.evaluatedRows`. */
+  def interpreterRowsDuring(spark: SparkSession)(body: => Any): Long = {
+    val evaluated = Graft.rowwiseCounters(spark).evaluated
+    val before = evaluated.value
+    body
+    evaluated.value - before
+  }
 }
 
 /** No test may leave a CacheManager entry behind. Nothing in the program

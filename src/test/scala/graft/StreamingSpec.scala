@@ -88,6 +88,27 @@ class StreamingSpec extends SparkSpec with org.scalactic.Tolerance {
       "$.events.sort_by(event_id).map(event_id)", "events", streamEvents).isEmpty)
   }
 
+  test("the streaming rowwise rung runs the leading filter before the interpreter") {
+    // the micro-batch's scan drops the events the leading filter rejects,
+    // as the batch rung's does: the interpreter sees only the survivors
+    val e = """$.events{event_type == "purchase" and event_id % 2 == 0}
+              |.map({id: event_id, tokens: props.words().len().rec(@)})""".stripMargin
+    val Some(("rowwise", js)) = StreamOps.compileStream(e, "events", streamEvents)
+    var got: DataFrame = null
+    val n = SparkSpec.interpreterRowsDuring(spark) {
+      got = runToTable(js, "t_rowwise_pushed_stream")
+    }
+    val survivors =
+      batchEvents.filter("event_type = 'purchase' and event_id % 2 = 0").count()
+    assert(n == survivors && n > 0, s"interpreter ran on $n events, $survivors survive")
+    val rows = (df: DataFrame) =>
+      df.collect().map(_.toString).toVector.sorted
+    val want = graft.Graft.query(spark, sf, e).select("id", "tokens")
+    assert(rows(got.select(from_json(col("json"),
+      org.apache.spark.sql.types.StructType.fromDDL("id BIGINT, tokens BIGINT")).as("r"))
+      .select("r.id", "r.tokens")) == rows(want))
+  }
+
   test("exploding chains run on the streaming rowwise rung (batch parity)") {
     // per-event fan-out distributes over micro-batches: explode is
     // element-wise, and the non-lowerable words() forces the rung
