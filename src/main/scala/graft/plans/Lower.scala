@@ -2540,22 +2540,36 @@ object Lower {
 
   /** The rowwise rung's scan filter (Graft.rowwiseJson): `df` filtered
     * by the longest leading run of `preds` that lowers through
-    * [[predIn]], ANDed; `df` itself when the first does not lower. The
-    * interpreter still evaluates the whole chain on the rows kept, so
-    * the filter only has to keep every row the interpreter keeps. A null
-    * predicate is jetro-falsy and drops the row; a row on which the
-    * lowered predicate would raise (the raise_error division, ANSI
-    * arithmetic) is kept for the interpreter to decide. */
+    * [[predIn]] and analyzes against `df`, ANDed; `df` itself when the
+    * first does not. The interpreter still evaluates the whole chain on
+    * the rows kept, so the filter only has to keep every row the
+    * interpreter keeps. A null predicate is jetro-falsy and drops the
+    * row; a row on which the lowered predicate would raise (the
+    * raise_error division, ANSI arithmetic) is kept for the interpreter
+    * to decide. A predicate that touches a date, timestamp or binary
+    * value is not pushed: the interpreter sees those as the strings
+    * RowBridge renders and compares them as text, where Spark casts. */
   private[graft] def scanFilter(df: DataFrame, preds: Seq[Expr]): DataFrame = {
-    val lowered = preds.iterator.map { p =>
-      try Some(predIn(df, p))
-      catch { case _: LowerException | _: org.apache.spark.sql.AnalysisException => None }
-    }.takeWhile(_.isDefined).flatten.toVector
+    import org.apache.spark.sql.types._
+    def stringInDoc(dt: DataType): Boolean = dt match {
+      case DateType | TimestampType | TimestampNTZType | BinaryType => true
+      case ArrayType(e, _) => stringInDoc(e)
+      case MapType(k, v, _) => stringInDoc(k) || stringInDoc(v)
+      case s: StructType => s.fields.exists(f => stringInDoc(f.dataType))
+      case _ => false
+    }
+    def pushable(p: Expr): Option[Column] =
+      try {
+        val c = predIn(df, p)
+        df.filter(c).queryExecution.analyzed match {
+          case f: org.apache.spark.sql.catalyst.plans.logical.Filter
+              if !f.condition.exists(x => stringInDoc(x.dataType)) => Some(c)
+          case _ => None
+        }
+      } catch { case _: LowerException | _: org.apache.spark.sql.AnalysisException => None }
+    val lowered = preds.iterator.map(pushable).takeWhile(_.isDefined).flatten.toVector
     lowered.reduceOption(_ && _).fold(df) { p =>
-      val kept = coalesce(
-        graft.functions.TryOrNull(coalesce(p, lit(false))), lit(true))
-      try df.filter(kept)
-      catch { case _: org.apache.spark.sql.AnalysisException => df }
+      df.filter(coalesce(graft.functions.TryOrNull(coalesce(p, lit(false))), lit(true)))
     }
   }
 
@@ -5503,6 +5517,14 @@ object Lower {
     }
   }
 
+  /** True for an operand whose evaluation cannot raise: a literal, a
+    * name, `@`, or a plain field path off one of these. */
+  private def cannotRaise(e: Expr): Boolean = e match {
+    case Lit(_) | Ident(_) | Current => true
+    case Chain(b, steps) => cannotRaise(b) && steps.forall(_.isInstanceOf[Step.Field])
+    case _ => false
+  }
+
   private def binop(op: String, lE: Expr, rE: Expr): Column = {
     // operands are VALUE position: a nested bool-valued expression
     // (e.g. `(a < b) == p`, `(a < b) ?? q`) must be two-valued BEFORE
@@ -5576,8 +5598,13 @@ object Lower {
       // equal and never ordered in the interpreter (JValue.eq/cmpOk),
       // where Spark would cast one side — and under ANSI raise on the
       // first string that is not a number. Found by RowwiseFuzzSpec.
-      case "==" | "<" | "<=" | ">" | ">=" if crossKind(lE, rE) => lit(false)
-      case "!=" if crossKind(lE, rE) => lit(true)
+      // The interpreter evaluates both operands first, so the constant
+      // stands only when neither can raise; otherwise the interpreter
+      // owns the comparison.
+      case "==" | "<" | "<=" | ">" | ">=" | "!=" if crossKind(lE, rE) =>
+        if (!cannotRaise(lE) || !cannotRaise(rE))
+          bail(s"cross-kind $op over an operand that may raise")
+        lit(op == "!=")
       // null-SAFE equality: jetro compares null as a value (JValue.eq —
       // `x == null` is a real test, `x != null` keeps non-null rows),
       // while SQL `=` yields NULL and silently drops the row in filter

@@ -403,6 +403,37 @@ class RowwiseFallbackSpec extends SparkSpec {
       s"evaluated $n, errored ${errored.value - before}")
   }
 
+  test("a comparison across kinds over a raising operand reaches the interpreter") {
+    // `10 / 0 > "x"`: the interpreter raises on the division before it
+    // compares, so every row errors; a constant `false` in the scan
+    // would drop the rows before the interpreter counted them
+    val e = s"$$.supplier{10 / (s_acctbal - s_acctbal) > \"x\"}.map({k: s_suppkey, $words})"
+    val errored = Graft.rowwiseCounters(spark).errored
+    val before = errored.value
+    val n = SparkSpec.interpreterRowsDuring(spark) {
+      assert(Graft.rowwiseCompile(spark, sf, e).get.count() == 0)
+    }
+    assert(n == 10 && errored.value - before == 10,
+      s"evaluated $n, errored ${errored.value - before}")
+  }
+
+  test("a filter on a date is not pushed: the interpreter compares it as text") {
+    // RowBridge hands `o_orderdate` to the interpreter as
+    // "1995-06-19T00:00:00.000Z", which is `> "1995-06-19"` and
+    // `!= "1995-06-19"` as text; Spark casts the literal to a timestamp
+    // and would drop the 5 orders of that day
+    val src = graft.core.Tables(spark, sf, "orders")
+    assert(src.filter("o_orderdate = timestamp'1995-06-19'").count() == 5)
+    Seq("""{o_orderdate > "1995-06-19"}""", """{o_orderdate != "1995-06-19"}""",
+        """{o_orderdate > "1995"}""").foreach { f =>
+      val e = s"$$.orders$f.map({k: o_orderkey, n: o_orderpriority.words().len().rec(@)})"
+      assert(Graft.backend(spark, sf, e) == "rowwise", e)
+      assert(graft.plans.Lower.scanFilter(src, Graft.rowwisePlan(e).get.leadingFilters) eq src, e)
+      val got = rowsOf(Graft.rowwiseCompile(spark, sf, e).get)
+      assert(got.nonEmpty && got == rowsOf(Graft.docFallback(spark, sf, e)), e)
+    }
+  }
+
   test("chain-writes and patch $ keep their unmatched rows: nothing is pushed") {
     Seq(
       "$.supplier{s_suppkey < 3}.s_acctbal.set(1)",
