@@ -142,10 +142,14 @@ object Tables {
   //    stages — running real jobs — at PLAN-BUILD time (a probe must
   //    not pay that; [[Intermediate.persist]] pays it knowingly, for an
   //    intermediate its query reads more than once). The spread now
-  //    applies only to bare scan lineages
-  //    (Project/Filter over one file relation), where effective
-  //    parallelism is read driver-side from the file index + parquet
-  //    footers. Row groups, not byte splits, are the probe's unit: a
+  //    applies only to scan lineages whose UNANALYZED plan
+  //    (`queryExecution.logical`) is a Project/Filter over one file
+  //    relation, where effective parallelism is read driver-side from
+  //    the file index + parquet footers. On Spark 4.1 a bare
+  //    `spark.read.parquet` is an `UnresolvedDataSource` there, so a
+  //    plain table read does NOT spread; only derived lineages such as
+  //    `events` (its normalising Project sits over the analyzed read)
+  //    do. Row groups, not byte splits, are the probe's unit: a
   //    byte-split of a single-row-group file yields empty tasks, so
   //    `.rdd.getNumPartitions` OVERCOUNTED on large single-group files
   //    and silently disabled the spread exactly where it mattered.
@@ -171,10 +175,12 @@ object Tables {
     }
   }
 
-  /** Effective max parallelism of a bare file-scan lineage, or None when
-    * the plan is anything else (derived frames are left alone — probing
-    * them risks compile-time execution, and their exchanges already
-    * parallelise). Cheap and job-free: the file listing is the read's
+  /** Effective max parallelism of a Project/Filter lineage over one file
+    * relation, or None when the logical plan is anything else: frames
+    * with joins or exchanges are left alone (probing them risks
+    * compile-time execution, and their exchanges already parallelise),
+    * and so is a bare Spark 4.1 read, whose logical plan is still
+    * `UnresolvedDataSource`. Cheap and job-free: the file listing is the read's
     * own cached InMemoryFileIndex; parquet footers are read driver-side,
     * once per file version for a table read through here.
     */

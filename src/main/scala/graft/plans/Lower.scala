@@ -43,7 +43,7 @@ object Lower {
     * is 0 for every x with no simplification rule; the coalesce keeps
     * null rows in the same (only) partition. */
   /** Pure type walk of setPath over typed lanes (shared by the column
-    * builder and dtOf so the two can never drift). At a STRUCT node the
+    * builders). At a STRUCT node the
     * written key updates IN PLACE when present, appends at the END when
     * new (VectorMap `+`, Builtins.setPath:943-948); a statically
     * non-object intermediate coerces to the fresh nested write chain.
@@ -86,14 +86,6 @@ object Lower {
     }
   }
 
-  /** [[setPathDeepType]] restricted to struct receivers (their result
-    * is always a struct) — the patch compiler / dtOf entry point. */
-  private[plans] def setPathStructType(
-      recvDt: Option[org.apache.spark.sql.types.DataType], segs: List[String],
-      vdt: org.apache.spark.sql.types.DataType): Option[org.apache.spark.sql.types.StructType] =
-    setPathDeepType(recvDt, segs, vdt)
-      .collect { case s: org.apache.spark.sql.types.StructType => s }
-
   /** Pure type walk of delPath over a struct lane: Some(newType) when a
     * drop statically happens, None when provably identity (missing key
     * or non-object intermediate — delPath's identity rows,
@@ -130,7 +122,7 @@ object Lower {
   }
 
   /** Pure shape union of merge/deep_merge over two struct shapes
-    * (shared by the column builders and dtOf): x's fields in order,
+    * (shared by the column builders): x's fields in order,
     * common fields' types merged, then y-only fields appended — the
     * VectorMap `++`/deepMerge key order (Builtins.scala:110,602).
     * Common-field type rule: struct+struct recurses when `deep` (the
@@ -146,7 +138,7 @@ object Lower {
       deep: Boolean): org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
     // same-kind unification (ColLower.unifySameKind's rule, restated
-    // here because this walk is object-level for the dtOf mirror)
+    // here because this walk is object-level)
     def integral(d: DataType) = d match {
       case ByteType | ShortType | IntegerType | LongType => true
       case _                                             => false
@@ -184,8 +176,8 @@ object Lower {
   }
 
   /** Pure type walk of deepMerge's VALUE-level collision over two
-    * static types (round 11; shared by the column builders and the
-    * dtOf mirrors): struct+struct and string-keyed map+map pairs
+    * static types (round 11; shared by the column builders):
+    * struct+struct and string-keyed map+map pairs
     * recurse (the interpreter's (JObj, JObj) case), any other pair
     * takes `other` wholesale — so the lane must same-kind unify to
     * hold both the surviving x-only values and the y winners. None =
@@ -2546,11 +2538,18 @@ object Lower {
     * interpreter keeps. A null predicate is jetro-falsy and drops the
     * row; a row on which the lowered predicate would raise (the
     * raise_error division, ANSI arithmetic) is kept for the interpreter
-    * to decide. A predicate that touches a date, timestamp or binary
-    * value is not pushed: the interpreter sees those as the strings
-    * RowBridge renders and compares them as text, where Spark casts. */
+    * to decide. The leading conjuncts that cannot raise (attribute
+    * reads, literals, upcasts, comparisons, `and`/`or`/`not`, null
+    * tests) go bare, so the parquet reader sees them as pushed filters;
+    * from the first conjunct that may raise on, the guard keeps every
+    * row the interpreter would raise on, in its own evaluation order. A
+    * predicate that touches a date, timestamp or binary value is not
+    * pushed: the interpreter sees those as the strings RowBridge
+    * renders and compares them as text, where Spark casts. */
   private[graft] def scanFilter(df: DataFrame, preds: Seq[Expr]): DataFrame = {
     import org.apache.spark.sql.types._
+    import org.apache.spark.sql.catalyst.{expressions => X}
+    import org.apache.spark.sql.graft.ColumnBridge
     def stringInDoc(dt: DataType): Boolean = dt match {
       case DateType | TimestampType | TimestampNTZType | BinaryType => true
       case ArrayType(e, _) => stringInDoc(e)
@@ -2558,19 +2557,29 @@ object Lower {
       case s: StructType => s.fields.exists(f => stringInDoc(f.dataType))
       case _ => false
     }
-    def pushable(p: Expr): Option[Column] =
-      try {
-        val c = predIn(df, p)
-        df.filter(c).queryExecution.analyzed match {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter
-              if !f.condition.exists(x => stringInDoc(x.dataType)) => Some(c)
-          case _ => None
-        }
+    // the analyzed condition: its nodes decide which conjuncts go bare
+    def pushable(p: Expr): Option[X.Expression] =
+      try df.filter(predIn(df, p)).queryExecution.analyzed match {
+        case f: org.apache.spark.sql.catalyst.plans.logical.Filter
+            if !f.condition.exists(x => stringInDoc(x.dataType)) => Some(f.condition)
+        case _ => None
       } catch { case _: LowerException | _: org.apache.spark.sql.AnalysisException => None }
-    val lowered = preds.iterator.map(pushable).takeWhile(_.isDefined).flatten.toVector
-    lowered.reduceOption(_ && _).fold(df) { p =>
-      df.filter(coalesce(graft.functions.TryOrNull(coalesce(p, lit(false))), lit(true)))
+    def conjuncts(x: X.Expression): Seq[X.Expression] = x match {
+      case X.And(l, r) => conjuncts(l) ++ conjuncts(r)
+      case other       => Seq(other)
     }
+    def cannotRaise(x: X.Expression): Boolean = !x.exists {
+      case _: X.AttributeReference | _: X.Literal | _: X.BinaryComparison |
+           _: X.And | _: X.Or | _: X.Not | _: X.IsNull | _: X.IsNotNull => false
+      case c: X.Cast => !X.Cast.canUpCast(c.child.dataType, c.dataType)
+      case _         => true
+    }
+    val (bare, guarded) = preds.iterator.map(pushable).takeWhile(_.isDefined)
+      .flatten.flatMap(conjuncts).toVector.span(cannotRaise)
+    val guard = guarded.reduceOption(X.And(_, _)).map(g =>
+      coalesce(graft.functions.TryOrNull(coalesce(ColumnBridge.column(g), lit(false))),
+        lit(true)))
+    (bare.map(ColumnBridge.column) ++ guard).reduceOption(_ && _).fold(df)(df.filter)
   }
 
   /** Coarse static type of a jetro expression, for truthiness. */
@@ -2756,9 +2765,9 @@ object Lower {
       current.getOrElse(bail("`@` has no relational meaning at row scope"))
     case Root      =>
       rootStruct.map(_._1).getOrElse(bail("`$` has no row-scope meaning here"))
-    case Chain(Ident(n), steps) => fieldChain(identCol(n), identDt(n), steps)
+    case Chain(Ident(n), steps) => fieldChain(identCol(n), identDt(n), steps)._1
     case Chain(Current, steps)  =>
-      current.map(fieldChain(_, currentDt, steps))
+      current.map(fieldChain(_, currentDt, steps)._1)
         .getOrElse(bail("`@`-rooted chain at row scope"))
     case Chain(Root, steps) if rootStruct.isDefined =>
       // a write-shaped root chain evaluates to the PATCHED document
@@ -2766,12 +2775,12 @@ object Lower {
       if (Lower.isRootChainWrite(steps))
         bail("root chain-write stays on the document rungs")
       val (rc, rt) = rootStruct.get
-      fieldChain(rc, Some(rt), steps)
+      fieldChain(rc, Some(rt), steps)._1
     // method/step chains over a COMPUTED receiver — ("x" + name).upper(),
     // (a ?? b).trim() — walk the same steps from the lowered base column;
     // inferDt supplies the static lane so the string-only/array dispatch
     // guards apply exactly as they do for column-rooted chains
-    case Chain(base, steps) => fieldChain(colExpr(base), inferDt(base), steps)
+    case Chain(base, steps) => fieldChain(colExpr(base), inferDt(base), steps)._1
     case Unary("-", x)   => negate(colExpr(x))
     // `not` is null-sensitive: jetro not(falsy-null) = true, but SQL
     // NOT null = null — force two-valued before negating
@@ -2936,8 +2945,12 @@ object Lower {
     * so array lanes dispatch to the higher-order-function pipeline ops
     * below and scalar lanes keep the 1:1 scalar builtins. An unknown
     * type falls back to the scalar mapping (never silently to the array
-    * one — array semantics require the element type). */
-  private def fieldChain(base: Column, baseDt: Option[DataType], steps: Vector[Step]): Column = {
+    * one — array semantics require the element type). Returns the
+    * column and its static type: this walk is the only source of a
+    * chain's type ([[dtOf]] runs it over a typed null). */
+  private def fieldChain(
+      base: Column, baseDt: Option[DataType],
+      steps: Vector[Step]): (Column, Option[DataType]) = {
     var c = base
     var dt: Option[DataType] = baseDt
     // indexed walk: a step may FUSE with its successor (consumed = 2) —
@@ -3108,7 +3121,7 @@ object Lower {
           val bdt = b.dt.getOrElse(bail("update body type unknown"))
           val v = letRow1(c.getField(k))(b(_))
           c = setPathDeepCol(c, Some(st), List(k), v, bdt)
-          dt = setPathStructType(Some(st), List(k), bdt)
+          dt = setPathDeepType(Some(st), List(k), bdt)
         case Some(st: StructType)
             if (m == "merge" || m == "deep_merge") && args.nonEmpty &&
                !args.exists(_.name.nonEmpty) =>
@@ -3187,7 +3200,7 @@ object Lower {
     }
     si += consumed
     }
-    c
+    (c, dt)
   }
 
   /** String-receiver-only builtins: on any other receiver kind the
@@ -3349,22 +3362,18 @@ object Lower {
         // element lanes stay doc-mode.
         at.elementType match {
           case st: StructType =>
-            val outEt = structObjReturn(name, st, args)
-              .getOrElse(bail(s"$name element shape untypeable"))
-            if (name == "omit")
-              (transform(nz(c), e => structObjMethod(name, e, st, args)._1),
-                Some(ArrayType(outEt, containsNull = true)))
-            else {
-              val picked = args.map(a => a.e match {
-                case Lit(JStr(s)) if a.name.isEmpty => s
-                case Ident(n) if a.name.isEmpty     => n
-                case other => bail(s"pick needs literal key names, got $other")
-              })
-              (transform(nz(c), e => struct(picked.map(n =>
-                (if (st.fieldNames.contains(n)) e.getField(n)
-                 else lit(null).cast(StringType)).as(n)): _*)),
-                Some(ArrayType(outEt, containsNull = true)))
+            // the element shape is the receiver form's result type
+            val outEt = structObjMethod(name, lit(null).cast(st), st, args)._2 match {
+              case Some(o: StructType) => o
+              case other => bail(s"$name element shape untypeable: $other")
             }
+            val outT = Some(ArrayType(outEt, containsNull = true))
+            if (name == "omit")
+              (transform(nz(c), e => structObjMethod(name, e, st, args)._1), outT)
+            else
+              (transform(nz(c), e => struct(outEt.fields.toIndexedSeq.map(f =>
+                (if (st.fieldNames.contains(f.name)) e.getField(f.name)
+                 else lit(null).cast(f.dataType)).as(f.name)): _*)), outT)
           case other => bail(s"$name over ${other.simpleString} elements — doc mode")
         }
       case "count" =>
@@ -4165,83 +4174,6 @@ object Lower {
     }
   }
 
-  /** Static return type of [[structObjMethod]], for chain typing. */
-  private def structObjReturn(
-      m: String, st: StructType, margs: Vector[Arg]): Option[DataType] = {
-    def litName(a: Arg): Option[String] = a.e match {
-      case Lit(JStr(s)) if a.name.isEmpty => Some(s)
-      case Ident(n) if a.name.isEmpty     => Some(n)
-      case _                              => None
-    }
-    try m match {
-      case "keys" => Some(ArrayType(StringType))
-      case "len" | "length" => Some(LongType)
-      case "values" =>
-        st.fields.map(_.dataType).foldLeft(Option.empty[DataType]) {
-          case (None, d)    => Some(d)
-          case (Some(a), d) => unifySameKind(a, d) match {
-            case Some(u) => Some(u)
-            case None    => return None
-          }
-        }.map(ArrayType(_, containsNull = true))
-      case "entries" | "to_pairs" if st.fields.forall(_.dataType == StringType) =>
-        Some(ArrayType(ArrayType(StringType, containsNull = true)))
-      case "pick" if margs.nonEmpty =>
-        val picked = margs.map(a => litName(a).getOrElse(return None))
-        Some(StructType(picked.map(n =>
-          st.find(_.name == n).getOrElse(StructField(n, StringType)))))
-      case "omit" if margs.nonEmpty =>
-        val dropped = margs.map(a => litName(a).getOrElse(return None)).toSet
-        val kept = st.fields.filterNot(f => dropped(f.name))
-        if (kept.isEmpty) None else Some(StructType(kept))
-      case "defaults" if margs.length == 1 =>
-        inferDt(margs(0).e) match {
-          case Some(ys: StructType) => Some(mergeStructType(st, ys, deep = false))
-          case _                    => None
-        }
-      case "invert" if st.fields.forall(f => atomicElem(f.dataType)) =>
-        Some(MapType(StringType, StringType, valueContainsNull = true))
-      case "filter_keys" | "filter_values" |
-           "transform_keys" | "transform_values" if margs.length == 1 =>
-        // zero-drift mirror: run the lowering on a dummy column and
-        // keep only its reported type (columns are lazy, never analyzed)
-        structObjMethod(m, lit(null).cast(st), st, margs)._2
-      case "rename" if margs.length == 2 && !margs.exists(_.name.nonEmpty) =>
-        for {
-          from <- litName(margs(0))
-          to   <- litName(margs(1))
-          out  <- if (!st.fieldNames.contains(from)) Some(st)
-                  else {
-                    val fromDt = st(from).dataType
-                    val remaining = st.fields.filterNot(_.name == from)
-                    val toDt = remaining.find(_.name == to) match {
-                      case Some(f) => unifySameKind(fromDt, f.dataType)
-                      case None    => Some(fromDt)
-                    }
-                    toDt.map { d =>
-                      StructType(
-                        if (remaining.exists(_.name == to))
-                          remaining.map(f =>
-                            if (f.name == to) StructField(to, d) else f)
-                        else remaining :+ StructField(to, d))
-                    }
-                  }
-        } yield out
-      case "flatten_keys" if margs.isEmpty =>
-        val ls = flattenLeaves(st)
-        if (ls.isEmpty) None
-        else Some(StructType(ls.map { case (n, _, d2) => StructField(n, d2) }))
-      case "unflatten_keys" if margs.isEmpty =>
-        def ty(n: UnflatTrie): DataType = n match {
-          case UnflatLeaf(_, d)  => d
-          case UnflatBranch(cs) =>
-            StructType(cs.map { case (s2, c2) => StructField(s2, ty(c2)) })
-        }
-        Some(ty(unflattenTrie(st))).collect { case t: StructType => t }
-      case _ => None
-    } catch { case _: LowerException => None }
-  }
-
   /** Shapes whose Spark `to_json` text is byte-identical to the
     * interpreter's render of the bridged document: integral/string/
     * bool leaves (longs render the same both sides), structs (null
@@ -4948,24 +4880,6 @@ object Lower {
         }, Some(outMap(vt)))
       case other => bail(s"no columnar object lowering for .$other()")
     }
-  }
-
-  /** Static return type of a map-lane method, for chain typing. */
-  private def mapMethodReturn(m: String, mt: MapType): Option[DataType] = m match {
-    case "keys"                         => Some(ArrayType(StringType))
-    case "values"                       => Some(ArrayType(mt.valueType, containsNull = true))
-    case "len" | "length"               => Some(LongType)
-    case "has" | "missing" | "includes" | "contains" => Some(BooleanType)
-    case "to_json" | "to_string"        => Some(StringType)
-    case "entries" | "to_pairs"         =>
-      Some(ArrayType(ArrayType(StringType, containsNull = true)))
-    case "filter_keys" | "filter_values" | "transform_keys" | "rename" |
-         "del_path" | "del_paths" | "pick" | "omit" =>
-      Some(MapType(StringType, mt.valueType, valueContainsNull = true))
-    case "invert"                       =>
-      Some(MapType(StringType, StringType, valueContainsNull = true))
-    // transform_values/merge/defaults/set/update: body- or arg-typed
-    case _                              => None
   }
 
   /** JValue.eq (JValue.scala:65-77) against the evaluated argument:
@@ -5796,257 +5710,19 @@ object Lower {
     case _ => colExpr(e)
   }
 
-  /** Resolve the Spark type of a field / field-chain expression against
-    * the plan schema (structs descended, arrays element-typed, scalar
-    * builtins mapped to their return types). */
+  /** Resolve the Spark type of a name or chain expression against the
+    * plan schema. A chain's type is the one [[fieldChain]] reports when
+    * it walks the steps over a typed null: the lowering that builds the
+    * column is the only type source (Column trees are lazy — nothing is
+    * analysed here). A step that does not lower types as None. */
   private def dtOf(e: Expr): Option[DataType] = e match {
     case Ident(n) => identDt(n)
     case Current  => currentDt
     case Root     => rootStruct.map(_._2)
     case Chain(base, steps) =>
-      val b: Option[DataType] = base match {
-        case Ident(n) => identDt(n)
-        case Current  => currentDt
-        case Root     => rootStruct.map(_._2)
-        // computed receivers (nested chains, global calls, literals)
-        // type through the full inference — the rewrite mirrors and
-        // method walks depend on it
-        case other    => inferDt(other)
-      }
-      steps.foldLeft(b) { (acc, s) =>
-        s match {
-          case Step.Field(f) => acc.flatMap {
-            case st: StructType => st.find(_.name == f).map(_.dataType)
-            case MapType(StringType, v, _) => Some(v)
-            case _              => None
-          }
-          case Step.Index(_) => acc.flatMap {
-            case ArrayType(et, _) => Some(et)
-            case _                => None
-          }
-          case Step.Slice(_, _) => acc.collect { case at: ArrayType => at }
-          case Step.InlineFilter(_) => acc.collect { case at: ArrayType => at }
-          case Step.Optional      => acc
-          case Step.Method(m, margs) => acc match {
-            case Some(_)
-                if Set("to_string", "to_json", "type", "type_of")(m) &&
-                   margs.isEmpty => Some(StringType)
-            case Some(_) if m == "has_path" && margs.length == 1 =>
-              Some(BooleanType)
-            case Some(t) if m == "get_path" && margs.length == 1 =>
-              margs(0).e match {
-                case Lit(JStr(p)) =>
-                  p.split('.').foldLeft(Option(t)) { (a, k) =>
-                    a.flatMap {
-                      case st: StructType => st.find(_.name == k).map(_.dataType)
-                      case MapType(StringType, v, _) => Some(v)
-                      case _ => None
-                    }
-                  }
-                case _ => None
-              }
-            case Some(st: StructType)
-                if Set("set_path", "del_path", "del_paths", "set", "update")(m) =>
-              // mirror of structPathMethod (type walks are shared)
-              def segsOf(e: Expr): Option[List[String]] = e match {
-                case Lit(JStr(p)) if p.nonEmpty =>
-                  val segs = p.split('.').toList
-                  if (segs.exists(_.isEmpty)) None else Some(segs)
-                case _ => None
-              }
-              try m match {
-                case "set_path" if margs.length == 2 =>
-                  for {
-                    segs <- segsOf(margs(0).e)
-                    vdt  <- inferDt(margs(1).e)
-                    out  <- setPathStructType(Some(st), segs, vdt)
-                  } yield out
-                case "del_path" if margs.length == 1 =>
-                  segsOf(margs(0).e).map(segs =>
-                    delPathStructType(st, segs).getOrElse(st))
-                case "del_paths" if margs.length == 1 =>
-                  margs(0).e match {
-                    case ArrLit(elems) =>
-                      elems.foldLeft(Option(st: DataType)) { (acc, el) =>
-                        for {
-                          d    <- acc
-                          cst  <- Some(d).collect { case s: StructType => s }
-                          segs <- el match {
-                            case ArrElem.One(pe) => segsOf(pe)
-                            case _               => None
-                          }
-                        } yield delPathStructType(cst, segs).getOrElse(cst)
-                      }
-                    case _ => None
-                  }
-                case "set" if margs.length == 2 =>
-                  margs(0).e match {
-                    case Lit(JStr(k)) if k.nonEmpty =>
-                      inferDt(margs(1).e)
-                        .flatMap(vdt => setPathStructType(Some(st), List(k), vdt))
-                    case _ => None
-                  }
-                case "update" if margs.length == 2 =>
-                  margs(0).e match {
-                    case Lit(JStr(k)) if st.fieldNames.contains(k) =>
-                      new EBody(ArrayType(st(k).dataType, containsNull = true),
-                        margs(1).e).dt
-                        .flatMap(bdt => setPathStructType(Some(st), List(k), bdt))
-                    case _ => None
-                  }
-                case _ => None
-              } catch { case _: LowerException => None }
-            case Some(st: StructType)
-                if (m == "merge" || m == "deep_merge") && margs.nonEmpty &&
-                   !margs.exists(_.name.nonEmpty) =>
-              // mirror of structMergeMethod (shared shape union)
-              try margs.foldLeft(Option(st)) { (acc, a) =>
-                acc.flatMap(x => inferDt(a.e) match {
-                  case Some(ys: StructType) =>
-                    Some(mergeStructType(x, ys, m == "deep_merge"))
-                  case _ => None
-                })
-              } catch { case _: LowerException => None }
-            case Some(st: StructType) if structObjOps(m) =>
-              structObjReturn(m, st, margs)
-            case Some(at: ArrayType) if (m == "pick" || m == "omit") =>
-              at.elementType match {
-                case st: StructType =>
-                  structObjReturn(m, st, margs)
-                    .map(ArrayType(_, containsNull = true))
-                case _ => None
-              }
-            case Some(at: ArrayType) if arrayOps(m) => arrayMethodReturn(m, at)
-            case Some(mt: MapType) if mapOps(m)     =>
-              mapMethodReturn(m, mt).orElse(mapMethodArgReturn(m, mt, margs))
-            case _                                  => scalarFnReturn(m)
-          }
-          case _                  => None
-        }
-      }
-    case _ => None
-  }
-
-  /** ARG-typed map results — merge/deep_merge/defaults/set — typed by
-    * the same vt-unification [[mapMethod]] performs, so chains over
-    * them stay statically known for downstream dispatch (the operator
-    * `has`, nested method calls). Body-typed lanes (transform_values /
-    * update) still report None; deep_merge's object-valued shapes
-    * report None to mirror its doc-mode bail. */
-  private def mapMethodArgReturn(
-      m: String, mt: MapType, args: Vector[Arg]): Option[DataType] = {
-    if (mt.keyType != StringType) return None
-    def objLike(d: DataType): Boolean =
-      d.isInstanceOf[StructType] || d.isInstanceOf[MapType]
-    def out(u: DataType) = MapType(StringType, u, valueContainsNull = true)
-    // the arg's own value type: a string-keyed map's valueType, or a
-    // struct literal's fields unified together
-    def argVt(i: Int): Option[DataType] = inferDt(args(i).e).flatMap {
-      case MapType(StringType, ov, _) => Some(ov)
-      case st: StructType =>
-        st.fields.map(_.dataType).toList match {
-          case Nil    => Some(mt.valueType) // {} merges type-neutrally
-          case h :: t => t.foldLeft(Option(h))((a, d) => a.flatMap(unifySameKind(_, d)))
-        }
-      case _ => None
-    }
-    def unifyAll: Option[DataType] =
-      args.indices.foldLeft(Option(mt.valueType)) { (acc, i) =>
-        acc.flatMap(u => argVt(i).flatMap(unifySameKind(u, _)))
-      }
-    m match {
-      case "merge" if args.nonEmpty => unifyAll.map(out)
-      case "deep_merge" if args.nonEmpty =>
-        // mirror of the generalized lowering: fold the schema-directed
-        // value union [[Lower.deepMergeType]] performs; args are
-        // string-keyed maps or one-shape struct literals
-        def argM(i: Int): Option[MapType] = inferDt(args(i).e).flatMap {
-          case m2 @ MapType(StringType, _, _) => Some(m2)
-          case st: StructType =>
-            st.fields.map(_.dataType).distinct.toSeq match {
-              case Seq(one) =>
-                Some(MapType(StringType, one, valueContainsNull = true))
-              case _ => None
-            }
-          case _ => None
-        }
-        args.indices.foldLeft(Option(mt: MapType)) { (acc, i) =>
-          for {
-            a  <- acc
-            o  <- argM(i)
-            t  <- Lower.deepMergeType(a, o)
-            m2 <- Some(t).collect { case m3: MapType => m3 }
-          } yield m2
-        }
-      case "defaults" if args.length == 1 => unifyAll.map(out)
-      case "set_path" if args.length == 2 =>
-        // mirror of the deep map-lane set_path: one-segment paths are
-        // set(k, v); deeper paths share [[setPathDeepType]] with the
-        // lowering (struct AND nested-map crossings)
-        args(0).e match {
-          case Lit(JStr(p)) if !p.contains('.') =>
-            inferDt(args(1).e).flatMap(unifySameKind(mt.valueType, _)).map(out)
-          case Lit(JStr(p)) if p.nonEmpty && !p.split('.').exists(_.isEmpty) =>
-            inferDt(args(1).e).flatMap(vdt =>
-              setPathDeepType(Some(mt), p.split('.').toList, vdt))
-          case _ => None
-        }
-      case "set" if args.length == 2 =>
-        inferDt(args(1).e).flatMap(unifySameKind(mt.valueType, _)).map(out)
-      // body-typed lanes, via the same EBody scope mapMethod uses; a
-      // body that cannot even scope (multi-param lambda) types as None
-      // instead of aborting the type walk
-      case "transform_values" if args.length == 1 =>
-        try new EBody(ArrayType(mt.valueType, containsNull = true), args(0).e)
-          .dt.map(out)
-        catch { case _: LowerException => None }
-      case "update" if args.length == 2 =>
-        try new EBody(ArrayType(mt.valueType, containsNull = true), args(1).e)
-          .dt.flatMap(unifySameKind(mt.valueType, _)).map(out)
-        catch { case _: LowerException => None }
-      case _ => None
-    }
-  }
-
-  /** Static return type of an array-pipeline method, for chain typing
-    * (body-dependent lanes — map/flat_map — report None). */
-  private def arrayMethodReturn(m: String, at: ArrayType): Option[DataType] = m match {
-    case "count" | "len" | "length"            => Some(LongType)
-    case "sum" =>
-      if (integralDt(at.elementType)) Some(LongType)
-      else if (numericDt(at.elementType)) Some(DoubleType) else None
-    case "avg" | "mean"                        => Some(DoubleType)
-    case "min" | "max" | "nth" => Some(at.elementType)
-    // first/last: element no-arg, array with n — args not visible here
-    case "any" | "exists" | "all" | "includes" | "contains" |
-         "has" | "missing" => Some(BooleanType)
-    case "join"                                => Some(StringType)
-    case "filter" | "find" | "find_all" | "where" | "compact" | "take" |
-         "skip" | "drop" | "unique" | "distinct" | "reverse" |
-         "sort" | "sort_by" |
-         "collect" | "slice" | "remove" | "take_while" | "takewhile" |
-         "drop_while" | "dropwhile" | "diff" | "intersect" => Some(at)
-    case "append" | "prepend" | "union" => // lane may widen within its kind
-      Some(at.copy(containsNull = true))
-    case "index" | "index_of" => Some(LongType)
-    case "indices_of" => Some(ArrayType(LongType))
-    // pair lanes: the element kind is right, the width may widen to
-    // the arg's unified type (the walker contract)
-    case "zip" | "zip_longest" =>
-      Some(ArrayType(ArrayType(at.elementType, containsNull = true)))
-    case "find_first" | "find_one" => Some(at.elementType)
-    case "from_pairs" => at.elementType match {
-      case ArrayType(t, _) => Some(MapType(StringType, t, valueContainsNull = true))
-      case _               => None
-    }
-    case "window" | "chunk" | "batch" =>
-      Some(ArrayType(at.copy(containsNull = true)))
-    case "pairwise" =>
-      Some(ArrayType(ArrayType(at.elementType, containsNull = true)))
-    case "lag" | "lead" | "diff_window" | "pct_change" | "zscore" |
-         "cum_max" | "cum_min" | "cummax" | "cummin" |
-         "rolling_sum" | "rolling_avg" | "rolling_min" | "rolling_max" =>
-      if (numericDt(at.elementType)) Some(ArrayType(DoubleType)) else None
+      val b = inferDt(base)
+      try fieldChain(b.fold(lit(null))(lit(null).cast(_)), b, steps)._2
+      catch { case _: LowerException => None }
     case _ => None
   }
 

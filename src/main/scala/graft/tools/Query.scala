@@ -8,8 +8,8 @@ import org.apache.spark.sql.SparkSession
   *   sbt "runMain graft.tools.Query '$.orders{o_orderstatus == \"O\"}
   *     .sort_by(-o_totalprice).take(5).map({id: o_orderkey})'"
   *
-  * Prints whether the expression ran through the Catalyst lowering or
-  * the document-mode interpreter, then the result rows.
+  * Prints the rung the expression runs on (`relational`, `rowwise` or
+  * `document`, as [[graft.Graft.backend]] picks it), then the result rows.
   */
 object Query {
   def main(args: Array[String]): Unit = {
@@ -26,8 +26,7 @@ object Query {
       .appName("graft-query")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    val backend = if (graft.Graft.lowers(spark, dir, expr)) "catalyst" else "interpreter"
-    println(s"[query] backend=$backend")
+    println(s"[query] backend=${graft.Graft.backend(spark, dir, expr)}")
     graft.Graft.query(spark, dir, expr).show(50, truncate = false)
     spark.stop()
   }

@@ -1511,4 +1511,67 @@ class GraftCompileSpec extends NoCachedLeftovers with BeforeAndAfterAll {
       assert(cls == "low" || cls == "high")
     }
   }
+
+  /** Rows as canonical JSON texts: keys sorted, integral doubles as
+    * longs, so a lowered frame and the interpreter's rows compare. */
+  private def canonRows(df: org.apache.spark.sql.DataFrame): Vector[String] = {
+    def canon(v: JValue): String = v match {
+      case jexpr.JObj(fs) => fs.toVector.sortBy(_._1)
+        .map { case (k, x) => s""""$k":${canon(x)}""" }.mkString("{", ",", "}")
+      case jexpr.JArr(xs) => xs.map(canon).mkString("[", ",", "]")
+      case jexpr.JFloat(f) if f.isWhole && math.abs(f) < 1e15 => f.toLong.toString
+      case other => other.render
+    }
+    df.toJSON.collect().toVector.map(s => canon(JValue.parse(s))).sorted
+  }
+
+  /** `e` lowers, and its rows equal the document interpreter's. */
+  private def lowersLikeDoc(e: String): Unit = {
+    val low = graft.plans.Lower.tryCompile(e, t => graft.core.Tables(spark, sfDir, t))
+    assert(low.isDefined, s"should lower: $e")
+    val got = canonRows(low.get)
+    assert(got.nonEmpty && got == canonRows(Graft.docFallback(spark, sfDir, e)), e)
+  }
+
+  // Chain types cross an expression boundary when a parenthesised chain
+  // is the receiver of further steps, or the operand of `has` or of
+  // truthiness: the outer lowering dispatches on the inner chain's type.
+
+  test("a struct method's result type crosses an expression boundary") {
+    lowersLikeDoc(
+      """$.nation.map({k: n_nationkey,
+        |  vs: (({a: n_name, b: n_regionkey, c: n_nationkey}).omit("a")).values(),
+        |  h: (({a: n_name, b: n_regionkey}).pick("a")) has "a",
+        |  n: "y" if ({a: n_name, b: n_regionkey}).pick("b").values().sum() else "n"})""".stripMargin)
+  }
+
+  test("a struct merge's result type crosses an expression boundary") {
+    lowersLikeDoc(
+      """$.nation.map({k: n_nationkey,
+        |  ks: (({a: n_name}).merge({b: n_regionkey})).keys(),
+        |  h: (({a: n_name}).deep_merge({b: n_regionkey})) has "b"})""".stripMargin)
+  }
+
+  test("a rendered value's string type crosses an expression boundary") {
+    lowersLikeDoc(
+      """$.nation.map({k: n_nationkey,
+        |  h: (n_regionkey.to_string()) has "1",
+        |  t: (n_regionkey.type()) has "num"})""".stripMargin)
+  }
+
+  test("a path read's result type crosses an expression boundary") {
+    lowersLikeDoc(
+      """$.nation.map({k: n_nationkey,
+        |  h: (({a: {b: n_name}}).get_path("a.b")) has "ION_1",
+        |  n: "y" if ({a: n_name}).has_path("a") else "n"})""".stripMargin)
+  }
+
+  test("a mapped array's element type crosses an expression boundary") {
+    // `map` and `flat_map` report their body's type, so a computed
+    // receiver over them keeps its array lane
+    lowersLikeDoc(
+      """$.nation.map({k: n_nationkey,
+        |  n: (n_name.split(" ").map(lambda w: w.len())).sum(),
+        |  f: (n_name.split(" ").flat_map(lambda w: w.split("_"))) has "1"})""".stripMargin)
+  }
 }

@@ -466,23 +466,63 @@ class RowwiseFallbackSpec extends SparkSpec {
     }
   }
 
-  test("the scan filter sits below the spread exchange and the interpreter") {
-    import org.apache.spark.sql.execution.{FilterExec, GenerateExec, SparkPlan}
+  import org.apache.spark.sql.execution.SparkPlan
+
+  /** Every node of an executed plan, adaptive stages included. */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = {
     import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    p +: (p match {
       case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
       case q: QueryStageExec        => Seq(q.plan)
       case _                        => p.children
     }).flatMap(nodes)
-    def executed(ds: org.apache.spark.sql.Dataset[_]): SparkPlan = {
-      ds.collect()
-      ds.queryExecution.executedPlan
+  }
+
+  private def executed(ds: org.apache.spark.sql.Dataset[_]): SparkPlan = {
+    ds.collect()
+    ds.queryExecution.executedPlan
+  }
+
+  test("a filter that cannot raise is pushed to the parquet reader") {
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val e = s"$$.customer{c_acctbal > 1000}.map({k: c_custkey, n: c_name.words().len().rec(@)})"
+    assert(Graft.backend(spark, sf, e) == "rowwise")
+    val plan = Graft.rowwisePlan(e).get
+    val scans = nodes(executed(Graft.rowwiseJson(
+      graft.core.Tables(spark, sf, plan.table), plan))).collect {
+      case s: FileSourceScanExec => s.metadata.getOrElse("PushedFilters", "")
     }
+    assert(scans.exists(_.contains("c_acctbal")), s"pushed filters: $scans")
+    val got = rowsOf(Graft.rowwiseCompile(spark, sf, e).get)
+    assert(got.nonEmpty && got == rowsOf(Graft.docFallback(spark, sf, e)))
+  }
+
+  test("only the conjuncts before the first raising one go bare") {
+    // the interpreter's `and` stops at its first falsy operand, so a row
+    // it would raise on is one whose raising operand it reaches
+    val div = "10 / (s_acctbal - s_acctbal) > 1"
+    Seq(s"{s_suppkey < 4 and $div}" -> suppliers("s_suppkey < 4"),
+        s"{$div and s_suppkey < 4}" -> 10L,
+        s"{$div}{s_suppkey < 4}" -> 10L).foreach { case (f, want) =>
+      val e = s"$$.supplier$f.map({k: s_suppkey, $words})"
+      val errored = Graft.rowwiseCounters(spark).errored
+      val before = errored.value
+      val n = SparkSpec.interpreterRowsDuring(spark) {
+        assert(Graft.rowwiseCompile(spark, sf, e).get.count() == 0, e)
+      }
+      assert(n == want && errored.value - before == want,
+        s"evaluated $n, errored ${errored.value - before}, want $want: $e")
+    }
+  }
+
+  test("the scan filter sits below the spread exchange and the interpreter") {
+    import org.apache.spark.sql.execution.{FilterExec, GenerateExec}
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
     // `events` is the table the spread repartitions at this scale
-    Seq("events" -> "{event_id < 50}.map({k: event_id, n: props.words().len().rec(@)})",
-        "supplier" -> s"{s_suppkey < 4}.map({k: s_suppkey, $words})").foreach {
-      case (table, chain) =>
+    Seq(("events", "{event_id < 50}.map({k: event_id, n: props.words().len().rec(@)})",
+         "event_id"),
+        ("supplier", s"{s_suppkey < 4}.map({k: s_suppkey, $words})", "s_suppkey")).foreach {
+      case (table, chain, key) =>
         val plan = Graft.rowwisePlan(s"$$.$table$chain").get
         val src = graft.core.Tables.spreadCompute(graft.core.Tables(spark, sf, table))
         val filtered = nodes(executed(Graft.rowwiseJson(src, plan)))
@@ -493,7 +533,7 @@ class RowwiseFallbackSpec extends SparkSpec {
           unfiltered.count(_.isInstanceOf[ShuffleExchangeLike]), table)
         if (table == "events") assert(exchanges.nonEmpty, "events should spread")
         val filter = filtered.collectFirst {
-          case f: FilterExec if f.condition.toString.contains("try_or_null") => f
+          case f: FilterExec if f.condition.references.exists(_.name == key) => f
         }
         assert(filter.isDefined, s"no scan filter in ${filtered.head}")
         def above(p: SparkPlan): Boolean = nodes(p).exists(_ eq filter.get)
