@@ -378,65 +378,17 @@ object Graft {
       org.apache.spark.sql.Encoders.STRING))
   }
 
-  /** Tables named as `$.<name>` anywhere in the expression. */
+  /** Tables named as `$.<name>` anywhere in the expression, lambda
+    * bodies included (`$` is never rebound), plus the path-head tables
+    * of `patch $ {t[*]…}`, whose table is named in the patch PATH. */
   private def referencedTables(e: Expr): Set[String] = {
     import Expr._
-    def walk(x: Expr): Set[String] = x match {
-      case Chain(Root, steps) =>
-        val head = steps.headOption.collect { case Step.Field(t) => t }.toSet
-        head ++ steps.flatMap(walkStep)
-      case Chain(b, steps)  => walk(b) ++ steps.flatMap(walkStep)
-      case Pipe(b, steps)   => walk(b) ++ steps.flatMap {
-        case PipeStep.Forward(f) => walk(f); case _ => Set.empty[String] }
-      case Binary(_, l, r)  => walk(l) ++ walk(r)
-      case Unary(_, i)      => walk(i)
-      case IfElse(c, t, f)  => walk(c) ++ walk(t) ++ walk(f)
-      case TryElse(b, d)    => walk(b) ++ walk(d)
-      case Let(bs, body)    => bs.flatMap(b => walk(b._2)).toSet ++ walk(body)
-      case Comp(_, k, v, cls, cond) =>
-        walk(k) ++ v.toSeq.flatMap(walk) ++ cls.flatMap(c => walk(c._2)) ++
-          cond.toSeq.flatMap(walk)
-      case ObjLit(fs)  => fs.flatMap {
-        case ObjField.KV(k, v, w) => walk(k) ++ walk(v) ++ w.toSeq.flatMap(walk)
-        case ObjField.OptKV(k, v) => walk(k) ++ walk(v)
-        case ObjField.Dyn(k, v)   => walk(k) ++ walk(v)
-        case ObjField.Spread(s)   => walk(s)
-        case ObjField.SpreadDeep(s) => walk(s)
-        case _ => Set.empty[String]
-      }.toSet
-      case ArrLit(es) => es.flatMap {
-        case ArrElem.One(a) => walk(a); case ArrElem.Spread(a) => walk(a) }.toSet
-      case GlobalCall(_, args) => args.flatMap(a => walk(a.e)).toSet
-      case Patch(t, fs) =>
-        // `patch $ {t[*]…}` names its table in the patch PATH — collect
-        // path-head fields that are actual tables (plus any `$.x` in
-        // WildIf guards) so the document fallback materialises them
-        val pathTables = t match {
-          case Root => fs.flatMap(_.path.headOption.collect {
-            case PatchStep.Field(n) if Tables.names.contains(n) => n })
-          case _ => Vector.empty
-        }
-        walk(t) ++ pathTables ++ fs.flatMap(f =>
-          f.value.toSeq.flatMap(walk) ++ f.when.toSeq.flatMap(walk) ++
-          f.path.flatMap {
-            case PatchStep.WildIf(p) => walk(p)
-            case _                   => Set.empty[String] })
-      case Cast(i, _)   => walk(i)
-      case KindIs(i, _, _) => walk(i)
-      case FString(ps)  => ps.flatMap {
-        case FPart.Interp(i, _) => walk(i); case _ => Set.empty[String] }.toSet
-      case _ => Set.empty
-    }
-    def walkStep(s: Expr.Step): Set[String] = s match {
-      case Step.Method(_, args)     => args.flatMap(a => walk(a.e)).toSet
-      case Step.DeepMethod(_, args) => args.flatMap(a => walk(a.e)).toSet
-      case Step.Index(i)            => walk(i)
-      case Step.DynField(i)         => walk(i)
-      case Step.InlineFilter(p)     => walk(p)
-      case Step.MapShape(p, sh)     => p.toSeq.flatMap(walk).toSet ++ walk(sh)
-      case _                        => Set.empty
-    }
-    walk(e)
+    Expr.descendants(e).flatMap {
+      case Chain(Root, Step.Field(t) +: _) => Vector(t)
+      case Patch(Root, fs) => fs.flatMap(_.path.headOption.collect {
+        case PatchStep.Field(n) if Tables.names.contains(n) => n })
+      case _ => Vector.empty
+    }.toSet
   }
 
   /** True when a walk/walk_pre/rec transform argument provably maps
@@ -468,50 +420,6 @@ object Graft {
   }
 
   /** Any `$` (Root) reference anywhere in the expression tree. */
-  private def containsRoot(e: Expr): Boolean = {
-    import Expr._
-    def any(x: Expr): Boolean = x match {
-      case Root             => true
-      case Chain(b, steps)  => any(b) || steps.exists(stepAny)
-      case Pipe(b, steps)   => any(b) || steps.exists {
-        case PipeStep.Forward(f) => any(f); case _ => false }
-      case Binary(_, l, r)  => any(l) || any(r)
-      case Unary(_, i)      => any(i)
-      case IfElse(c, t, f)  => any(c) || any(t) || any(f)
-      case TryElse(b, d)    => any(b) || any(d)
-      case Let(bs, body)    => bs.exists(b => any(b._2)) || any(body)
-      case Lambda(_, b)     => any(b)
-      case Comp(_, k, v, cls, cond) =>
-        any(k) || v.exists(any) || cls.exists(c => any(c._2)) || cond.exists(any)
-      case ObjLit(fs) => fs.exists {
-        case ObjField.KV(k, v, w)   => any(k) || any(v) || w.exists(any)
-        case ObjField.OptKV(k, v)   => any(k) || any(v)
-        case ObjField.Dyn(k, v)     => any(k) || any(v)
-        case ObjField.Spread(s)     => any(s)
-        case ObjField.SpreadDeep(s) => any(s)
-        case _                      => false
-      }
-      case ArrLit(es) => es.exists {
-        case ArrElem.One(a) => any(a); case ArrElem.Spread(a) => any(a) }
-      case GlobalCall(_, args) => args.exists(a => any(a.e))
-      case Patch(t, fs) => any(t) || fs.exists(f =>
-        f.value.exists(any) || f.when.exists(any))
-      case Cast(i, _)      => any(i)
-      case KindIs(i, _, _) => any(i)
-      case FString(ps) => ps.exists {
-        case FPart.Interp(i, _) => any(i); case _ => false }
-      case _ => false
-    }
-    def stepAny(s: Expr.Step): Boolean = s match {
-      case Step.Method(_, args)     => args.exists(a => any(a.e))
-      case Step.DeepMethod(_, args) => args.exists(a => any(a.e))
-      case Step.Index(i)            => any(i)
-      case Step.DynField(i)         => any(i)
-      case Step.InlineFilter(p)     => any(p)
-      case Step.MapShape(p, sh)     => p.exists(any) || any(sh)
-      case _                        => false
-    }
-    any(e)
-  }
+  private def containsRoot(e: Expr): Boolean = Expr.exists(e)(_ == Expr.Root)
 
 }

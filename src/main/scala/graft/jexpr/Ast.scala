@@ -59,6 +59,21 @@ object Expr {
     final case class MapShape(pred: Option[Expr], shape: Expr) extends Step // [* if p] => shape
     case object Optional extends Step                            // ?
     case object ExactlyOne extends Step                          // !
+
+    /** `s` rebuilt with `f` applied to each argument, index, filter
+      * and shape expression — the step half of [[Expr.mapChildren]]. */
+    def mapChildren(s: Step)(f: Expr => Expr): Step = s match {
+      case DynField(e)        => DynField(f(e))
+      case Method(n, as)      => Method(n, as.map(a => a.copy(e = f(a.e))))
+      case DeepMethod(n, as)  => DeepMethod(n, as.map(a => a.copy(e = f(a.e))))
+      case Index(e)           => Index(f(e))
+      case InlineFilter(p)    => InlineFilter(f(p))
+      case MapShape(p, shape) => MapShape(p.map(f), f(shape))
+      case _: Field | _: Descendant | _: Slice | Optional | ExactlyOne => s
+    }
+
+    /** Direct sub-expressions of `s`, in [[mapChildren]]'s order. */
+    def children(s: Step): Vector[Expr] = collected(mapChildren(s)(_))
   }
 
   sealed trait PipeStep
@@ -108,5 +123,73 @@ object Expr {
     case object Wild extends PatchStep
     final case class WildIf(pred: Expr) extends PatchStep
     final case class Descendant(name: String) extends PatchStep
+  }
+
+  // ── traversal ──────────────────────────────────────────────────────
+  // The one list of where a node keeps its sub-expressions (binder
+  // bodies included); every walker over the AST derives from it, in
+  // the way Catalyst's TreeNode derives its transforms from `children`.
+
+  /** `e` rebuilt with `f` applied to every direct sub-expression:
+    * lambda, let and comprehension bodies, pipe stages, patch targets,
+    * values, `when` guards and `[* if p]` path guards, f-string
+    * interpolations, object and array elements, and chain steps'
+    * arguments ([[Step.mapChildren]]). Names are not expressions, so
+    * `Ident`, shorthand object fields and bind stages stay as they are. */
+  def mapChildren(e: Expr)(f: Expr => Expr): Expr = e match {
+    case Root | Current | _: Lit | _: Ident => e
+    case FString(ps) => FString(ps.map {
+      case FPart.Interp(x, fmt) => FPart.Interp(f(x), fmt)
+      case text                 => text
+    })
+    case ArrLit(es) => ArrLit(es.map {
+      case ArrElem.One(x)    => ArrElem.One(f(x))
+      case ArrElem.Spread(x) => ArrElem.Spread(f(x))
+    })
+    case ObjLit(fs) => ObjLit(fs.map {
+      case ObjField.KV(k, v, w)   => ObjField.KV(f(k), f(v), w.map(f))
+      case ObjField.OptKV(k, v)   => ObjField.OptKV(f(k), f(v))
+      case ObjField.Dyn(k, v)     => ObjField.Dyn(f(k), f(v))
+      case ObjField.Spread(x)     => ObjField.Spread(f(x))
+      case ObjField.SpreadDeep(x) => ObjField.SpreadDeep(f(x))
+      case short                  => short
+    })
+    case Lambda(ps, body) => Lambda(ps, f(body))
+    case Let(bs, body)    => Let(bs.map { case (n, x) => (n, f(x)) }, f(body))
+    case Comp(kind, k, v, cls, cond) =>
+      Comp(kind, f(k), v.map(f), cls.map { case (vs, src) => (vs, f(src)) }, cond.map(f))
+    case GlobalCall(n, as) => GlobalCall(n, as.map(a => a.copy(e = f(a.e))))
+    case Patch(t, fs) => Patch(f(t), fs.map(pf => PatchField(
+      pf.path.map {
+        case PatchStep.WildIf(p) => PatchStep.WildIf(f(p))
+        case step                => step
+      }, pf.value.map(f), pf.when.map(f))))
+    case Chain(b, steps)  => Chain(f(b), steps.map(Step.mapChildren(_)(f)))
+    case Unary(op, x)     => Unary(op, f(x))
+    case Binary(op, l, r) => Binary(op, f(l), f(r))
+    case IfElse(c, t, el) => IfElse(f(c), f(t), f(el))
+    case TryElse(b, d)    => TryElse(f(b), f(d))
+    case KindIs(x, k, n)  => KindIs(f(x), k, n)
+    case Cast(x, to)      => Cast(f(x), to)
+    case Pipe(b, steps) => Pipe(f(b), steps.map {
+      case PipeStep.Forward(x) => PipeStep.Forward(f(x))
+      case bind                => bind
+    })
+  }
+
+  /** Direct sub-expressions of `e`, in [[mapChildren]]'s order. */
+  def children(e: Expr): Vector[Expr] = collected(mapChildren(e)(_))
+
+  /** `e` and every expression below it, pre-order. */
+  def descendants(e: Expr): Iterator[Expr] =
+    Iterator.single(e) ++ children(e).iterator.flatMap(descendants)
+
+  /** True when `p` holds for `e` or any expression below it. */
+  def exists(e: Expr)(p: Expr => Boolean): Boolean = descendants(e).exists(p)
+
+  private def collected(walk: (Expr => Expr) => Any): Vector[Expr] = {
+    val out = Vector.newBuilder[Expr]
+    walk { x => out += x; x }
+    out.result()
   }
 }

@@ -84,7 +84,7 @@ object Interp {
         case Ident(n) => env.rootAliases.contains(n)
         case _        => false
       })
-      val write = if (liftable) chainWrite(base, steps, env) else None
+      val write = if (liftable) chainWrite(steps, env) else None
       write match {
         case Some((pf, rest)) =>
           val patched = PatchEval.apply(eval(base, env), Vector(pf), env)
@@ -208,7 +208,7 @@ object Interp {
         val all = s0 +: stageSteps
         if (all.length < 2) return None
         val pfs = all.map { s =>
-          chainWrite(Ident(x), s, env) match {
+          chainWrite(s, env) match {
             case Some((pf, rest)) if rest.isEmpty => pf
             case _                                => return None
           }
@@ -224,7 +224,7 @@ object Interp {
     * ordinary builtin dispatch, mirroring the reference's rooted-chain
     * restriction on the sugar.
     */
-  private def chainWrite(base: Expr, steps: Vector[Step], env: Env): Option[(PatchField, Vector[Step])] = {
+  private def chainWrite(steps: Vector[Step], env: Env): Option[(PatchField, Vector[Step])] = {
     val wi = steps.indexWhere {
       case Step.Method("set", as)    => as.length == 1
       case Step.Method("modify", as) => as.length == 1
@@ -322,7 +322,7 @@ object Interp {
   }
 
   private def evalPipe(base: JValue, steps: Vector[PipeStep], env: Env,
-                       rolled0: Boolean = false): JValue = {
+                       rolled0: Boolean): JValue = {
     var v = base
     var e = env
     var rolled = rolled0
@@ -356,7 +356,7 @@ object Interp {
           if (!rolled) None
           else expr0 match {
             case Chain(Current, s) =>
-              chainWrite(Current, s, e.withCurrent(v)).map { case (pf, rest) =>
+              chainWrite(s, e.withCurrent(v)).map { case (pf, rest) =>
                 val ec = e.withCurrent(v)
                 val patched = PatchEval.apply(v, Vector(pf), ec)
                 (if (rest.isEmpty) patched else evalChain(patched, rest, ec),

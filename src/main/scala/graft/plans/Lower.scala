@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ArrayType, DataType, DecimalType, MapType, NumericType, StructField, StructType}
 import org.apache.spark.sql.types.{BooleanType, ByteType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType}
 import graft.jexpr.{Expr, JArr, JBool, JFloat, JInt, JNull, JObj, JStr, JValue, Parser}
-import Expr._
+import Expr.{exists => _, _}
 
 /** Relational lowering: compiles a jetro pipeline expression into a
   * Catalyst DataFrame plan (SURVEY §7.0 mode 1).
@@ -488,59 +488,15 @@ object Lower {
     "rolling_max", "lag", "lead", "diff_window", "pct_change",
     "cum_max", "cum_min", "accumulate", "zscore", "implode")
 
-  /** Expression children for the spread decision's FULL descent —
-    * unlike [[rewrite]] this enters lambda bodies, comprehension
-    * clauses and patch fields, because a heavy HOF inside a map shape
-    * or patch value is exactly the per-row cost the spread targets. */
-  private def spreadChildren(e: Expr): Seq[Expr] = e match {
-    case Chain(b, steps)   => b +: steps.flatMap(stepExprs)
-    case Pipe(b, steps)    => b +: steps.collect { case PipeStep.Forward(f) => f }
-    case Binary(_, l, r)   => Seq(l, r)
-    case Unary(_, i)       => Seq(i)
-    case IfElse(c, t, f)   => Seq(c, t, f)
-    case TryElse(b, d)     => Seq(b, d)
-    case Lambda(_, b)      => Seq(b)
-    case Let(bs, bd)       => bs.map(_._2) :+ bd
-    case Comp(_, k, v, cls, cond) => (k +: cls.map(_._2)) ++ v ++ cond
-    case GlobalCall(_, as) => as.map(_.e)
-    case Cast(i, _)        => Seq(i)
-    case KindIs(i, _, _)   => Seq(i)
-    case FString(ps)       => ps.collect { case FPart.Interp(i, _) => i }
-    case ArrLit(es)        => es.map {
-      case ArrElem.One(a) => a
-      case ArrElem.Spread(a) => a
-    }
-    case ObjLit(fs)        => fs.flatMap {
-      case ObjField.KV(k, v, w)   => Seq(k, v) ++ w
-      case ObjField.OptKV(k, v)   => Seq(k, v)
-      case ObjField.Dyn(k, v)     => Seq(k, v)
-      case ObjField.Spread(s)     => Seq(s)
-      case ObjField.SpreadDeep(s) => Seq(s)
-      case _                      => Nil
-    }
-    case Patch(t, fields)  => t +: fields.flatMap(f =>
-      f.value.toSeq ++ f.when.toSeq ++
-        f.path.collect { case PatchStep.WildIf(p) => p })
-    case _                 => Nil
-  }
-
-  private def stepExprs(s: Step): Seq[Expr] = s match {
-    case Step.Method(_, as)     => as.map(_.e)
-    case Step.DeepMethod(_, as) => as.map(_.e)
-    case Step.Index(i)          => Seq(i)
-    case Step.DynField(i)       => Seq(i)
-    case Step.InlineFilter(p)   => Seq(p)
-    case Step.MapShape(p, sh)   => p.toSeq :+ sh
-    case _                      => Nil
-  }
-
   private def hasHeavy(e: Expr): Boolean = e match {
     case _: Patch => true // rebuilds the written container per row
     case Chain(_, steps) if steps.exists {
         case Step.Method(n, _) => heavyMethods(n)
         case _                 => false
       } => true
-    case other => spreadChildren(other).exists(hasHeavy)
+    // full descent, binder bodies included: a heavy HOF inside a map
+    // shape or patch value is exactly the per-row cost the spread targets
+    case other => Expr.children(other).exists(hasHeavy)
   }
 
   /** AST-driven spread decision (r12; replaces the r11 text regex —
@@ -563,7 +519,7 @@ object Lower {
           if (n == "sort" || n == "sort_by") ordered = true
           else if (regroupMethods(n)) { scanning = false; ordered = false }
         case s =>
-          if (scanning && stepExprs(s).exists(hasHeavy)) heavy = true
+          if (scanning && Step.children(s).exists(hasHeavy)) heavy = true
       }
       safe && heavy
     case other => hasHeavy(other)
@@ -796,7 +752,6 @@ object Lower {
         w.guard.fold(w.value)(g =>
           when(coalesce(g, lit(false)), w.value).otherwise(acc))
       }
-    val tcl = new ColLower(Some(df0.schema))
     val replacements: Map[String, Column] = writes.groupBy(_.top).map {
       case (top, ws) if ws.head.nested.isEmpty =>
         top -> foldPath(top, ws)
@@ -1058,53 +1013,16 @@ object Lower {
     }
   }
 
-  /** Bottom-up partial rewrite over the expression tree. */
+  /** Bottom-up partial rewrite over the expression tree. Lambda,
+    * comprehension and patch nodes are rewritten as nodes, but their
+    * bodies are not descended: they rebind `@` or names, so a rewrite
+    * written for the enclosing scope would change their meaning. */
   private def rewrite(e: Expr)(pf: PartialFunction[Expr, Expr]): Expr = {
-    def go(x: Expr): Expr = {
-      val rebuilt = x match {
-        case Chain(b, steps)   => Chain(go(b), steps.map(goStep))
-        case Pipe(b, steps)    => Pipe(go(b), steps.map {
-          case PipeStep.Forward(f) => PipeStep.Forward(go(f))
-          case s                   => s
-        })
-        case Binary(op, l, r)  => Binary(op, go(l), go(r))
-        case Unary(op, i)      => Unary(op, go(i))
-        case IfElse(c, t, f)   => IfElse(go(c), go(t), go(f))
-        case TryElse(b, d)     => TryElse(go(b), go(d))
-        case Let(bs, bd)       => Let(bs.map { case (n, i) => (n, go(i)) }, go(bd))
-        case ObjLit(fs)        => ObjLit(fs.map {
-          case ObjField.KV(k, v, w)   => ObjField.KV(go(k), go(v), w.map(go))
-          case ObjField.OptKV(k, v)   => ObjField.OptKV(go(k), go(v))
-          case ObjField.Dyn(k, v)     => ObjField.Dyn(go(k), go(v))
-          case ObjField.Spread(s)     => ObjField.Spread(go(s))
-          case ObjField.SpreadDeep(s) => ObjField.SpreadDeep(go(s))
-          case f                      => f
-        })
-        case ArrLit(es) => ArrLit(es.map {
-          case ArrElem.One(a)    => ArrElem.One(go(a))
-          case ArrElem.Spread(a) => ArrElem.Spread(go(a))
-        })
-        case GlobalCall(n, args) => GlobalCall(n, args.map(a => Arg(a.name, go(a.e))))
-        case Cast(i, t)          => Cast(go(i), t)
-        case KindIs(i, k, neg)   => KindIs(go(i), k, neg)
-        case FString(ps)         => FString(ps.map {
-          case FPart.Interp(i, f) => FPart.Interp(go(i), f)
-          case p                  => p
-        })
-        case leaf => leaf
-      }
-      pf.applyOrElse(rebuilt, identity[Expr])
+    val rebuilt = e match {
+      case _: Lambda | _: Comp | _: Patch => e
+      case _                              => Expr.mapChildren(e)(rewrite(_)(pf))
     }
-    def goStep(s: Step): Step = s match {
-      case Step.Method(n, args)     => Step.Method(n, args.map(a => Arg(a.name, go(a.e))))
-      case Step.DeepMethod(n, args) => Step.DeepMethod(n, args.map(a => Arg(a.name, go(a.e))))
-      case Step.Index(i)            => Step.Index(go(i))
-      case Step.DynField(i)         => Step.DynField(go(i))
-      case Step.InlineFilter(p)     => Step.InlineFilter(go(p))
-      case Step.MapShape(p, sh)     => Step.MapShape(p.map(go), go(sh))
-      case other                    => other
-    }
-    go(e)
+    pf.applyOrElse(rebuilt, identity[Expr])
   }
 
   // ── stage lowering ────────────────────────────────────────────────────
@@ -1139,9 +1057,9 @@ object Lower {
   }
 
   /** True when `pf` matches any node [[rewrite]]'s traversal reaches.
-    * Binder nodes (lambda/let/comprehension/pipe/patch) are visited as
-    * nodes even though their scoped bodies are not descended into, so
-    * their PRESENCE is always detectable. */
+    * Let bindings and bodies and pipe stages are descended; lambda,
+    * comprehension and patch nodes are visited as nodes but their bodies
+    * are not, so their PRESENCE is always detectable. */
   private def exprHas(e: Expr)(pf: PartialFunction[Expr, Unit]): Boolean = {
     var found = false
     rewrite(e) { case x if pf.isDefinedAt(x) => found = true; x }
@@ -1484,7 +1402,7 @@ object Lower {
     // shape, type-checked null-safe literal equality for like. Struct
     // nodes inside ARRAYS are collected with transform+flatten HOFs in
     // element order; null candidates filter to nothing.
-    def checked(c: Column, s2: StructType): Column = {
+    def checked(c: Column): Column = {
       val matched = keys.map { k =>
         if (isLike) c.getField(k) <=> litOf(likeRaw.toMap.apply(k))
         else c.getField(k).isNotNull // null field = absent from the walked doc
@@ -1494,7 +1412,7 @@ object Lower {
     def candIn(c: Column, dt: DataType): Seq[Column] = dt match {
       case s2: StructType =>
         val self =
-          if (hasKeys(s2)) Seq(filter(array(checked(c, s2)), x => x.isNotNull))
+          if (hasKeys(s2)) Seq(filter(array(checked(c)), x => x.isNotNull))
           else Nil
         self ++ s2.fields.toSeq.flatMap { f =>
           if (containsCandidate(f.dataType)) candIn(c.getField(f.name), f.dataType)
@@ -2591,6 +2509,17 @@ object Lower {
     case object Unknown extends Kind
   }
 
+  /** Segment trie of a flat dotted-name shape for unflatten_keys. */
+  private sealed trait UnflatTrie {
+    def leafFields: Vector[String] = this match {
+      case UnflatLeaf(f, _)  => Vector(f)
+      case UnflatBranch(cs)  => cs.flatMap(_._2.leafFields)
+    }
+  }
+  private final case class UnflatLeaf(field: String, dt: DataType) extends UnflatTrie
+  private final case class UnflatBranch(
+      children: Vector[(String, UnflatTrie)]) extends UnflatTrie
+
   /** Scalar expression lowering, parameterised by the (optional) schema
     * of the plan the expression runs against. Bare identifiers are row
     * fields; `@` is not addressable at the row level (only inside
@@ -3372,8 +3301,7 @@ object Lower {
               (transform(nz(c), e => structObjMethod(name, e, st, args)._1), outT)
             else
               (transform(nz(c), e => struct(outEt.fields.toIndexedSeq.map(f =>
-                (if (st.fieldNames.contains(f.name)) e.getField(f.name)
-                 else lit(null).cast(f.dataType)).as(f.name)): _*)), outT)
+                e.getField(f.name).as(f.name)): _*)), outT)
           case other => bail(s"$name over ${other.simpleString} elements — doc mode")
         }
       case "count" =>
@@ -3868,17 +3796,6 @@ object Lower {
     "filter_keys", "filter_values", "transform_keys", "transform_values",
     "flatten_keys", "unflatten_keys")
 
-  /** Segment trie of a flat dotted-name shape for unflatten_keys. */
-  private sealed trait UnflatTrie {
-    def leafFields: Vector[String] = this match {
-      case UnflatLeaf(f, _)  => Vector(f)
-      case UnflatBranch(cs)  => cs.flatMap(_._2.leafFields)
-    }
-  }
-  private final case class UnflatLeaf(field: String, dt: DataType) extends UnflatTrie
-  private final case class UnflatBranch(
-      children: Vector[(String, UnflatTrie)]) extends UnflatTrie
-
   /** Build the unflatten trie in field order (the interpreter's
     * setPath fold order — branches appear where their prefix is first
     * written). Prefix collisions re-order through setPath's coercion
@@ -3971,17 +3888,17 @@ object Lower {
           when(present(n), array(lit(n), c.getField(n)))): _*), _.isNotNull),
           Some(ArrayType(ArrayType(StringType, containsNull = true))))
       case "pick" =>
-        // every named key emits (a miss emits null — Builtins.pick
-        // fieldOf), in ARG order; a NULL receiver stays null (pick's
-        // JNull dispatch row, Builtins.scala:760)
+        // every named key emits in ARG order; a NULL receiver stays null
+        // (pick's JNull dispatch row, Builtins.scala:760). A miss emits
+        // the key with a null value (Builtins.pick fieldOf), which a
+        // struct field cannot carry — the struct lane reads a null field
+        // as absent — so a key the schema lacks stays doc-mode.
         if (args.isEmpty) bail("pick needs key names")
         val picked = args.map(litName)
         val outT = StructType(picked.map(n =>
-          st.find(_.name == n).getOrElse(StructField(n, StringType))))
+          st.find(_.name == n).getOrElse(bail(s"pick of absent key '$n' — doc mode"))))
         (when(c.isNull, lit(null).cast(outT)).otherwise(
-          struct(picked.map(n =>
-            (if (st.fieldNames.contains(n)) c.getField(n)
-             else lit(null).cast(StringType)).as(n)): _*)),
+          struct(picked.map(n => c.getField(n).as(n)): _*)),
           Some(outT))
       case "omit" =>
         if (args.isEmpty) bail("omit needs key names")
@@ -4060,11 +3977,10 @@ object Lower {
           case Lambda(_, _)                    => bail("multi-param lambda at row scope")
           case _                               => None
         }
-        var rowRef = false
-        rewrite(raw) {
-          case i @ Ident(n) if !param.contains(n) => rowRef = true; i
-          case r @ Root                           => rowRef = true; r
-          case cur @ Current if param.isDefined   => rowRef = true; cur
+        // `$` is never rebound, so it is row state wherever it sits
+        val rowRef = Expr.exists(raw)(_ == Root) || exprHas(raw) {
+          case Ident(n) if !param.contains(n) => ()
+          case Current if param.isDefined     => ()
         }
         if (rowRef) bail(s"$m key body references row state — doc mode")
         val f =
@@ -4566,31 +4482,6 @@ object Lower {
     def outMap(v: DataType) = MapType(StringType, v, valueContainsNull = true)
     def entryOf(k: Column, v: Column): Column =
       struct(k.as("key"), v.as("value"))
-
-    /** Like [[mapArg]] but WITHOUT the null→{} read: returns the map
-      * column (meaningful only off the null branch), the unified value
-      * type, and the arg's own null test — deep_merge's null rule
-      * needs the raw nullness. */
-    def mapArgRaw(i: Int): (Column, DataType, Column) = {
-      val e = argE(args, i)
-      inferDt(e) match {
-        case Some(o @ MapType(StringType, ov, _)) =>
-          val u = unifySameKind(vt, ov)
-            .getOrElse(bail(s"$name pairs mixed value kinds"))
-          val cc = colExpr(e)
-          (cc.cast(MapType(StringType, u, valueContainsNull = true)), u, cc.isNull)
-        case Some(st: StructType) =>
-          val u = st.fields.map(_.dataType).foldLeft(vt) { (acc, d) =>
-            unifySameKind(acc, d).getOrElse(bail(s"$name pairs mixed value kinds"))
-          }
-          val sc = colExpr(e)
-          val entries = st.fieldNames.map(f =>
-            struct(lit(f).as("key"), sc.getField(f).cast(u).as("value")))
-          (map_from_entries(array(entries: _*)), u, sc.isNull)
-        case Some(o) => bail(s"$name needs an object arg, got ${o.simpleString}")
-        case None    => bail(s"$name arg type unknown")
-      }
-    }
 
     /** VectorMap `++`: existing keys update IN PLACE, new keys append
       * in the right side's order. Both sides non-null maps of the same

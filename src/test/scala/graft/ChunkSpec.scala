@@ -9,7 +9,6 @@ import graft.ops.Chunk
 class ChunkSpec extends SparkSpec {
 
   private val (size, overlap) = (50, 10)
-  private val step = size - overlap
 
   private lazy val docs = Tables.documents(spark, sf)
     .select("doc_id", "text").orderBy("doc_id")

@@ -331,6 +331,24 @@ class DocColumnSpec extends SparkSpec {
     assert(lowered > skipped, s"lowered=$lowered skipped=$skipped")
   }
 
+  test("a `$` inside a key-lambda body is row state: filter_keys agrees or stays doc-mode") {
+    val t = StructType(Seq(
+      StructField("id", LongType, nullable = false),
+      StructField("a", StructType(Seq(
+        StructField("x", LongType), StructField("y", LongType)))),
+      StructField("flag", BooleanType)))
+    val df = spark.createDataFrame(spark.sparkContext.parallelize(
+      Seq(Row(0L, Row(1L, 2L), true), Row(1L, Row(3L, 4L), false)), 1), t)
+    val doc = struct(t.fieldNames.map(col): _*)
+    val expr = "$.a.filter_keys(lambda k: k == \"x\" or $.flag).keys()"
+    val interp = df.orderBy("id").select(Jetro.jetroEval(expr, to_json(doc)))
+      .collect().toSeq.map(r => JValue.parse(r.getString(0)))
+    assert(interp == Seq(JArr(Vector(JStr("x"), JStr("y"))), JArr(Vector(JStr("x")))))
+    Jetro.evalNative(expr, doc, t).foreach { native =>
+      assert(df.orderBy("id").select(native).collect().toSeq.map(r => toJ(r.get(0))) == interp)
+    }
+  }
+
   test("native doc pipeline plan contains no UDF and stays codegen'd") {
     val doc = struct(docType.fieldNames.map(col): _*)
     val df = docs.select(

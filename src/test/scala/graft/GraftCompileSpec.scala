@@ -1574,4 +1574,16 @@ class GraftCompileSpec extends NoCachedLeftovers with BeforeAndAfterAll {
         |  n: (n_name.split(" ").map(lambda w: w.len())).sum(),
         |  f: (n_name.split(" ").flat_map(lambda w: w.split("_"))) has "1"})""".stripMargin)
   }
+
+  test("pick of a key the struct lacks keeps the key, as the interpreter does") {
+    val e = """$.nation.map({k: n_nationkey, ks: ({a: n_name, b: n_regionkey}).pick("a", "c").keys()})"""
+    val got = canonRows(Graft.query(spark, sfDir, e))
+    assert(got.nonEmpty && got == canonRows(Graft.docFallback(spark, sfDir, e)), e)
+  }
+
+  test("the document rung materialises a table named only inside a lambda body") {
+    val rows = Graft.docFallback(spark, sfDir, "$.nation.map(lambda n: $.region.len())")
+      .collect().toSeq.map(r => String.valueOf(r.get(0)))
+    assert(rows == Seq.fill(25)("5"))
+  }
 }

@@ -56,13 +56,6 @@ class StateFuzzSpec extends SparkSpec {
   private def chunksOf(evs: Vector[GenEv], k: Int): Seq[Vector[GenEv]] =
     evs.grouped((evs.size + k - 1) / k).toSeq
 
-  private def toDf(evs: Seq[GenEv]): DataFrame = {
-    import spark.implicits._
-    evs.toDF()
-      .select(col("event_id"), timestamp_millis(col("tsMs")).as("ts"),
-        col("user_id"), col("event_type"), col("value"))
-  }
-
   private var q = 0
 
   /** Drive `build` over a MemoryStream of events fed as one micro-batch
