@@ -445,29 +445,36 @@ private final class Parser(s: String) {
     }
   }
 
+  // Each bracket form parses its head once and branches on what follows
+  // (`for`, `:` or the closing bracket): re-parsing the head on a miss
+  // would double the parse time at every nesting level.
+
   private def parenOrLambdaOrGen(): Expr = {
     // arrow lambda `(a, b) => e` / gen comp `(e for x in s)` / `(expr)`
-    tryParse {
+    val lambdaParams = tryParse {
       expect("(")
       val params = Vector.newBuilder[String]
       ws()
       if (peekCh != ')') { params += ident(); while (eat(",")) params += ident() }
       expect(")")
       if (!eat("=>")) fail("not a lambda")
-      Lambda(params.result(), expr())
-    }.orElse(tryParse {
-      expect("(")
-      val e = expr()
-      if (!eatKw("for")) fail("not a generator")
-      val (clauses, cond) = compClauses()
-      expect(")")
-      Comp(CompKind.Gen, e, None, clauses, cond)
-    }).getOrElse {
-      expect("(")
-      val e = expr()
-      expect(")")
-      e
+      params.result()
     }
+    lambdaParams match {
+      case Some(ps) => Lambda(ps, expr())
+      case None =>
+        expect("(")
+        val e = expr()
+        if (eatKw("for")) compTail(CompKind.Gen, e, None, ")")
+        else { expect(")"); e }
+    }
+  }
+
+  /** A comprehension's `for` legs and closing bracket, after its head. */
+  private def compTail(kind: CompKind, e: Expr, v: Option[Expr], close: String): Expr = {
+    val (clauses, cond) = compClauses()
+    expect(close)
+    Comp(kind, e, v, clauses, cond)
   }
 
   private def compVars(): Vector[String] = {
@@ -498,65 +505,76 @@ private final class Parser(s: String) {
   }
 
   private def listCompOrArray(): Expr = {
-    tryParse {
-      expect("[")
-      val e = expr()
-      if (!eatKw("for")) fail("not a comprehension")
-      val (clauses, cond) = compClauses()
-      expect("]")
-      Comp(CompKind.List, e, None, clauses, cond)
-    }.getOrElse {
-      expect("[")
-      val elems = Vector.newBuilder[ArrElem]
+    expect("[")
+    val elems = Vector.newBuilder[ArrElem]
+    ws()
+    var done = eat("]")
+    var first = true
+    while (!done) {
       ws()
-      if (peekCh != ']') {
-        var done = false
-        while (!done) {
-          ws()
-          if (eat("...")) elems += ArrElem.Spread(expr())
-          else elems += ArrElem.One(expr())
-          if (!eat(",")) done = true
-          else { ws(); if (peekCh == ']') done = true } // trailing comma
-        }
+      if (eat("...")) elems += ArrElem.Spread(expr())
+      else {
+        val e = expr()
+        if (first && eatKw("for")) return compTail(CompKind.List, e, None, "]")
+        elems += ArrElem.One(e)
       }
-      expect("]")
-      ArrLit(elems.result())
+      first = false
+      if (!eat(",")) { expect("]"); done = true }
+      else { ws(); done = eat("]") } // trailing comma
+    }
+    ArrLit(elems.result())
+  }
+
+  /** `{k: v for x in s if p}` (dict comp), `{e for x in s}` (set comp)
+    * or an object literal. A name or string key followed by `:` may
+    * still open a dict comp, so its value parses once and a following
+    * `for` decides; any other head that is not a field parses as an
+    * expression and opens a comprehension or a computed key `[k]: v`. */
+  private def dictSetCompOrObject(): Expr = {
+    expect("{")
+    ws()
+    val p0 = pos
+    if (peekCh == '}' || s.startsWith("...", pos)) return objLiteral(None)
+    def fieldMarker: Boolean = {
+      val p1 = pos
+      if (peekCh == '?') { pos += 1; ws() }
+      val r = peekCh == ',' || peekCh == '}' || peekCh == ':'
+      pos = p1; r
+    }
+    tryParse(objKey()).filter { _ => ws(); fieldMarker } match {
+      case Some(k) if eat(":") =>
+        val v = expr()
+        if (!eatKw("for")) objLiteral(Some(kvField(k, v)))
+        else compTail(CompKind.Dict, k.fold(n =>
+          if (keywords(n)) fail("keyword as comprehension key") else Ident(n), identity),
+          Some(v), "}")
+      case Some(k) => objLiteral(Some(objFieldAfterKey(k)))
+      case None =>
+        pos = p0
+        val e = expr()
+        if (eatKw("for")) compTail(CompKind.SetC, e, None, "}")
+        else {
+          expect(":")
+          val v = expr()
+          if (eatKw("for")) compTail(CompKind.Dict, e, Some(v), "}")
+          else e match {
+            case ArrLit(Vector(ArrElem.One(k))) => objLiteral(Some(ObjField.Dyn(k, v)))
+            case _ => fail("expected identifier")
+          }
+        }
     }
   }
 
-  private def dictSetCompOrObject(): Expr = {
-    tryParse {
-      // dict comp {k: v for x in s if p}
-      expect("{")
-      val k = expr()
-      expect(":")
-      val v = expr()
-      if (!eatKw("for")) fail("not a dict comp")
-      val (clauses, cond) = compClauses()
-      expect("}")
-      Comp(CompKind.Dict, k, Some(v), clauses, cond)
-    }.orElse(tryParse {
-      // set comp {e for x in s if p}
-      expect("{")
-      val e = expr()
-      if (!eatKw("for")) fail("not a set comp")
-      val (clauses, cond) = compClauses()
-      expect("}")
-      Comp(CompKind.SetC, e, None, clauses, cond)
-    }).getOrElse(objLiteral())
-  }
-
-  private def objLiteral(): Expr = {
-    expect("{")
+  /** An object literal's fields after its `{`, the first one given when
+    * already parsed. */
+  private def objLiteral(first: Option[ObjField]): Expr = {
     val fields = Vector.newBuilder[ObjField]
     ws()
-    if (peekCh != '}') {
-      var done = false
-      while (!done) {
-        fields += objField()
-        if (!eat(",")) done = true
-        else { ws(); if (peekCh == '}') done = true } // trailing comma
-      }
+    var done = first.isEmpty && peekCh == '}'
+    if (!done) fields += first.getOrElse(objField())
+    while (!done) {
+      if (!eat(",")) done = true
+      else { ws(); if (peekCh == '}') done = true else fields += objField() } // trailing comma
     }
     expect("}")
     ObjLit(fields.result())
@@ -572,22 +590,27 @@ private final class Parser(s: String) {
       expect("]"); expect(":")
       return ObjField.Dyn(k, expr())
     }
-    // key: ident or string literal; keywords (`kind`, `in`, …) are legal
-    // keys when immediately followed by ':' (INDEPTH.md:255 `kind: …`)
-    val key: Either[String, Expr] = {
-      ws()
-      if (peekCh == '"' || peekCh == '\'') Right(Lit(JStr(stringLit())))
-      else identOpt() match {
-        case Some(n) => Left(n)
-        case None =>
-          val p0 = pos
-          val kw = fieldName()
-          ws()
-          if (peekCh == ':' || (peekCh == '?' && pos + 1 < s.length && s.charAt(pos + 1) == ':'))
-            Left(kw)
-          else { pos = p0; fail("expected identifier") }
-      }
+    objFieldAfterKey(objKey())
+  }
+
+  /** key: ident or string literal; keywords (`kind`, `in`, …) are legal
+    * keys when immediately followed by ':' (INDEPTH.md:255 `kind: …`) */
+  private def objKey(): Either[String, Expr] = {
+    ws()
+    if (peekCh == '"' || peekCh == '\'') Right(Lit(JStr(stringLit())))
+    else identOpt() match {
+      case Some(n) => Left(n)
+      case None =>
+        val p0 = pos
+        val kw = fieldName()
+        ws()
+        if (peekCh == ':' || (peekCh == '?' && pos + 1 < s.length && s.charAt(pos + 1) == ':'))
+          Left(kw)
+        else { pos = p0; fail("expected identifier") }
     }
+  }
+
+  private def objFieldAfterKey(key: Either[String, Expr]): ObjField = {
     ws()
     if (peekCh == '?' && pos + 1 < s.length && s.charAt(pos + 1) == ':') {
       pos += 2
@@ -600,14 +623,16 @@ private final class Parser(s: String) {
         case Left(n)  => ObjField.OptShort(n)
         case Right(_) => fail("string key requires a value")
       }
-    } else if (eat(":")) {
-      val v = expr()
-      val when = if (eatKw("when")) Some(expr()) else None
-      ObjField.KV(key.fold(n => Lit(JStr(n)), identity), v, when)
-    } else key match {
+    } else if (eat(":")) kvField(key, expr())
+    else key match {
       case Left(n)  => ObjField.Short(n)
       case Right(_) => fail("string key requires a value")
     }
+  }
+
+  private def kvField(key: Either[String, Expr], v: Expr): ObjField = {
+    val when = if (eatKw("when")) Some(expr()) else None
+    ObjField.KV(key.fold(n => Lit(JStr(n)), identity), v, when)
   }
 
   private def letExpr(): Expr = {

@@ -251,7 +251,7 @@ object Lower {
 
     // static type of a shape-value expression over the current element
     def typeIn(scope: StructType, e: Expr): Option[DataType] =
-      try new ColLower(Some(scope)).inferDt(e)
+      try new ColLower(Some(scope)).typed(e).dt
       catch { case _: LowerException => None }
 
     // `{…}` shape over the element scope → output element struct.
@@ -369,7 +369,7 @@ object Lower {
         def typeIn2(fld: StructField, e: Expr): Option[org.apache.spark.sql.types.DataType] =
           try new ColLower(Some(tableSchema),
             current = Some(org.apache.spark.sql.functions.col(fld.name)),
-            currentDt = Some(fld.dataType)).inferDt(e)
+            currentDt = Some(fld.dataType)).typed(e).dt
           catch { case _: LowerException => None }
         def adjusted(writes: Seq[(String, org.apache.spark.sql.types.DataType)])
             : Option[org.apache.spark.sql.types.StructType] = {
@@ -658,21 +658,6 @@ object Lower {
                            valueDt: Option[org.apache.spark.sql.types.DataType])
     var deletes = Vector.empty[List[String]] // DELETE paths, in order
     var writes  = Vector.empty[Write]
-    // static type of the column the patch path walks to — struct fields
-    // plus a single string-keyed MAP hop at the top (the map-write lane
-    // below); None for paths the schema can't type (those either resolve
-    // dynamically or fail analysis and fall back)
-    def walkDt(names: List[String]): Option[org.apache.spark.sql.types.DataType] =
-      names.tail.foldLeft(
-        df0.schema.find(_.name == names.head).map(_.dataType)) { (acc, n) =>
-        acc.flatMap {
-          case st: org.apache.spark.sql.types.StructType =>
-            st.find(_.name == n).map(_.dataType)
-          case org.apache.spark.sql.types.MapType(
-              org.apache.spark.sql.types.StringType, v, _) => Some(v)
-          case _ => None
-        }
-      }
     def topMap(top: String): Option[org.apache.spark.sql.types.MapType] =
       df0.schema.find(_.name == top).map(_.dataType).collect {
         case m @ org.apache.spark.sql.types.MapType(
@@ -694,11 +679,14 @@ object Lower {
       // sequences those correctly
       if (topMap(names.head).isDefined && names.length > 2)
         bail(s"map-column patch path ${names.mkString(".")} is not one key deep")
-      val dotted = names.mkString(".")
-      val oldLeaf = col(dotted)
-      val cl = new ColLower(Some(df0.schema), current = Some(oldLeaf),
-        currentDt = walkDt(names))
       val rowCl = new ColLower(Some(df0.schema))
+      // the column the path walks to, typed by the field walk that reads
+      // it; a path the schema lacks types as None (a new field is written
+      // without reading it, and a read of it fails analysis and falls back)
+      val oldLeaf = rowCl.fieldChain(Typed(col(names.head),
+        df0.schema.find(_.name == names.head).map(_.dataType)), names.tail.map(Step.Field).toVector)
+      val cl = new ColLower(Some(df0.schema), current = Some(oldLeaf.c),
+        currentDt = oldLeaf.dt)
       // Doc-mode patch leaves bind ONLY `@` (PatchEval leafEnv =
       // env.withCurrent(orig)); a bare identifier there is env-scoped
       // (undefined at top level), NOT a row column — resolving it as a
@@ -725,11 +713,11 @@ object Lower {
             case e => e
           }
           if (bareIdent(vE)) bail("patch value references an env identifier")
-          val newV = cl.colExpr(vE)
-          val whenG = f.when.map(w => cl.truthy(cl.colExpr(w), w))
-          val rowG  = rowGuard.map(p => rowCl.truthy(rowCl.colExpr(p), p))
+          val newV = cl.typed(vE)
+          val whenG = f.when.map(cl.pred)
+          val rowG  = rowGuard.map(rowCl.pred)
           writes :+= Write(names.head, names.tail,
-            (whenG ++ rowG).reduceOption(_ && _), newV, cl.inferDt(vE))
+            (whenG ++ rowG).reduceOption(_ && _), newV.c, newV.dt)
       }
     }
     // DELETE interleaved with a write on the same column is
@@ -943,7 +931,7 @@ object Lower {
       case Chain(Ident(ref), Vector(
             Step.Method("filter" | "where", Vector(Arg(_, p))),
             Step.Method(agg, aArgs))) if ref == v =>
-        val cond = cl.truthy(cl.colExpr(p), p)
+        val cond = cl.pred(p)
         aArgs match {
           case Vector(Arg(_, e)) => aggFn(agg, Some(when(cond, cl.colExpr(e))))
           case Vector() if agg == "count" || agg == "len" =>
@@ -1554,9 +1542,9 @@ object Lower {
     def tOver(c: Column, dt: DataType): Column = {
       val scope = new ColLower(None, current = Some(c), currentDt = Some(dt),
         param = Some(param), scalarElem = true)
-      val out = scope.colExpr(tBody)
-      scope.inferDt(tBody) match {
-        case Some(t) if isAtomic(t) => out
+      val out = scope.typed(tBody)
+      out.dt match {
+        case Some(t) if isAtomic(t) => out.c
         case _ => bail(s"$name: transform must return a scalar")
       }
     }
@@ -2320,7 +2308,7 @@ object Lower {
       val keyC =
         if (st.order.length == 1) cl.colExpr(st.order.head._1)
         else struct(st.order.map(o => cl.colExpr(o._1)): _*)
-      val pred = cl.truthy(cl.colExpr(argE(args, 0)), argE(args, 0))
+      val pred = cl.pred(argE(args, 0))
       // a null predicate is falsy → that row is a cut candidate
       val failKey = when(!coalesce(pred, lit(false)), keyC)
       val cutDf = df.agg(
@@ -2444,8 +2432,7 @@ object Lower {
     * escape the doc-mode fallback contract; untypeable operands bail to
     * the interpreter instead. */
   private def predIn(df: DataFrame, e: Expr): Column = {
-    val cl = new ColLower(Some(df.schema))
-    cl.truthy(cl.colExpr(e), e)
+    new ColLower(Some(df.schema)).pred(e)
   }
 
   /** The rowwise rung's scan filter (Graft.rowwiseJson): `df` filtered
@@ -2500,15 +2487,6 @@ object Lower {
     (bare.map(ColumnBridge.column) ++ guard).reduceOption(_ && _).fold(df)(df.filter)
   }
 
-  /** Coarse static type of a jetro expression, for truthiness. */
-  private sealed trait Kind
-  private object Kind {
-    case object Bool extends Kind
-    case object Num extends Kind
-    case object Str extends Kind
-    case object Unknown extends Kind
-  }
-
   /** Segment trie of a flat dotted-name shape for unflatten_keys. */
   private sealed trait UnflatTrie {
     def leafFields: Vector[String] = this match {
@@ -2544,6 +2522,18 @@ object Lower {
   private def letRow1(bind: Column)(body: Column => Column): Column =
     letRow(Seq(bind)) { case Seq(b) => body(b) }
   
+  /** A lowered row-scope expression: its column and the column's static
+    * Spark type. `dt` is None where the lowering cannot know the type
+    * (a schema-free scope, a `from_json` result, an array literal whose
+    * elements the interpreter may keep as mixed kinds). The type comes
+    * from the code that builds the column, never from a second walk. */
+  private final case class Typed(c: Column, dt: Option[DataType])
+
+  /** The type two alternatives (`??`, ternary, `try`, `or`) share: the
+    * same kind on both sides, widened as [[unifySameKind]] widens. */
+  private def agree(a: Option[DataType], b: Option[DataType]): Option[DataType] =
+    for { x <- a; y <- b; u <- unifySameKind(x, y) } yield u
+
   /** Same-KIND unification for lanes that must hold both sides: exact
     * match, integral widening to long, fractional widening to double.
     * An int/float mix stays heterogeneous in the interpreter (JInt
@@ -2687,65 +2677,69 @@ object Lower {
       if (param.contains(n)) currentDt
       else schema.flatMap(_.find(_.name == n).map(_.dataType))
 
-    def colExpr(e: Expr): Column = e match {
-    case Ident(n)  => identCol(n)
-    case Lit(v)    => litOf(v)
+    def colExpr(e: Expr): Column = typed(e).c
+
+    /** Lower `e` to its column together with that column's static type:
+      * every case below types what it builds, from its operands' types. */
+    def typed(e: Expr): Typed = e match {
+    case Ident(n)  => Typed(identCol(n), identDt(n))
+    case Lit(v)    => Typed(litOf(v), v match {
+      case JInt(_)   => Some(LongType)
+      case JFloat(_) => Some(DoubleType)
+      case JStr(_)   => Some(StringType)
+      case JBool(_)  => Some(BooleanType)
+      case _         => None
+    })
     case Current   =>
-      current.getOrElse(bail("`@` has no relational meaning at row scope"))
+      Typed(current.getOrElse(bail("`@` has no relational meaning at row scope")), currentDt)
     case Root      =>
-      rootStruct.map(_._1).getOrElse(bail("`$` has no row-scope meaning here"))
-    case Chain(Ident(n), steps) => fieldChain(identCol(n), identDt(n), steps)._1
-    case Chain(Current, steps)  =>
-      current.map(fieldChain(_, currentDt, steps)._1)
-        .getOrElse(bail("`@`-rooted chain at row scope"))
-    case Chain(Root, steps) if rootStruct.isDefined =>
-      // a write-shaped root chain evaluates to the PATCHED document
-      // (Interp.chainWrite), not the value the read dispatch computes
-      if (Lower.isRootChainWrite(steps))
-        bail("root chain-write stays on the document rungs")
-      val (rc, rt) = rootStruct.get
-      fieldChain(rc, Some(rt), steps)._1
-    // method/step chains over a COMPUTED receiver — ("x" + name).upper(),
-    // (a ?? b).trim() — walk the same steps from the lowered base column;
-    // inferDt supplies the static lane so the string-only/array dispatch
-    // guards apply exactly as they do for column-rooted chains
-    case Chain(base, steps) => fieldChain(colExpr(base), inferDt(base), steps)._1
-    case Unary("-", x)   => negate(colExpr(x))
+      val (rc, rt) = rootStruct.getOrElse(bail("`$` has no row-scope meaning here"))
+      Typed(rc, Some(rt))
+    // a write-shaped root chain evaluates to the PATCHED document
+    // (Interp.chainWrite), not the value the read dispatch computes
+    case Chain(Root, steps) if rootStruct.isDefined && Lower.isRootChainWrite(steps) =>
+      bail("root chain-write stays on the document rungs")
+    // method/step chains over a name, `@`, `$` or a COMPUTED receiver —
+    // ("x" + name).upper(), (a ?? b).trim() — walk the steps from the
+    // lowered base, so the string-only/array dispatch guards see the
+    // base's static lane
+    case Chain(base, steps) => fieldChain(typed(base), steps)
+    case Unary("-", x)   =>
+      val t = typed(x)
+      Typed(negate(numeric(t, x)), t.dt)
     // `not` is null-sensitive: jetro not(falsy-null) = true, but SQL
     // NOT null = null — force two-valued before negating
-    case Unary("not", x) => !coalesce(truthy(colExpr(x), x), lit(false))
+    case Unary("not", x) => Typed(!coalesce(pred(x), lit(false)), Some(BooleanType))
+    case Binary("or", l, r) => orOp(l, r, value = false)
     case Binary(op, l, r) => binop(op, l, r)
-    case IfElse(c, t, f) =>
-      when(truthy(colExpr(c), c), colExpr(t)).otherwise(colExpr(f))
-    case TryElse(body, default) =>
-      // reference semantics: null OR evaluation error → default.
-      // TryOrNull absorbs the error half (ANSI division/cast failures)
-      // inside codegen; coalesce handles the null half.
-      coalesce(graft.functions.TryOrNull(colExpr(body)), colExpr(default))
+    case IfElse(_, _, _) | TryElse(_, _) => alternatives(e, value = false)
     case FString(parts) =>
-      concat(parts.map {
+      Typed(concat(parts.map {
         case FPart.Text(s)            => lit(s)
-        case FPart.Interp(x, None)    => displayExpr(x)
+        case FPart.Interp(x, None)    => display(typed(x))
         case FPart.Interp(x, Some(f)) => fmtSpec(x, f)
-      }: _*)
+      }: _*), Some(StringType))
     case ObjLit(fields) => // nested object literal → struct column
-      struct(fields.map {
-        case ObjField.Short(n)                  => col(n).as(n)
-        case ObjField.KV(Lit(JStr(k)), v, None) => valueExpr(v).as(k)
-        case ObjField.KV(Ident(k), v, None)     => valueExpr(v).as(k)
+      val fs = fields.map {
+        case ObjField.Short(n)                  => n -> Typed(col(n), identDt(n))
+        case ObjField.KV(Lit(JStr(k)), v, None) => k -> valueTyped(v)
+        case ObjField.KV(Ident(k), v, None)     => k -> valueTyped(v)
         case f => bail(s"object literal field unsupported: $f")
-      }: _*)
+      }
+      val typedFields = fs.flatMap { case (k, t) => t.dt.map(StructField(k, _)) }
+      Typed(struct(fs.map { case (k, t) => t.c.as(k) }: _*),
+        if (typedFields.length == fs.length) Some(StructType(typedFields)) else None)
     case ArrLit(es) // array literal → array column (elements coerce or
         if es.forall { case ArrElem.One(_) => true; case _ => false } =>
-      array(es.map { case ArrElem.One(x) => valueExpr(x)
-                     case s => bail(s"array literal element unsupported: $s")
-      }: _*) // the analysis failure falls back, like every mixed lane
-    case GlobalCall("to_string", Vector(a)) => displayExpr(a.e)
+      Typed(array(es.map { case ArrElem.One(x) => valueExpr(x)
+                           case s => bail(s"array literal element unsupported: $s")
+      }: _*), None) // the analysis failure falls back, like every mixed lane
+    case GlobalCall("to_string", Vector(a)) => Typed(display(typed(a.e)), Some(StringType))
     case GlobalCall("to_string", Vector()) if current.isDefined =>
       // standalone argless form renders `@`; display is total — null
       // renders the TEXT "null" (the `| to_string()` pipe form desugars
       // to a method and takes the fieldChain display lane instead)
-      coalesce(displayExpr(Current), lit("null"))
+      Typed(coalesce(display(typed(Current)), lit("null")), Some(StringType))
     case GlobalCall("coalesce", args) =>
       // Interp's coalesce (Interp.scala:649) picks the first non-JNull
       // and absorbs per-arg EvalExceptions to JNull — so each arg
@@ -2753,7 +2747,7 @@ object Lower {
       // JBool(false), non-null, and WINS — SQL's three-valued null
       // would skip it) wrapped in TryOrNull (an erroring arg falls
       // through instead of killing the job).
-      coalesce(args.map(a => graft.functions.TryOrNull(valueExpr(a.e))): _*)
+      Typed(coalesce(args.map(a => graft.functions.TryOrNull(valueExpr(a.e))): _*), None)
     case GlobalCall("range", args) if args.nonEmpty && args.length <= 3 =>
       // range(n) / range(from, to) / range(from, to, step): EXCLUSIVE
       // upper bound, step 0 or wrong-sign → [] (Interp's while loop) —
@@ -2761,30 +2755,32 @@ object Lower {
       // the last element is computed and the sequence only runs on the
       // branch where its sign is right. Statically non-integral args
       // bail (the interpreter errors loudly).
-      args.foreach(a => inferDt(a.e) match {
-        case Some(d) if integralDt(d) => ()
-        case other => bail(s"range arg not statically integral: $other")
-      })
-      val ns = args.map(a => colExpr(a.e).cast("long"))
+      val ns = args.map { a =>
+        val t = typed(a.e)
+        if (!t.dt.exists(integralDt)) bail(s"range arg not statically integral: ${t.dt}")
+        t.c.cast("long")
+      }
       val (from, upto, step) = ns.length match {
         case 1 => (lit(0L), ns(0), lit(1L))
         case 2 => (ns(0), ns(1), lit(1L))
         case _ => (ns(0), ns(1), ns(2))
       }
-      val emptyArr = array().cast(ArrayType(LongType, containsNull = false))
-      letRow(Seq(from, upto, step)) { case Seq(f, u, s) =>
+      val rangeT = ArrayType(LongType, containsNull = false)
+      val emptyArr = array().cast(rangeT)
+      Typed(letRow(Seq(from, upto, step)) { case Seq(f, u, s) =>
         when(s === 0 || (s > 0 && f >= u) || (s < 0 && f <= u), emptyArr)
           .when(s > 0, sequence(f, f + ((u - f - 1) / s).cast("long") * s, s))
           .otherwise(sequence(f, f - ((f - u - 1) / (-s)).cast("long") * (-s), s))
-      }
+      }, Some(rangeT))
     case GlobalCall("chain" | "join", args) if args.nonEmpty =>
       // concatenate arrays; scalars (including null) push through as
       // single elements — a NULL ARRAY value also pushes as one null
       // element (Interp's JArr-or-else-Vector(other))
       val lanes = args.map { a =>
-        inferDt(a.e) match {
-          case Some(at: ArrayType) => (a.e, at.elementType, true)
-          case Some(t)             => (a.e, t, false)
+        val t = typed(a.e)
+        t.dt match {
+          case Some(at: ArrayType) => (t.c, at.elementType, true)
+          case Some(d)             => (t.c, d, false)
           case None                => bail(s"chain arg type unknown: ${a.e}")
         }
       }
@@ -2792,27 +2788,27 @@ object Lower {
         unifySameKind(x, y).getOrElse(bail("chain mixes element kinds"))
       }
       val ut = ArrayType(u, containsNull = true)
-      concat(lanes.map { case (e, _, isArr) =>
-        val c0 = colExpr(e)
+      Typed(concat(lanes.map { case (c0, _, isArr) =>
         if (isArr)
           when(c0.isNull, array(lit(null).cast(u))).otherwise(c0.cast(ut))
         else array(c0.cast(u))
-      }: _*)
+      }: _*), Some(ut))
     case GlobalCall("product", args) if args.length == 2 =>
       // cartesian [x, y] pairs in row-major order; any non-array
       // operand is JNull (Interp product), which the null-propagating
       // transforms reproduce. Pairs are 2-element arrays, so the two
       // element kinds must unify into one static lane.
-      val dts = args.map(a => inferDt(a.e) match {
+      val ts = args.map(a => typed(a.e))
+      val dts = ts.map(_.dt match {
         case Some(at: ArrayType) => at.elementType
         case other               => bail(s"product needs array args, got $other")
       })
       val u = unifySameKind(dts(0), dts(1))
         .getOrElse(bail("product mixes element kinds"))
-      letRow(Seq(colExpr(args(0).e), colExpr(args(1).e))) { case Seq(aa, bb) =>
+      Typed(letRow(Seq(ts(0).c, ts(1).c)) { case Seq(aa, bb) =>
         flatten(transform(aa, x =>
           transform(bb, y => array(x.cast(u), y.cast(u)))))
-      }
+      }, Some(ArrayType(ArrayType(u, containsNull = true))))
     // free-function style: f(x, rest…) ≡ x.f(rest…) (Interp.globalCall
     // catch-all, SYNTAX.md free functions) — one rewrite reuses every
     // method lane. The TRUE globals with different arity semantics
@@ -2823,9 +2819,9 @@ object Lower {
         if !Set("coalesce", "chain", "join", "range",
                 "product", "to_string")(name) =>
       if (args.nonEmpty)
-        colExpr(Chain(args.head.e, Vector(Step.Method(name, args.tail))))
+        typed(Chain(args.head.e, Vector(Step.Method(name, args.tail))))
       else if (current.isDefined)
-        colExpr(Chain(Current, Vector(Step.Method(name, Vector.empty))))
+        typed(Chain(Current, Vector(Step.Method(name, Vector.empty))))
       else bail(s"argless global $name outside `@` scope")
     // VALUE pipes: each Forward stage evaluates with `@` bound to the
     // previous stage's value (Interp.Pipe). Write-shaped stages roll
@@ -2836,35 +2832,30 @@ object Lower {
         case _: Patch                  => true
         case _                         => false
       }
-      var cur = colExpr(base)
-      var curDt = inferDt(base)
-      steps.foreach {
-        case PipeStep.Forward(f) =>
+      steps.foldLeft(typed(base)) {
+        case (cur, PipeStep.Forward(f)) =>
           if (writeShaped(f)) bail("write-shaped pipe stage rolls the document")
           // a stage's bare idents resolve against `@` (Interp Ident →
           // fieldOf(env.current)), NOT the enclosing row — struct-typed
           // stage values get element scope, anything else bails on bare
           // idents (scalarElem) and keeps `@`/method chains
-          val scope = curDt match {
+          val scope = cur.dt match {
             case Some(st: StructType) =>
-              new ColLower(Some(st), current = Some(cur),
-                identBase = Some(cur), currentDt = curDt,
+              new ColLower(Some(st), current = Some(cur.c),
+                identBase = Some(cur.c), currentDt = cur.dt,
                 rootStruct = rootStruct)
             case _ =>
-              new ColLower(None, current = Some(cur), currentDt = curDt,
+              new ColLower(None, current = Some(cur.c), currentDt = cur.dt,
                 rootStruct = rootStruct, scalarElem = true)
           }
-          val next = scope.colExpr(f)
-          curDt = scope.inferDt(f)
-          cur = next
-        case other => bail(s"pipe bind stays doc-mode: $other")
+          scope.typed(f)
+        case (_, other) => bail(s"pipe bind stays doc-mode: $other")
       }
-      cur
     case Cast(x, to) => to match {
-      case "int"    => colExpr(x).cast("long")
-      case "float" | "number" => colExpr(x).cast("double")
-      case "string" => displayExpr(x)
-      case "bool"   => colExpr(x).cast("boolean")
+      case "int"    => Typed(colExpr(x).cast("long"), Some(LongType))
+      case "float" | "number" => Typed(colExpr(x).cast("double"), Some(DoubleType))
+      case "string" => Typed(display(typed(x)), Some(StringType))
+      case "bool"   => Typed(colExpr(x).cast("boolean"), Some(BooleanType))
       case other    => bail(s"cast to $other")
     }
     case other => bail(s"no relational lowering for expression $other")
@@ -2876,12 +2867,10 @@ object Lower {
     * type falls back to the scalar mapping (never silently to the array
     * one — array semantics require the element type). Returns the
     * column and its static type: this walk is the only source of a
-    * chain's type ([[dtOf]] runs it over a typed null). */
-  private def fieldChain(
-      base: Column, baseDt: Option[DataType],
-      steps: Vector[Step]): (Column, Option[DataType]) = {
-    var c = base
-    var dt: Option[DataType] = baseDt
+    * chain's type. */
+  def fieldChain(base: Typed, steps: Vector[Step]): Typed = {
+    var c = base.c
+    var dt: Option[DataType] = base.dt
     // indexed walk: a step may FUSE with its successor (consumed = 2) —
     // the heterogeneous values()/entries() display peephole below
     var si = 0
@@ -2911,8 +2900,10 @@ object Lower {
           c = element_at(c, i.toInt + (if (i >= 0) 1 else 0)); dt = None
       }
       case Step.Index(e) => dt match {
-        case Some(ArrayType(et, _)) if inferDt(e).exists(integralDt) =>
-          val i = colExpr(e).cast("int")
+        case Some(ArrayType(et, _)) =>
+          val t = typed(e)
+          if (!t.dt.exists(integralDt)) bail(s"dynamic index over untyped lane")
+          val i = t.c.cast("int")
           c = get(c, when(i >= 0, i).otherwise(size(c) + i))
           dt = Some(et)
         case _ => bail(s"dynamic index over untyped lane")
@@ -3046,9 +3037,9 @@ object Lower {
           }
           val fdt = st.find(_.name == k).map(_.dataType)
             .getOrElse(bail(s"update key $k not in ${st.simpleString} — doc mode"))
-          val b = new EBody(ArrayType(fdt, containsNull = true), args(1).e)
-          val bdt = b.dt.getOrElse(bail("update body type unknown"))
-          val v = letRow1(c.getField(k))(b(_))
+          val (v, vdt) = new EBody(ArrayType(fdt, containsNull = true), args(1).e)
+            .build(letRow1(c.getField(k)))
+          val bdt = vdt.getOrElse(bail("update body type unknown"))
           c = setPathDeepCol(c, Some(st), List(k), v, bdt)
           dt = setPathDeepType(Some(st), List(k), bdt)
         case Some(st: StructType)
@@ -3064,10 +3055,8 @@ object Lower {
           // (JValue.display) and len/count need only the present-key
           // cardinality. Raw read-backs of heterogeneous values keep
           // the doc-mode bail (a typed lane cannot hold them).
-          def atomic(d: DataType) =
-            numericDt(d) || d == StringType || d == BooleanType
           def hetero: Boolean =
-            st.fields.forall(f => atomic(f.dataType)) &&
+            st.fields.forall(f => atomicElem(f.dataType)) &&
               st.fields.map(f => Option(f.dataType))
                 .reduceLeft { (a, d) =>
                   for { x <- a; y <- d; u <- unifySameKind(x, y) } yield u
@@ -3129,7 +3118,7 @@ object Lower {
     }
     si += consumed
     }
-    (c, dt)
+    Typed(c, dt)
   }
 
   /** String-receiver-only builtins: on any other receiver kind the
@@ -3202,15 +3191,20 @@ object Lower {
     }
     // the body's VALUE (map/flat_map bodies, keys): value position, so
     // bool-valued bodies get the interpreter's two-valued semantics
-    def apply(x: Column): Column = scope(x).valueExpr(bodyExpr)
+    def typed(x: Column): Typed = scope(x).valueTyped(bodyExpr)
+    def apply(x: Column): Column = typed(x).c
     /** Raw three-valued truthiness (null falls out in filter position). */
-    def pred(x: Column): Column = {
-      val s = scope(x); s.truthy(s.colExpr(bodyExpr), bodyExpr)
-    }
+    def pred(x: Column): Column = scope(x).pred(bodyExpr)
     /** Two-valued truthiness for null-sensitive quantifiers. */
     def predStrict(x: Column): Column = coalesce(pred(x), lit(false))
-    /** Static Spark type of the body, when derivable. */
-    def dt: Option[DataType] = scope(lit(null)).inferDt(bodyExpr)
+    /** `hof` built over this body, with the body's static type. Spark's
+      * higher-order builders call their lambda once, eagerly, so the
+      * body lowers once and its type comes from that lowering. */
+    def build(hof: (Column => Column) => Column): (Column, Option[DataType]) = {
+      var dt: Option[DataType] = None
+      val out = hof { x => val t = typed(x); dt = t.dt; t.c }
+      (out, dt)
+    }
   }
 
   private def identityBody(at: ArrayType, args: Vector[Arg], i: Int): EBody =
@@ -3250,9 +3244,8 @@ object Lower {
       // receiver mapped through the shorthand/lambda argument
       if (args.isEmpty) (c, at.elementType)
       else {
-        val b = body(0)
-        val d = b.dt.getOrElse(bail(s"$name body type unknown"))
-        (transform(c, b(_)), d)
+        val (mapped, d) = body(0).build(transform(c, _))
+        (mapped, d.getOrElse(bail(s"$name body type unknown")))
       }
     }
     name match {
@@ -3264,19 +3257,18 @@ object Lower {
           (filter(nz(c), x => preds.map(_.pred(x)).reduce(_ && _)), someArr)
         }
       case "map" =>
-        val b = body(0)
-        (transform(nz(c), b(_)),
-          b.dt.map(ArrayType(_, containsNull = true)))
+        val (mapped, d) = body(0).build(transform(nz(c), _))
+        (mapped, d.map(ArrayType(_, containsNull = true)))
       case "flat_map" =>
-        val b = body(0)
-        b.dt match {
+        val (mapped, d) = body(0).build(transform(nz(c), _))
+        d match {
           case Some(ArrayType(et, _)) =>
             // interpreter flattens arrays and DROPS null results
-            (flatten(filter(transform(nz(c), b(_)), _.isNotNull)),
+            (flatten(filter(mapped, _.isNotNull)),
               Some(ArrayType(et, containsNull = true)))
           case Some(d) =>
             // scalar body: like map, but null results are dropped
-            (filter(transform(nz(c), b(_)), _.isNotNull),
+            (filter(mapped, _.isNotNull),
               Some(ArrayType(d, containsNull = true)))
           case None => bail("flat_map body type unknown")
         }
@@ -3392,14 +3384,14 @@ object Lower {
             case Unary("-", inner) => (inner, true)
             case other             => (other, false)
           }
-        val b = new EBody(at, keyExpr)
-        val kd = b.dt.getOrElse(bail("sort key type unknown"))
-        if (!numericDt(kd) && kd != StringType && kd != BooleanType)
-          bail(s"sort key must be atomic, got ${kd.simpleString}")
-        (array_sort(nz(c), (x, y) => {
-          val (kx, ky) = if (desc) (b(y), b(x)) else (b(x), b(y))
-          when(kx < ky, lit(-1)).when(kx > ky, lit(1)).otherwise(lit(0))
-        }), someArr)
+        val (sorted, kdt) = new EBody(at, keyExpr).build(key =>
+          array_sort(nz(c), (x, y) => {
+            val (kx, ky) = if (desc) (key(y), key(x)) else (key(x), key(y))
+            when(kx < ky, lit(-1)).when(kx > ky, lit(1)).otherwise(lit(0))
+          }))
+        val kd = kdt.getOrElse(bail("sort key type unknown"))
+        if (!atomicElem(kd)) bail(s"sort key must be atomic, got ${kd.simpleString}")
+        (sorted, someArr)
       case "any" | "exists" =>
         (coalesce(exists(c, x => body(0).predStrict(x)), lit(false)),
           Some(BooleanType))
@@ -3445,11 +3437,11 @@ object Lower {
         val (av, u) =
           if (args.isEmpty) (lit(null).cast(at.elementType), at.elementType)
           else {
-            val e = argE(args, 0)
-            val ad = inferDt(e).getOrElse(bail(s"$name arg type unknown"))
+            val t = typed(argE(args, 0))
+            val ad = t.dt.getOrElse(bail(s"$name arg type unknown"))
             val w = unifySameKind(at.elementType, ad)
               .getOrElse(bail(s"$name ${ad.simpleString} into ${at.elementType.simpleString} lane"))
-            (colExpr(e).cast(w), w)
+            (t.c.cast(w), w)
           }
         val base = castArr(nz(c), u)
         (if (name == "append") concat(base, array(av))
@@ -3569,12 +3561,12 @@ object Lower {
         val (ob, u) =
           if (args.isEmpty) (emptyOf(at), at.elementType)
           else {
-            val e = argE(args, 0)
-            inferDt(e) match {
+            val t = typed(argE(args, 0))
+            t.dt match {
               case Some(o: ArrayType) =>
                 val w = unifySameKind(at.elementType, o.elementType)
                   .getOrElse(bail(s"$name pairs mix ${at.elementType.simpleString} and ${o.elementType.simpleString}"))
-                (coalesce(colExpr(e), emptyOf(o)), w)
+                (coalesce(t.c, emptyOf(o)), w)
               case Some(o) => bail(s"$name over non-array arg ${o.simpleString}")
               case None    => bail(s"$name arg type unknown")
             }
@@ -3616,10 +3608,10 @@ object Lower {
         val (other, otherDt): (Column, DataType) =
           if (args.isEmpty) (emptyOf(at), at.elementType)
           else {
-            val e = argE(args, 0)
-            inferDt(e) match {
+            val t = typed(argE(args, 0))
+            t.dt match {
               case Some(o: ArrayType) if atomicElem(o.elementType) =>
-                (coalesce(colExpr(e), emptyOf(o)), o.elementType)
+                (coalesce(t.c, emptyOf(o)), o.elementType)
               case Some(o) => bail(s"$name arg must be an atomic-element array, got ${o.simpleString}")
               case None    => bail(s"$name arg type unknown")
             }
@@ -3733,10 +3725,6 @@ object Lower {
   private def emptyOf(at: ArrayType): Column = array().cast(at)
   private def castArr(c: Column, u: DataType): Column =
     c.cast(ArrayType(u, containsNull = true))
-
-  
-
-  
 
   private def atomicElem(d: DataType): Boolean =
     numericDt(d) || d == StringType || d == BooleanType
@@ -3914,13 +3902,14 @@ object Lower {
         // fill only MISSING keys from the arg, appended in arg order —
         // the precedence mirror of shallow merge (x wins when present)
         if (args.length != 1) bail("defaults takes one object arg")
-        val ys = inferDt(args(0).e) match {
+        val arg = valueTyped(args(0).e)
+        val ys = arg.dt match {
           case Some(s: StructType) => s
           case Some(o) => bail(s"defaults needs an object arg, got ${o.simpleString}")
           case None    => bail("defaults arg type unknown")
         }
         val t = mergeStructType(st, ys, deep = false)
-        (letRow(Seq(c, valueExpr(args(0).e))) { case Seq(aa, dd) =>
+        (letRow(Seq(c, arg.c)) { case Seq(aa, dd) =>
           struct(t.fields.toIndexedSeq.map { f =>
             val inX = st.find(_.name == f.name)
             val inY = ys.find(_.name == f.name)
@@ -3955,15 +3944,17 @@ object Lower {
         if (args.length != 1) bail(s"$m takes one body")
         val perField = st.fields.toVector.map { f =>
           val b = new EBody(ArrayType(f.dataType, containsNull = true), args(0).e)
+          val v = c.getField(f.name)
           if (m == "filter_values")
             (f.name, f.dataType,
-              (v: Column) => when(b.predStrict(v), v).otherwise(lit(null).cast(f.dataType)))
+              when(b.predStrict(v), v).otherwise(lit(null).cast(f.dataType)))
           else {
-            val bdt = b.dt.getOrElse(bail(s"$m body type unknown for field ${f.name}"))
-            (f.name, bdt, (v: Column) => when(v.isNotNull, b(v)))
+            val t = b.typed(v)
+            val bdt = t.dt.getOrElse(bail(s"$m body type unknown for field ${f.name}"))
+            (f.name, bdt, when(v.isNotNull, t.c))
           }
         }
-        (struct(perField.map { case (n, _, fn) => fn(c.getField(n)).as(n) }: _*),
+        (struct(perField.map { case (n, _, fc) => fc.as(n) }: _*),
           Some(StructType(perField.map { case (n, d2, _) => StructField(n, d2) })))
       case "filter_keys" | "transform_keys" =>
         // the body is a pure function of the KEY — static strings — so
@@ -4231,13 +4222,14 @@ object Lower {
     var acc = c
     var accT = st
     args.foreach { a =>
-      val ys = inferDt(a.e) match {
+      val arg = valueTyped(a.e)
+      val ys = arg.dt match {
         case Some(s: StructType) => s
         case Some(o) => bail(s"$m over a ${o.simpleString} arg — doc mode")
         case None    => bail(s"$m arg type unknown")
       }
       val t = mergeStructType(accT, ys, deep)
-      acc = letRow(Seq(acc, valueExpr(a.e))) { case Seq(aa, oo) =>
+      acc = letRow(Seq(acc, arg.c)) { case Seq(aa, oo) =>
         val merged = mergeStructCol(aa, oo, accT, ys, deep)
         if (deep)
           when(oo.isNull, lit(null).cast(t))
@@ -4304,11 +4296,11 @@ object Lower {
       case "set_path" =>
         if (args.length != 2) bail("set_path takes (path, value)")
         val segs = segsOf(argE(args, 0))
-        val vdt = inferDt(argE(args, 1))
-          .getOrElse(bail("set_path value type unknown"))
+        val v = valueTyped(argE(args, 1))
+        val vdt = v.dt.getOrElse(bail("set_path value type unknown"))
         val outT = setPathDeepType(Some(st), segs, vdt)
           .getOrElse(bail("set_path shape not statically representable — doc mode"))
-        (setPathDeepCol(c, Some(st), segs, valueExpr(argE(args, 1)), vdt), outT)
+        (setPathDeepCol(c, Some(st), segs, v.c, vdt), outT)
       case "del_path" =>
         if (args.length != 1) bail("del_path takes (path)")
         delPathStructCol(c, st, segsOf(argE(args, 0)))
@@ -4459,17 +4451,17 @@ object Lower {
       * fields convert to entries in declaration order. Returns the
       * column as a map cast to the value type u-unified with vt. */
     def mapArg(i: Int): (Column, DataType) = {
-      val e = argE(args, i)
-      inferDt(e) match {
+      val t = typed(argE(args, i))
+      t.dt match {
         case Some(o @ MapType(StringType, ov, _)) =>
           val u = unifySameKind(vt, ov)
             .getOrElse(bail(s"$name pairs mixed value kinds"))
-          (nzm(colExpr(e), o).cast(MapType(StringType, u, valueContainsNull = true)), u)
+          (nzm(t.c, o).cast(MapType(StringType, u, valueContainsNull = true)), u)
         case Some(st: StructType) =>
           val u = st.fields.map(_.dataType).foldLeft(vt) { (acc, d) =>
             unifySameKind(acc, d).getOrElse(bail(s"$name pairs mixed value kinds"))
           }
-          val sc = colExpr(e)
+          val sc = t.c
           val entries = st.fieldNames.map(f =>
             struct(lit(f).as("key"), sc.getField(f).cast(u).as("value")))
           // a null struct reads as {} (objOnly)
@@ -4519,18 +4511,19 @@ object Lower {
         val b = vBody(0)
         (map_filter(m0, (_, v) => b.predStrict(v)), Some(outMap(vt)))
       case "transform_values" =>
-        val b = vBody(0)
-        val bdt = b.dt.getOrElse(bail("transform_values body type unknown"))
-        (transform_values(m0, (_, v) => b(v)), Some(outMap(bdt)))
+        val (out, bdt) = vBody(0).build(f => transform_values(m0, (_, v) => f(v)))
+        (out, Some(outMap(bdt.getOrElse(bail("transform_values body type unknown")))))
       case "transform_keys" =>
         // new key = keyStr(f(k)) — the DISPLAY of the body's value —
         // and duplicate keys collapse first-position-last-value
         val b = kBody(0)
-        val bdt = b.dt.getOrElse(bail("transform_keys body type unknown"))
-        if (!atomicElem(bdt)) bail("transform_keys body must be atomic (val_to_key)")
         (map_from_entries(dedupEntriesFPLV(
-          transform(map_entries(m0),
-            e => entryOf(keyOf(b(e.getField("key")), bdt), e.getField("value"))))),
+          transform(map_entries(m0), { e =>
+            val k = b.typed(e.getField("key"))
+            val bdt = k.dt.getOrElse(bail("transform_keys body type unknown"))
+            if (!atomicElem(bdt)) bail("transform_keys body must be atomic (val_to_key)")
+            entryOf(keyOf(k.c, bdt), e.getField("value"))
+          }))),
           Some(outMap(vt)))
       case "merge" =>
         // acc ++ obj per arg: existing keys update IN PLACE, new keys
@@ -4558,11 +4551,10 @@ object Lower {
         var accC: Column = c
         var accM: MapType = mt
         args.indices.foreach { i =>
-          val e = argE(args, i)
-          val (o, om, oNull) = inferDt(e) match {
+          val arg = typed(argE(args, i))
+          val (o, om, oNull) = arg.dt match {
             case Some(m2 @ MapType(StringType, _, _)) =>
-              val cc = colExpr(e)
-              (cc, m2, cc.isNull)
+              (arg.c, m2, arg.c.isNull)
             case Some(st2: StructType) =>
               // object literal / struct column arg: fields are keys;
               // one value shape only (a map lane holds one value type)
@@ -4570,7 +4562,7 @@ object Lower {
                 case Seq(one) => one
                 case _        => bail("deep_merge struct arg mixes value shapes")
               }
-              val sc = colExpr(e)
+              val sc = arg.c
               val entries = st2.fieldNames.map(f =>
                 struct(lit(f).as("key"), sc.getField(f).as("value")))
               (map_from_entries(array(entries.toIndexedSeq: _*)),
@@ -4605,13 +4597,14 @@ object Lower {
           Some(outMap(StringType)))
       case "set" if args.length == 2 =>
         // fs + (k -> v): update in place when present, else append
-        val kDt = inferDt(argE(args, 0)).getOrElse(bail("set key type unknown"))
+        val key = typed(argE(args, 0))
+        val kDt = key.dt.getOrElse(bail("set key type unknown"))
         if (!atomicElem(kDt)) bail("set key must be atomic")
-        val vDt = inferDt(argE(args, 1)).getOrElse(bail("set value type unknown"))
+        val value = typed(argE(args, 1))
+        val vDt = value.dt.getOrElse(bail("set value type unknown"))
         val u = unifySameKind(vt, vDt).getOrElse(bail("set value kind differs from lane"))
         val a = m0.cast(MapType(StringType, u, valueContainsNull = true))
-        (letRow(Seq(a, keyOf(colExpr(argE(args, 0)), kDt),
-            colExpr(argE(args, 1)).cast(u))) { case Seq(aa, k, v) =>
+        (letRow(Seq(a, keyOf(key.c, kDt), value.c.cast(u))) { case Seq(aa, k, v) =>
           when(map_contains_key(aa, k),
             map_from_entries(transform(map_entries(aa), e =>
               entryOf(e.getField("key"),
@@ -4620,15 +4613,19 @@ object Lower {
         }, Some(outMap(u)))
       case "update" if args.length == 2 =>
         // fs + (k -> f(fs.getOrElse(k, null))), same position rule
-        val kDt = inferDt(argE(args, 0)).getOrElse(bail("update key type unknown"))
+        val key = typed(argE(args, 0))
+        val kDt = key.dt.getOrElse(bail("update key type unknown"))
         if (!atomicElem(kDt)) bail("update key must be atomic")
         val b = new EBody(ArrayType(vt, containsNull = true), args(1).e)
-        val bdt = b.dt.getOrElse(bail("update body type unknown"))
-        val u = unifySameKind(vt, bdt).getOrElse(bail("update body kind differs from lane"))
-        val a = m0.cast(MapType(StringType, u, valueContainsNull = true))
-        (letRow(Seq(a, keyOf(colExpr(argE(args, 0)), kDt))) { case Seq(aa, k) =>
-          letRow1(b(when(map_contains_key(aa, k), element_at(aa, k)).cast(vt))
-              .cast(u)) { v =>
+        // the body's type fixes the widened lane `u` the entries are
+        // read back in, so the body lowers first over the unwidened map
+        var u: DataType = vt
+        (letRow(Seq(m0, keyOf(key.c, kDt))) { case Seq(m, k) =>
+          val body = b.typed(when(map_contains_key(m, k), element_at(m, k)))
+          u = unifySameKind(vt, body.dt.getOrElse(bail("update body type unknown")))
+            .getOrElse(bail("update body kind differs from lane"))
+          val aa = m.cast(MapType(StringType, u, valueContainsNull = true))
+          letRow1(body.c.cast(u)) { v =>
             when(map_contains_key(aa, k),
               map_from_entries(transform(map_entries(aa), e =>
                 entryOf(e.getField("key"),
@@ -4641,9 +4638,10 @@ object Lower {
         // tests presence — a null-VALUED entry still counts — and any
         // non-string item is false; a null receiver reads as {} and a
         // null key yields false, so membership never returns null
-        val posi = inferDt(argE(args, 0)) match {
+        val key = typed(argE(args, 0))
+        val posi = key.dt match {
           case Some(StringType) =>
-            coalesce(map_contains_key(m0, colExpr(argE(args, 0))), lit(false))
+            coalesce(map_contains_key(m0, key.c), lit(false))
           case Some(_) => lit(false)
           case None    => bail(s"$name key type unknown")
         }
@@ -4653,10 +4651,11 @@ object Lower {
         // fires for array/object receivers — a null receiver falls
         // through to the string builtins, which keep a non-string
         // receiver unchanged: null in, null out
-        val posi = inferDt(argE(args, 0)) match {
+        val key = typed(argE(args, 0))
+        val posi = key.dt match {
           case Some(StringType) =>
             when(c.isNotNull,
-              coalesce(map_contains_key(c, colExpr(argE(args, 0))), lit(false)))
+              coalesce(map_contains_key(c, key.c), lit(false)))
           case Some(_) => when(c.isNotNull, lit(false))
           case None    => bail(s"$name key type unknown")
         }
@@ -4709,12 +4708,11 @@ object Lower {
             mapMethod("set", c, mt, Vector(Arg(None, Lit(JStr(p))), args(1)))
           case Lit(JStr(p)) if p.nonEmpty && !p.split('.').exists(_.isEmpty) =>
             val segs = p.split('.').toList
-            val vdt = inferDt(argE(args, 1))
-              .getOrElse(bail("set_path value type unknown"))
+            val v = valueTyped(argE(args, 1))
+            val vdt = v.dt.getOrElse(bail("set_path value type unknown"))
             val z = setPathDeepType(Some(mt), segs, vdt)
               .getOrElse(bail("set_path shape not statically representable — doc mode"))
-            (setPathDeepCol(c, Some(mt), segs, valueExpr(argE(args, 1)), vdt),
-              Some(z))
+            (setPathDeepCol(c, Some(mt), segs, v.c, vdt), Some(z))
           case other => bail(s"set_path lowers only literal paths: $other")
         }
       case "del_path" if args.length == 1 =>
@@ -4785,118 +4783,19 @@ object Lower {
     if (args.isEmpty) // eq with the missing-arg null
       (lit(null).cast("string"), (x, _) => x.isNull)
     else {
-      val e = argE(args, 0)
-      val ad = inferDt(e).getOrElse(bail("equality arg type unknown"))
+      val arg = typed(argE(args, 0))
+      val ad = arg.dt.getOrElse(bail("equality arg type unknown"))
       def guarded(x: Column, tc: Column, frac: Boolean): Column =
         if (frac) (x <=> tc) && !coalesce(isnan(x), lit(false))
         else x <=> tc
       if (elem == ad)
-        (colExpr(e), (x, t) => guarded(x, t, fractionalDt(elem)))
+        (arg.c, (x, t) => guarded(x, t, fractionalDt(elem)))
       else if (numericDt(elem) && numericDt(ad)) {
         val frac = fractionalDt(elem) || fractionalDt(ad)
-        (colExpr(e).cast("double"), (x, t) => guarded(x.cast("double"), t, frac))
-      } else (colExpr(e), (_, _) => lit(false)) // kind mismatch never matches
+        (arg.c.cast("double"), (x, t) => guarded(x.cast("double"), t, frac))
+      } else (arg.c, (_, _) => lit(false)) // kind mismatch never matches
     }
 
-  
-
-  /** Static Spark type of a row-scope expression, when derivable. Used
-    * for array-op decisions (sum zero typing, flat_map shape, map result
-    * lanes) — the KIND must be right; exact width may differ from the
-    * analyzer's (e.g. int vs long), which only ever widens. */
-  private[Lower] def inferDt(e: Expr): Option[DataType] = e match {
-    case Lit(JInt(_))   => Some(LongType)
-    case Lit(JFloat(_)) => Some(DoubleType)
-    case Lit(JStr(_))   => Some(StringType)
-    case Lit(JBool(_))  => Some(BooleanType)
-    case Current        => currentDt
-    case Ident(n)       => identDt(n)
-    case Unary("-", x)  => inferDt(x)
-    case Unary("not", _) => Some(BooleanType)
-    case Binary(op, l, r) => op match {
-      case "==" | "!=" | "<" | "<=" | ">" | ">=" | "and" | "~=" | "has" =>
-        Some(BooleanType)
-      case "or" => // value-preserving (ColLower.binop)
-        (inferDt(l), inferDt(r)) match {
-          case (Some(BooleanType), Some(BooleanType)) => Some(BooleanType)
-          case (Some(a), Some(b)) if a == b           => Some(a)
-          case _                                      => None
-        }
-      case "/" => Some(DoubleType) // jetro float division
-      case "+" | "-" | "*" | "%" =>
-        (inferDt(l), inferDt(r)) match {
-          case (Some(a), Some(b)) if integralDt(a) && integralDt(b) => Some(LongType)
-          case (Some(a), Some(b)) if numericDt(a) && numericDt(b)   => Some(DoubleType)
-          // `+` is also string/array concat (colExpr's concat lanes) —
-          // without this, a NESTED concat ((lit + col) + lit) loses its
-          // lane and the outer + falls to the numeric add
-          case (Some(StringType), Some(StringType)) if op == "+"    => Some(StringType)
-          case (Some(a: ArrayType), Some(b: ArrayType))
-            if op == "+" && a == b                                  => Some(a)
-          case _                                                    => None
-        }
-      case "??" =>
-        (inferDt(l), inferDt(r)) match {
-          case (Some(a), Some(b)) if a == b => Some(a)
-          case _                            => None
-        }
-      case _ => None
-    }
-    case IfElse(_, t, f) =>
-      (inferDt(t), inferDt(f)) match {
-        case (Some(a), Some(b)) if a == b => Some(a)
-        case _                            => None
-      }
-    case TryElse(b, d) =>
-      (inferDt(b), inferDt(d)) match {
-        case (Some(a), Some(bb)) if a == bb => Some(a)
-        case _                              => None
-      }
-    case Cast(_, to) => to match {
-      case "int"              => Some(LongType)
-      case "float" | "number" => Some(DoubleType)
-      case "string"           => Some(StringType)
-      case "bool"             => Some(BooleanType)
-      case _                  => None
-    }
-    case FString(_)                 => Some(StringType)
-    case GlobalCall("to_string", _) => Some(StringType)
-    case GlobalCall("range", args) if args.nonEmpty && args.length <= 3 =>
-      Some(ArrayType(LongType, containsNull = false))
-    case GlobalCall("product", args) if args.length == 2 =>
-      (inferDt(args(0).e), inferDt(args(1).e)) match {
-        case (Some(a: ArrayType), Some(b: ArrayType)) =>
-          unifySameKind(a.elementType, b.elementType)
-            .map(u => ArrayType(ArrayType(u, containsNull = true)))
-        case _ => None
-      }
-    case GlobalCall("chain" | "join", args) if args.nonEmpty =>
-      val lanes = args.map(a => inferDt(a.e).map {
-        case at: ArrayType => at.elementType
-        case t             => t
-      })
-      if (lanes.exists(_.isEmpty)) None
-      else lanes.flatten.reduceLeftOption[DataType] { (x, y) =>
-        unifySameKind(x, y).getOrElse(return None)
-      }.map(ArrayType(_, containsNull = true))
-    // mirror the free-function rewrite so chains over global-call
-    // receivers stay typed
-    case GlobalCall(name, args)
-        if !Set("coalesce", "chain", "join", "range",
-                "product")(name) =>
-      if (args.nonEmpty)
-        inferDt(Chain(args.head.e, Vector(Step.Method(name, args.tail))))
-      else inferDt(Chain(Current, Vector(Step.Method(name, Vector.empty))))
-    case ObjLit(fields) =>
-      val fs = fields.map {
-        case ObjField.Short(n)                  => identDt(n).map(StructField(n, _))
-        case ObjField.KV(Lit(JStr(k)), v, None) => inferDt(v).map(StructField(k, _))
-        case ObjField.KV(Ident(k), v, None)     => inferDt(v).map(StructField(k, _))
-        case _                                  => None
-      }
-      if (fs.forall(_.isDefined)) Some(StructType(fs.flatten)) else None
-    case _ => dtOf(e)
-  }
 
   /** Scalar builtins that map 1:1 onto codegen'd Spark functions
     * (SURVEY §2.8 table). */
@@ -5239,23 +5138,18 @@ object Lower {
 
   private def a0OrSecond(args: Vector[Arg]): Column = colExpr(argE(args, 1))
 
-  private def displayCol(c: Column): Column = c.cast("string")
-
-  /** The interpreter's DISPLAY form for an expression (JValue.display):
+  /** The interpreter's DISPLAY form of a lowered value (JValue.display):
     * floats print shortest — an integral double renders without the
     * trailing ".0" ("9", not the "9.0" a plain string cast emits).
     * floor-guarded so the long cast never runs on a value ANSI would
     * overflow on. Non-float lanes are exactly the string cast. */
-  private def displayExpr(x: Expr): Column = {
-    val c = colExpr(x)
-    inferDt(x) match {
-      case Some(DoubleType) | Some(FloatType) =>
-        val d = c.cast("double")
-        when(d.isNotNull && d === floor(d) && !d.isNaN && abs(d) < lit(1e15),
-          d.cast("long").cast("string"))
-          .otherwise(d.cast("string"))
-      case _ => displayCol(c)
-    }
+  private def display(t: Typed): Column = t.dt match {
+    case Some(DoubleType) | Some(FloatType) =>
+      val d = t.c.cast("double")
+      when(d.isNotNull && d === floor(d) && !d.isNaN && abs(d) < lit(1e15),
+        d.cast("long").cast("string"))
+        .otherwise(d.cast("string"))
+    case _ => t.c.cast("string")
   }
 
   /** f-string format specs, matching the interpreter's subset
@@ -5266,8 +5160,9 @@ object Lower {
     * Pads never truncate (the interpreter's pad is a no-op when the
     * string is already wide enough). */
   private def fmtSpec(x: Expr, f: String): Column = {
-    val c = colExpr(x)
-    def disp = displayExpr(x)
+    val t = typed(x)
+    val c = t.c
+    def disp = display(t)
     def padded(w: Int)(build: (Column, Column) => Column): Column = {
       val s = disp
       when(length(s) >= w, s).otherwise(build(s, length(s)))
@@ -5276,10 +5171,7 @@ object Lower {
         f.substring(1, f.length - 1).forall(_.isDigit) && f.length > 2) {
       format_string(s"%$f", c.cast("double"))
     } else if (f == "d") {
-      kindOf(x) match {
-        case Kind.Num => c.cast("long").cast("string")
-        case _        => disp
-      }
+      if (t.dt.exists(numericDt)) c.cast("long").cast("string") else disp
     } else if ((f.startsWith(">") || f.startsWith("<") || f.startsWith("^")) &&
                f.drop(1).toIntOption.isDefined) {
       val w = f.drop(1).toInt
@@ -5293,30 +5185,26 @@ object Lower {
         }
       }
     } else if (f.startsWith("0") && f.drop(1).toIntOption.isDefined) {
-      if (isIntegral(x)) padded(f.drop(1).toInt)((s, _) => lpad(s, f.drop(1).toInt, "0"))
-      else if (kindOf(x) != Kind.Unknown) disp // interpreter zero-pads ints only
-      else bail(s"format spec $f on untyped operand")
+      t.dt match {
+        case Some(d) if integralDt(d) =>
+          padded(f.drop(1).toInt)((s, _) => lpad(s, f.drop(1).toInt, "0"))
+        // the interpreter zero-pads ints only
+        case Some(d) if atomicElem(d) => disp
+        case _ => bail(s"format spec $f on untyped operand")
+      }
     } else disp
-  }
-
-  private def isIntegral(e: Expr): Boolean = e match {
-    case Lit(JInt(_)) => true
-    case _ => dtOf(e).exists {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _                                             => false
-    }
   }
 
   /** True when both operands type statically to different jetro
     * kinds: number, string or bool. */
-  private def crossKind(lE: Expr, rE: Expr): Boolean = {
+  private def crossKind(l: Typed, r: Typed): Boolean = {
     def kind(dt: DataType): Option[Int] = dt match {
       case _: NumericType => Some(0)
       case _: StringType  => Some(1)
       case BooleanType    => Some(2)
       case _              => None
     }
-    (inferDt(lE).flatMap(kind), inferDt(rE).flatMap(kind)) match {
+    (l.dt.flatMap(kind), r.dt.flatMap(kind)) match {
       case (Some(a), Some(b)) => a != b
       case _                  => false
     }
@@ -5330,29 +5218,47 @@ object Lower {
     case _ => false
   }
 
-  private def binop(op: String, lE: Expr, rE: Expr): Column = {
+  /** An arithmetic operand's column. The interpreter raises "arithmetic
+    * on non-numbers" on a string, bool or container operand where Spark
+    * would cast it (and under ANSI raise on the first string that is not
+    * a number, failing the whole job), so a statically non-numeric
+    * operand bails to the interpreter rungs. An untyped one lowers. */
+  private def numeric(t: Typed, e: Expr): Column = t.dt match {
+    case Some(d) if !numericDt(d) =>
+      bail(s"arithmetic over a ${d.simpleString} operand: $e")
+    case _ => t.c
+  }
+
+  /** The static type of `+ - * %` over two numbers. */
+  private def numOut(l: Typed, r: Typed): Option[DataType] = (l.dt, r.dt) match {
+    case (Some(a), Some(b)) if integralDt(a) && integralDt(b) => Some(LongType)
+    case (Some(a), Some(b)) if numericDt(a) && numericDt(b)   => Some(DoubleType)
+    case _                                                    => None
+  }
+
+  private def binop(op: String, lE: Expr, rE: Expr): Typed = {
     // operands are VALUE position: a nested bool-valued expression
     // (e.g. `(a < b) == p`, `(a < b) ?? q`) must be two-valued BEFORE
     // it feeds this op — the interpreter's comparisons never produce
-    // null. valueExpr falls through to colExpr for everything else, so
+    // null. valueTyped falls through to typed for everything else, so
     // plain `col < lit` filters stay raw and pushable. Found by
     // NullSemanticsFuzzSpec round 8.
-    lazy val l = valueExpr(lE)
-    lazy val r = valueExpr(rE)
+    lazy val l = valueTyped(lE)
+    lazy val r = valueTyped(rE)
+    def bool(c: Column) = Typed(c, Some(BooleanType))
     op match {
       case "+"   =>
         // jetro `+` concatenates strings and arrays (Interp.binop);
         // statically-typed lanes lower to concat, numeric lanes to the
-        // arithmetic add, anything else falls through to `l + r` whose
-        // analysis failure routes to the interpreter
-        (inferDt(lE), inferDt(rE)) match {
-          case (Some(StringType), Some(StringType)) => concat(l, r)
+        // arithmetic add
+        (l.dt, r.dt) match {
+          case (Some(StringType), Some(StringType)) => Typed(concat(l.c, r.c), l.dt)
           case (Some(a: ArrayType), Some(b: ArrayType)) if a == b =>
-            concat(l, r)
-          case _ => l + r
+            Typed(concat(l.c, r.c), l.dt)
+          case _ => Typed(numeric(l, lE) + numeric(r, rE), numOut(l, r))
         }
-      case "-"   => l - r
-      case "*"   => l * r
+      case "-"   => Typed(numeric(l, lE) - numeric(r, rE), numOut(l, r))
+      case "*"   => Typed(numeric(l, lE) * numeric(r, rE), numOut(l, r))
       case "/"   =>
         // reference Div (vm/exec.rs:866-874): operands coerce via
         // as_f64().unwrap_or(0.0) — a null NUMERATOR divides as 0.0 —
@@ -5374,31 +5280,33 @@ object Lower {
         // Add.eval can skip this whole branch on a row whose sibling
         // operand is null — that row then takes the documented
         // cell-null tier instead of the loud raise (SCALE.md).
-        val rd = coalesce(r.cast("double"), lit(0.0))
+        val (lc, rc) = (numeric(l, lE), numeric(r, rE))
+        val rd = coalesce(rc.cast("double"), lit(0.0))
         val ln =
           if (nullMeansArithError(lE))
-            when(l.isNull,
+            when(lc.isNull,
               raise_error(lit("arithmetic on non-numbers")).cast("double"))
-              .otherwise(l.cast("double"))
-          else coalesce(l.cast("double"), lit(0.0))
-        when(rd === lit(0.0),
+              .otherwise(lc.cast("double"))
+          else coalesce(lc.cast("double"), lit(0.0))
+        Typed(when(rd === lit(0.0),
           raise_error(lit("division by zero")).cast("double"))
-          .otherwise(ln / rd)
+          .otherwise(ln / rd), Some(DoubleType))
       case "%"   =>
         // lane-aware remainder: the interpreter's FLOAT lane gives NaN
         // on a zero divisor (Java double %), while its integer lane
         // errors — matching ANSI's REMAINDER_BY_ZERO only for the
         // integer lane. Untypeable operands bail rather than guess.
-        (inferDt(lE), inferDt(rE)) match {
+        val (lc, rc) = (numeric(l, lE), numeric(r, rE))
+        Typed((l.dt, r.dt) match {
           case (Some(a), Some(b)) if !integralDt(a) || !integralDt(b) =>
-            val rd = r.cast("double")
+            val rd = rc.cast("double")
             when(rd === lit(0.0), lit(Double.NaN))
-              .otherwise(l.cast("double") % rd)
+              .otherwise(lc.cast("double") % rd)
           // both integral, or untypeable (schema-free sort-key entry):
           // the raw remainder — ANSI errors on a zero divisor, which is
           // the interpreter's integer-lane behavior too
-          case _ => l % r
-        }
+          case _ => lc % rc
+        }, numOut(l, r))
       // operands of different kinds (number, string, bool) are never
       // equal and never ordered in the interpreter (JValue.eq/cmpOk),
       // where Spark would cast one side — and under ANSI raise on the
@@ -5406,46 +5314,33 @@ object Lower {
       // The interpreter evaluates both operands first, so the constant
       // stands only when neither can raise; otherwise the interpreter
       // owns the comparison.
-      case "==" | "<" | "<=" | ">" | ">=" | "!=" if crossKind(lE, rE) =>
+      case "==" | "<" | "<=" | ">" | ">=" | "!=" if crossKind(l, r) =>
         if (!cannotRaise(lE) || !cannotRaise(rE))
           bail(s"cross-kind $op over an operand that may raise")
-        lit(op == "!=")
+        bool(lit(op == "!="))
       // null-SAFE equality: jetro compares null as a value (JValue.eq —
       // `x == null` is a real test, `x != null` keeps non-null rows),
       // while SQL `=` yields NULL and silently drops the row in filter
       // position. EqualNullSafe matches the interpreter in both filter
       // and projection position AND still pushes to the parquet scan
       // (sources.EqualNullSafe). Found by RowwiseFuzzSpec round 8.
-      case "=="  => l <=> r
-      case "!="  => !(l <=> r)
-      case "<"   => l < r
-      case "<="  => l <= r
-      case ">"   => l > r
-      case ">="  => l >= r
-      // and/or operands stay RAW (colExpr): their truthiness sink
-      // already reads null as falsy, and wrapping them would turn a
-      // pushable conjunction like `{a > 1 and b < 2}` into
-      // coalesce(...) AND coalesce(...) — no parquet pushdown
-      case "and" => truthy(colExpr(lE), lE) && truthy(colExpr(rE), rE)
-      case "or"  =>
-        // the interpreter's `or` is VALUE-preserving (Interp.binop: l
-        // if truthy else r, vm OrOp). Bool operands collapse to l||r —
-        // identical truthiness in filter position AND a pushable
-        // disjunction (value position wraps via valueExpr); same-kinded
-        // value operands lower to the picking form; mixed kinds have no
-        // single column type → doc mode owns them.
-        (kindOf(lE), kindOf(rE)) match {
-          case (Kind.Bool, Kind.Bool) => colExpr(lE) || colExpr(rE)
-          case (a, b) if a == b && a != Kind.Unknown =>
-            when(coalesce(truthy(l, lE), lit(false)), l).otherwise(r)
-          case _ => bail(s"`or` over mixed operand kinds: $lE or $rE")
-        }
+      case "=="  => bool(l.c <=> r.c)
+      case "!="  => bool(!(l.c <=> r.c))
+      case "<"   => bool(l.c < r.c)
+      case "<="  => bool(l.c <= r.c)
+      case ">"   => bool(l.c > r.c)
+      case ">="  => bool(l.c >= r.c)
+      // and operands stay RAW (typed): their truthiness sink already
+      // reads null as falsy, and wrapping them would turn a pushable
+      // conjunction like `{a > 1 and b < 2}` into coalesce(...) AND
+      // coalesce(...) — no parquet pushdown
+      case "and" => bool(pred(lE) && pred(rE))
       case "??"  =>
         // Interp.binop "??" catches EvalException on the LEFT (a
         // division-by-zero or bad cast falls through to the default),
         // not just null — TryOrNull absorbs the ANSI runtime error
         // inside codegen exactly like the try/else lowering
-        coalesce(graft.functions.TryOrNull(l), r)
+        Typed(coalesce(graft.functions.TryOrNull(l.c), r.c), agree(l.dt, r.dt))
       case "~="  =>
         // case-insensitive bidirectional substring (vm Fuzzy) over the
         // DISPLAY form. Only statically-string operands lower — numeric
@@ -5453,39 +5348,49 @@ object Lower {
         // casts "184.0"). A null operand displays as the string "null"
         // (JValue.display(JNull), Interp.binop ~=) — pinned, so the
         // coalesce makes the lowering exact under nulls too.
-        if (kindOf(lE) != Kind.Str || kindOf(rE) != Kind.Str)
+        if (!l.dt.contains(StringType) || !r.dt.contains(StringType))
           bail(s"~= lowers only over string operands: $lE ~= $rE")
-        val ls = lower(coalesce(l, lit("null")))
-        val rs = lower(coalesce(r, lit("null")))
-        ls.contains(rs) || rs.contains(ls)
+        val ls = lower(coalesce(l.c, lit("null")))
+        val rs = lower(coalesce(r.c, lit("null")))
+        bool(ls.contains(rs) || rs.contains(ls))
       case "has" =>
         // Builtins.membership: arrays test element equality with
         // null-as-value semantics (so `arr has null` finds null
         // elements); strings test substring of the item's display form
         // ("null" for a null item — pinned); objects test key
-        // membership. dtOf picks the container form; anything untyped
-        // bails to the interpreter.
+        // membership. The receiver's type picks the container form;
+        // anything untyped bails to the interpreter.
         // membership() is TOTAL — a null receiver (or key) is false,
         // never null — so every container form coalesces at the source
         // and the result is position-independent (MapColumnSpec row 5
         // caught the raw map_contains_key leaking null in value
         // position)
-        dtOf(lE) match {
+        bool(l.dt match {
           case Some(_: ArrayType) =>
             // the item binds via letRow: a computed r captured in the
             // exists body would re-evaluate per ELEMENT (the HOF
             // lambda-capture discipline)
-            letRow(Seq(l, r)) { case Seq(ll, rr) =>
+            letRow(Seq(l.c, r.c)) { case Seq(ll, rr) =>
               coalesce(exists(ll, x => x <=> rr), lit(false))
             }
           case Some(StringType) =>
-            if (kindOf(rE) != Kind.Str)
+            if (!r.dt.contains(StringType))
               bail(s"string has lowers only with a string item: $rE")
-            coalesce(l.contains(coalesce(r, lit("null"))), lit(false))
+            coalesce(l.c.contains(coalesce(r.c, lit("null"))), lit(false))
           case Some(_: MapType) =>
-            if (kindOf(rE) != Kind.Str)
+            if (!r.dt.contains(StringType))
               bail(s"map has lowers only with a string key: $rE")
-            coalesce(map_contains_key(l, r), lit(false))
+            coalesce(map_contains_key(l.c, r.c), lit(false))
+          // an object the expression builds keeps its null-valued keys
+          // in the interpreter (`{a: null} has "a"` is true), where the
+          // struct form below reads a null field as absent, as a read
+          // row's struct does: only names and chains take that form (a
+          // chain over an object literal still does, and disagrees)
+          case Some(_: StructType) if (lE match {
+                case Ident(_) | Current | Root | Chain(_, _) => false
+                case _                                       => true
+              }) =>
+            bail(s"object has over a struct the expression builds: $lE")
           case Some(st: StructType) =>
             // the interpreter tests key membership over the null-field-
             // OMITTING bridge document (RowBridge/to_json drop null
@@ -5498,14 +5403,53 @@ object Lower {
             // CASE over the schema; the interpreter owns those.
             rE match {
               case Lit(JStr(k)) =>
-                if (st.fieldNames.contains(k)) l.getField(k).isNotNull
+                if (st.fieldNames.contains(k)) l.c.getField(k).isNotNull
                 else lit(false)
               case _ =>
                 bail(s"object has with dynamic key over struct receiver: $rE")
             }
           case _ => bail(s"has container untyped: $lE")
-        }
+        })
       case other => bail(s"operator $op")
+    }
+  }
+
+  /** The interpreter's `or` is VALUE-preserving (Interp.binop: l if
+    * truthy else r, vm OrOp). Bool operands collapse to l||r — identical
+    * truthiness in filter position AND a pushable disjunction; in value
+    * position they take the picking form, so a null right operand stays
+    * null as the interpreter returns it. Same-kinded value operands
+    * lower to the picking form; mixed kinds have no single column type,
+    * so doc mode owns them. */
+  private def orOp(lE: Expr, rE: Expr, value: Boolean): Typed = {
+    val (l, r) = (typed(lE), typed(rE))
+    def picked = when(coalesce(truthy(l, lE), lit(false)), l.c).otherwise(r.c)
+    (l.dt, r.dt) match {
+      case (Some(BooleanType), Some(BooleanType)) =>
+        Typed(if (value) picked else l.c || r.c, l.dt)
+      case (Some(a), Some(b)) if a == b || (numericDt(a) && numericDt(b)) =>
+        Typed(picked, agree(l.dt, r.dt))
+      case _ => bail(s"`or` over mixed operand kinds: $lE or $rE")
+    }
+  }
+
+  /** Ternary and try/else: the branches lower in the caller's position
+    * (raw or value), and the result has a type only when both branches
+    * agree on one. */
+  private def alternatives(e: Expr, value: Boolean): Typed = {
+    def branch(x: Expr): Typed = if (value) valueTyped(x) else typed(x)
+    e match {
+      case IfElse(c, t, f) =>
+        val cond = pred(c)
+        val (tt, ft) = (branch(t), branch(f))
+        Typed(when(cond, tt.c).otherwise(ft.c), agree(tt.dt, ft.dt))
+      case TryElse(b, d) =>
+        // reference semantics: null OR evaluation error → default.
+        // TryOrNull absorbs the error half (ANSI division/cast failures)
+        // inside codegen; coalesce handles the null half.
+        val (bt, dt) = (branch(b), branch(d))
+        Typed(coalesce(graft.functions.TryOrNull(bt.c), dt.c), agree(bt.dt, dt.dt))
+      case other => bail(s"not a ternary or try: $other")
     }
   }
 
@@ -5522,59 +5466,25 @@ object Lower {
     case _                                   => false
   }
 
+  /** jetro truthiness of `e` (see [[truthy]]). */
+  def pred(e: Expr): Column = truthy(typed(e), e)
+
   /** jetro truthiness (vm truthy): null/false → false, numbers ≠ 0,
     * strings non-empty, booleans pass through. The coercion is chosen
-    * by the STATIC kind of the source expression — never a blind
-    * boolean cast, which under ANSI (Spark 4 default) raises at
-    * runtime on strings. Untypeable operands bail → doc-mode fallback.
+    * by the STATIC type of the lowered value — never a blind boolean
+    * cast, which under ANSI (Spark 4 default) raises at runtime on
+    * strings. Untypeable operands bail → doc-mode fallback.
     *
     * The result is the RAW three-valued coercion (null stays null): in
     * filter/when position SQL already treats null as false, exactly
     * jetro's falsy — and keeping the bare comparison lets it push down
     * to the parquet scan. Null-SENSITIVE sites (negation, universal
     * quantifier) must wrap with `coalesce(_, false)` themselves. */
-  def truthy(c: Column, e: Expr): Column = kindOf(e) match {
-    case Kind.Bool => c
-    case Kind.Num  => c =!= lit(0)
-    case Kind.Str  => length(c) > 0
-    case Kind.Unknown => bail(s"cannot type truthiness of $e")
-  }
-
-  private def kindOf(e: Expr): Kind = e match {
-    case Lit(JBool(_))                 => Kind.Bool
-    case Lit(JInt(_)) | Lit(JFloat(_)) => Kind.Num
-    case Lit(JStr(_))                  => Kind.Str
-    case Unary("not", _)               => Kind.Bool
-    case Unary("-", _)                 => Kind.Num
-    case Binary(op, l, r) => op match {
-      case "==" | "!=" | "<" | "<=" | ">" | ">=" | "and" | "~=" | "has" =>
-        Kind.Bool
-      case "or" => // value-preserving: the result carries the operands' kind
-        (kindOf(l), kindOf(r)) match {
-          case (Kind.Bool, Kind.Bool) => Kind.Bool
-          case (a, b) if a == b       => a
-          case _                      => Kind.Unknown
-        }
-      case "+" | "-" | "*" | "/" | "%" =>
-        if (kindOf(l) == Kind.Num && kindOf(r) == Kind.Num) Kind.Num
-        else Kind.Unknown
-      case "??" =>
-        val k = kindOf(l); if (k == kindOf(r)) k else Kind.Unknown
-      case _ => Kind.Unknown
-    }
-    case IfElse(_, t, f) =>
-      val k = kindOf(t); if (k == kindOf(f)) k else Kind.Unknown
-    case TryElse(b, d) =>
-      val k = kindOf(b); if (k == kindOf(d)) k else Kind.Unknown
-    case Cast(_, to) => to match {
-      case "int" | "float" | "number" => Kind.Num
-      case "string"                   => Kind.Str
-      case "bool"                     => Kind.Bool
-      case _                          => Kind.Unknown
-    }
-    case GlobalCall("to_string", _) => Kind.Str
-    case FString(_)                 => Kind.Str
-    case _ => dtOf(e).map(dtKind).getOrElse(Kind.Unknown)
+  private def truthy(t: Typed, e: Expr): Column = t.dt match {
+    case Some(BooleanType)    => t.c
+    case Some(_: NumericType) => t.c =!= lit(0)
+    case Some(StringType)     => length(t.c) > 0
+    case _ => bail(s"cannot type truthiness of $e")
   }
 
   /** VALUE-position lowering: where a bool-valued expression lands in a
@@ -5587,35 +5497,16 @@ object Lower {
     * null as false, exactly the interpreter's falsy). Bool-kinded `or`
     * takes the value-preserving picking form (null right operand stays
     * null, as the interpreter returns it). */
-  def valueExpr(e: Expr): Column = e match {
+  def valueTyped(e: Expr): Typed = e match {
     case Binary(op, _, _) if Set("<", "<=", ">", ">=", "and", "has")(op) =>
-      coalesce(colExpr(e), lit(false))
-    case Binary("or", l, r)
-        if kindOf(l) == Kind.Bool && kindOf(r) == Kind.Bool =>
-      val lc = colExpr(l)
-      when(coalesce(lc, lit(false)), lc).otherwise(colExpr(r))
-    case IfElse(c, t, f) =>
-      when(truthy(colExpr(c), c), valueExpr(t)).otherwise(valueExpr(f))
-    case TryElse(b, d) =>
-      coalesce(graft.functions.TryOrNull(valueExpr(b)), valueExpr(d))
-    case _ => colExpr(e)
+      val t = typed(e)
+      Typed(coalesce(t.c, lit(false)), t.dt)
+    case Binary("or", l, r)              => orOp(l, r, value = true)
+    case IfElse(_, _, _) | TryElse(_, _) => alternatives(e, value = true)
+    case _                               => typed(e)
   }
 
-  /** Resolve the Spark type of a name or chain expression against the
-    * plan schema. A chain's type is the one [[fieldChain]] reports when
-    * it walks the steps over a typed null: the lowering that builds the
-    * column is the only type source (Column trees are lazy — nothing is
-    * analysed here). A step that does not lower types as None. */
-  private def dtOf(e: Expr): Option[DataType] = e match {
-    case Ident(n) => identDt(n)
-    case Current  => currentDt
-    case Root     => rootStruct.map(_._2)
-    case Chain(base, steps) =>
-      val b = inferDt(base)
-      try fieldChain(b.fold(lit(null))(lit(null).cast(_)), b, steps)._2
-      catch { case _: LowerException => None }
-    case _ => None
-  }
+  def valueExpr(e: Expr): Column = valueTyped(e).c
 
   private def scalarFnReturn(m: String): Option[DataType] = m match {
     case "upper" | "lower" | "trim" | "trim_left" | "lstrip" | "trim_right" |
@@ -5644,13 +5535,6 @@ object Lower {
     case "re_captures_all" =>
       Some(ArrayType(ArrayType(StringType, containsNull = true)))
     case _ => None
-  }
-
-  private def dtKind(dt: DataType): Kind = dt match {
-    case BooleanType    => Kind.Bool
-    case _: NumericType => Kind.Num
-    case StringType     => Kind.Str
-    case _              => Kind.Unknown
   }
   }
 

@@ -10,7 +10,8 @@ import org.apache.spark.sql.SparkSession
   * stdin and prints, per line, the rung `Graft.backend` picks and the
   * first line of `Lower.compile`'s bail message (empty when it lowers),
   * tab-separated — a rung census to diff across two builds:
-  * `runMain graft.tools.LowerCheck - < exprs.txt`. */
+  * `sbt "runMain graft.tools.LowerCheck -" < exprs.txt` (not under
+  * `sbt -batch`, whose launcher reads stdin from /dev/null). */
 object LowerCheck {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
@@ -18,6 +19,9 @@ object LowerCheck {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    // bail messages carry non-ASCII (`—`): print UTF-8 whatever the locale
+    val out = new java.io.PrintStream(
+      new java.io.FileOutputStream(java.io.FileDescriptor.out), true, "UTF-8")
     def bailOf(e: String): String =
       try { graft.plans.Lower.compile(e, t => graft.core.Tables(spark, dir, t)); "" }
       catch { case ex: Throwable => firstLine(ex) }
@@ -26,15 +30,15 @@ object LowerCheck {
         val rung =
           try graft.Graft.backend(spark, dir, e)
           catch { case ex: Throwable => s"error: ${firstLine(ex)}" }
-        println(s"$rung\t${bailOf(e)}")
+        out.println(s"$rung\t${bailOf(e)}")
       }
     else for (e <- args) {
-      println(s"======== $e ========")
+      out.println(s"======== $e ========")
       try {
         val df = graft.plans.Lower.compile(e, t => graft.core.Tables(spark, dir, t))
-        println(df.queryExecution.explainString(
+        out.println(df.queryExecution.explainString(
           org.apache.spark.sql.execution.SimpleMode))
-      } catch { case ex: Throwable => println(s"[lowercheck] ${ex.getMessage}") }
+      } catch { case ex: Throwable => out.println(s"[lowercheck] ${ex.getMessage}") }
     }
     spark.stop()
   }

@@ -1586,4 +1586,49 @@ class GraftCompileSpec extends NoCachedLeftovers with BeforeAndAfterAll {
       .collect().toSeq.map(r => String.valueOf(r.get(0)))
     assert(rows == Seq.fill(25)("5"))
   }
+
+  // Every expression form is typed by the lowering that builds it, from
+  // its operands' types: a concat is a string, an integral sum is an
+  // integer, and arithmetic over a statically non-numeric operand stays
+  // on the interpreter rungs, which raise where Spark would cast it.
+
+  test("a string concat types as a string under truthiness, ~= and not") {
+    lowersLikeDoc("""$.nation{n_name + "x"}""")
+    lowersLikeDoc("""$.nation.map({a: (n_name + "x") or "y"})""")
+    lowersLikeDoc("""$.nation.map({a: n_name + "x" ~= "AL"})""")
+    lowersLikeDoc("""$.nation.map({a: not (n_name + "x")})""")
+  }
+
+  test("an integral sum zero-pads under a 0N format spec, as the interpreter does") {
+    lowersLikeDoc("""$.region.map({a: f"{r_regionkey + 1:03}"})""")
+  }
+
+  test("has over an object the expression builds keeps its null-valued keys") {
+    // the interpreter's `{a: null} has "a"` is true; a struct column
+    // would read the null field as absent
+    val e = """$.nation.map({k: n_nationkey, h: {a: n_name.split(" ")[3]} has "a"})"""
+    assert(canonRows(Graft.query(spark, sfDir, e)) == canonRows(Graft.docFallback(spark, sfDir, e)))
+  }
+
+  test("arithmetic over a statically non-numeric operand takes the interpreter's answer") {
+    // the interpreter raises "arithmetic on non-numbers" and `??` takes
+    // the default on every row
+    val e = """$.region.map({a: (r_regionkey - "1") ?? 9})"""
+    assert(graft.plans.Lower.tryCompile(e, t => graft.core.Tables(spark, sfDir, t)).isEmpty)
+    assert(canonRows(Graft.query(spark, sfDir, e)) == Vector.fill(5)("""{"a":9}"""))
+    // a job that cast the string would fail; the interpreter rungs drop
+    // and count each row instead, which errors in the interpreter too
+    Seq("""$.region{-r_name}""", """$.region.map({a: r_name - 1})""").foreach { e =>
+      assert(graft.plans.Lower.tryCompile(e, t => graft.core.Tables(spark, sfDir, t)).isEmpty, e)
+      intercept[jexpr.EvalException](docAnswer(e))
+      val errored = Graft.rowwiseCounters(spark).errored
+      val before = errored.value
+      var rows = Vector.empty[String]
+      val n = SparkSpec.interpreterRowsDuring(spark) {
+        rows = canonRows(Graft.query(spark, sfDir, e))
+      }
+      assert(n == 5 && errored.value - before == 5 && rows.isEmpty,
+        s"$e: evaluated $n, errored ${errored.value - before}, rows $rows")
+    }
+  }
 }

@@ -431,4 +431,23 @@ class JexprSpec extends AnyFunSuite {
     assert(run(big, """{first_two: $.items.filter(@.v > 100).map(@.v).take(2)}""")
       == """{"first_two":[101,102]}""")
   }
+
+  test("nested brackets parse in time linear in their depth") {
+    // each bracket parses its head once; re-parsing it on a miss would
+    // double the work per level, 2^40 steps at this depth
+    import Expr._
+    val n = 40
+    def nest(f: Expr => Expr): Expr = (1 to n).foldLeft(Lit(JInt(1)): Expr)((e, _) => f(e))
+    val t0 = System.nanoTime()
+    val parens  = Parser.parse("(" * n + "1" + ")" * n)
+    val arrays  = Parser.parse("[" * n + "1" + "]" * n)
+    val objects = Parser.parse("{a: " * n + "1" + "}" * n)
+    val sums    = Parser.parse("(" * n + "1" + " + 1)" * n)
+    val secs = (System.nanoTime() - t0) / 1e9
+    assert(parens == Lit(JInt(1)))
+    assert(arrays == nest(e => ArrLit(Vector(ArrElem.One(e)))))
+    assert(objects == nest(e => ObjLit(Vector(ObjField.KV(Lit(JStr("a")), e, None)))))
+    assert(sums == nest(e => Binary("+", e, Lit(JInt(1)))))
+    assert(secs < 5.0, f"40-deep brackets parsed in $secs%.1f s")
+  }
 }
