@@ -137,16 +137,6 @@ object Lower {
       y: org.apache.spark.sql.types.StructType,
       deep: Boolean): org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.types._
-    // same-kind unification (ColLower.unifySameKind's rule, restated
-    // here because this walk is object-level)
-    def integral(d: DataType) = d match {
-      case ByteType | ShortType | IntegerType | LongType => true
-      case _                                             => false
-    }
-    def fractional(d: DataType) = d match {
-      case FloatType | DoubleType | _: DecimalType => true
-      case _                                       => false
-    }
     def fieldType(a: DataType, b: DataType): DataType = (a, b) match {
       case (xs: StructType, ys: StructType) =>
         if (deep) mergeStructType(xs, ys, deep)
@@ -160,11 +150,8 @@ object Lower {
           bail("deep_merge over mixed map value shapes — doc mode"))
       case (_: MapType, _) | (_, _: MapType) =>
         bail(s"${if (deep) "deep_merge" else "merge"} over map-typed fields — doc mode")
-      case (a2, b2) if a2 == b2                     => a2
-      case (a2, b2) if integral(a2) && integral(b2) => LongType
-      case (a2, b2) if fractional(a2) && fractional(b2) => DoubleType
-      case _ =>
-        bail(s"${if (deep) "deep_merge" else "merge"} mixes value kinds")
+      case (a2, b2) => unifySameKind(a2, b2).getOrElse(
+        bail(s"${if (deep) "deep_merge" else "merge"} mixes value kinds"))
     }
     StructType(
       x.fields.map { f =>
@@ -249,10 +236,32 @@ object Lower {
       Some(StructType(fs))
     }
 
+    // static type of `e` as `low` lowers it. The rowwise rung serves
+    // the texts whose lowering bails, often inside one shape field, so
+    // a form whose operator fixes its result kind types even where its
+    // operands do not lower: comparisons, `and`, `not`, `~=` and `has`
+    // give a bool, `/` a float, an f-string and a cast their target,
+    // and `??`, ternaries and `try` the type both sides agree on
+    def staticDt(low: ColLower, e: Expr): Option[DataType] = {
+      def same(a: Expr, b: Expr) =
+        for { x <- staticDt(low, a); y <- staticDt(low, b); u <- unifySameKind(x, y) } yield u
+      try low.typed(e).dt
+      catch { case _: LowerException => e match {
+        case Binary("==" | "!=" | "<" | "<=" | ">" | ">=" | "and" | "~=" | "has", _, _) |
+             Unary("not", _) | Cast(_, "bool") => Some(BooleanType)
+        case Binary("/", _, _) | Cast(_, "float" | "number") => Some(DoubleType)
+        case FString(_) | Cast(_, "string") => Some(StringType)
+        case Cast(_, "int") => Some(LongType)
+        case Binary("??", a, b) => same(a, b)
+        case IfElse(_, a, b) => same(a, b)
+        case TryElse(a, b) => same(a, b)
+        case _ => None
+      } }
+    }
+
     // static type of a shape-value expression over the current element
     def typeIn(scope: StructType, e: Expr): Option[DataType] =
-      try new ColLower(Some(scope)).typed(e).dt
-      catch { case _: LowerException => None }
+      staticDt(new ColLower(Some(scope)), e)
 
     // `{…}` shape over the element scope → output element struct.
     // Guarded / optional fields (`when`, `k?:`) still carry their value
@@ -367,10 +376,9 @@ object Lower {
           typeIn2(fld, vE)
         }
         def typeIn2(fld: StructField, e: Expr): Option[org.apache.spark.sql.types.DataType] =
-          try new ColLower(Some(tableSchema),
+          staticDt(new ColLower(Some(tableSchema),
             current = Some(org.apache.spark.sql.functions.col(fld.name)),
-            currentDt = Some(fld.dataType)).typed(e).dt
-          catch { case _: LowerException => None }
+            currentDt = Some(fld.dataType)), e)
         def adjusted(writes: Seq[(String, org.apache.spark.sql.types.DataType)])
             : Option[org.apache.spark.sql.types.StructType] = {
           var fields = tableSchema.fields.toVector
@@ -2526,13 +2534,21 @@ object Lower {
     * Spark type. `dt` is None where the lowering cannot know the type
     * (a schema-free scope, a `from_json` result, an array literal whose
     * elements the interpreter may keep as mixed kinds). The type comes
-    * from the code that builds the column, never from a second walk. */
-  private final case class Typed(c: Column, dt: Option[DataType])
+    * from the code that builds the column, never from a second walk.
+    * `num` marks a number whose rows may mix ints and floats (an
+    * int/float `??`, ternary, `try` or `or`): no Spark type keeps the
+    * interpreter's JInt and JFloat apart, so `dt` is None, but what
+    * needs only the kind (truthiness, display, `:d`) reads [[isNum]]. */
+  private final case class Typed(c: Column, dt: Option[DataType], num: Boolean = false) {
+    def isNum: Boolean = num || dt.exists(numericDt)
+  }
 
-  /** The type two alternatives (`??`, ternary, `try`, `or`) share: the
-    * same kind on both sides, widened as [[unifySameKind]] widens. */
-  private def agree(a: Option[DataType], b: Option[DataType]): Option[DataType] =
-    for { x <- a; y <- b; u <- unifySameKind(x, y) } yield u
+  /** Two alternatives (`??`, ternary, `try`, `or`) built into `c`: the
+    * type both sides share (the same kind, widened as [[unifySameKind]]
+    * widens), and a number whenever both sides are numbers. */
+  private def either(c: Column, a: Typed, b: Typed): Typed =
+    Typed(c, for { x <- a.dt; y <- b.dt; u <- unifySameKind(x, y) } yield u,
+      a.isNum && b.isNum)
 
   /** Same-KIND unification for lanes that must hold both sides: exact
     * match, integral widening to long, fractional widening to double.
@@ -2705,8 +2721,9 @@ object Lower {
     // base's static lane
     case Chain(base, steps) => fieldChain(typed(base), steps)
     case Unary("-", x)   =>
+      // a number or an interpreter error, whatever the operand's type
       val t = typed(x)
-      Typed(negate(numeric(t, x)), t.dt)
+      Typed(negate(numeric(t, x)), t.dt, num = true)
     // `not` is null-sensitive: jetro not(falsy-null) = true, but SQL
     // NOT null = null — force two-valued before negating
     case Unary("not", x) => Typed(!coalesce(pred(x), lit(false)), Some(BooleanType))
@@ -3197,9 +3214,11 @@ object Lower {
     def pred(x: Column): Column = scope(x).pred(bodyExpr)
     /** Two-valued truthiness for null-sensitive quantifiers. */
     def predStrict(x: Column): Column = coalesce(pred(x), lit(false))
-    /** `hof` built over this body, with the body's static type. Spark's
-      * higher-order builders call their lambda once, eagerly, so the
-      * body lowers once and its type comes from that lowering. */
+    /** `hof` built over this body, with the body's static type, taken
+      * from the lambda's last call. Spark's higher-order builders call
+      * their lambda eagerly, while `hof` runs, so `dt` is set before it
+      * is read; a builder may call it more than once (a sort comparator
+      * lowers the key twice), and every call types the same body. */
     def build(hof: (Column => Column) => Column): (Column, Option[DataType]) = {
       var dt: Option[DataType] = None
       val out = hof { x => val t = typed(x); dt = t.dt; t.c }
@@ -4618,9 +4637,10 @@ object Lower {
         if (!atomicElem(kDt)) bail("update key must be atomic")
         val b = new EBody(ArrayType(vt, containsNull = true), args(1).e)
         // the body's type fixes the widened lane `u` the entries are
-        // read back in, so the body lowers first over the unwidened map
+        // read back in, so the body lowers first over the unwidened map.
+        // letRow builds its body eagerly: `u` is set once `out` is built
         var u: DataType = vt
-        (letRow(Seq(m0, keyOf(key.c, kDt))) { case Seq(m, k) =>
+        val out = letRow(Seq(m0, keyOf(key.c, kDt))) { case Seq(m, k) =>
           val body = b.typed(when(map_contains_key(m, k), element_at(m, k)))
           u = unifySameKind(vt, body.dt.getOrElse(bail("update body type unknown")))
             .getOrElse(bail("update body kind differs from lane"))
@@ -4632,7 +4652,8 @@ object Lower {
                   when(e.getField("key") === k, v).otherwise(e.getField("value"))))))
               .otherwise(map_concat(aa, map_from_arrays(array(k), array(v))))
           }
-        }, Some(outMap(u)))
+        }
+        (out, Some(outMap(u)))
       case "has" | "missing" =>
         // key membership (Builtins.membership JObj case): a string key
         // tests presence — a null-VALUED entry still counts — and any
@@ -5142,9 +5163,11 @@ object Lower {
     * floats print shortest — an integral double renders without the
     * trailing ".0" ("9", not the "9.0" a plain string cast emits).
     * floor-guarded so the long cast never runs on a value ANSI would
-    * overflow on. Non-float lanes are exactly the string cast. */
+    * overflow on. A number whose rows may mix ints and floats takes
+    * the same path: an int displays as its integral double does.
+    * Other lanes are exactly the string cast. */
   private def display(t: Typed): Column = t.dt match {
-    case Some(DoubleType) | Some(FloatType) =>
+    case Some(DoubleType) | Some(FloatType) | None if t.isNum =>
       val d = t.c.cast("double")
       when(d.isNotNull && d === floor(d) && !d.isNaN && abs(d) < lit(1e15),
         d.cast("long").cast("string"))
@@ -5169,9 +5192,15 @@ object Lower {
     }
     if (f.startsWith(".") && f.endsWith("f") &&
         f.substring(1, f.length - 1).forall(_.isDigit) && f.length > 2) {
-      format_string(s"%$f", c.cast("double"))
+      // the interpreter rounds a number and displays anything else
+      if (t.isNum) format_string(s"%$f", c.cast("double"))
+      else if (t.dt.isDefined) disp
+      else bail(s"format spec $f on untyped operand")
     } else if (f == "d") {
-      if (t.dt.exists(numericDt)) c.cast("long").cast("string") else disp
+      // the interpreter truncates a number and displays anything else
+      if (t.isNum) c.cast("long").cast("string")
+      else if (t.dt.isDefined) disp
+      else bail(s"format spec d on untyped operand")
     } else if ((f.startsWith(">") || f.startsWith("<") || f.startsWith("^")) &&
                f.drop(1).toIntOption.isDefined) {
       val w = f.drop(1).toInt
@@ -5198,13 +5227,10 @@ object Lower {
   /** True when both operands type statically to different jetro
     * kinds: number, string or bool. */
   private def crossKind(l: Typed, r: Typed): Boolean = {
-    def kind(dt: DataType): Option[Int] = dt match {
-      case _: NumericType => Some(0)
-      case _: StringType  => Some(1)
-      case BooleanType    => Some(2)
-      case _              => None
-    }
-    (l.dt.flatMap(kind), r.dt.flatMap(kind)) match {
+    def kind(t: Typed): Option[Int] =
+      if (t.isNum) Some(0)
+      else t.dt.collect { case _: StringType => 1; case BooleanType => 2 }
+    (kind(l), kind(r)) match {
       case (Some(a), Some(b)) => a != b
       case _                  => false
     }
@@ -5229,12 +5255,13 @@ object Lower {
     case _ => t.c
   }
 
-  /** The static type of `+ - * %` over two numbers. */
-  private def numOut(l: Typed, r: Typed): Option[DataType] = (l.dt, r.dt) match {
+  /** `+ - * %` over two numbers built into `c`: long over two
+    * integers, double over two numbers of which one is a float. */
+  private def numOut(c: Column, l: Typed, r: Typed): Typed = Typed(c, (l.dt, r.dt) match {
     case (Some(a), Some(b)) if integralDt(a) && integralDt(b) => Some(LongType)
     case (Some(a), Some(b)) if numericDt(a) && numericDt(b)   => Some(DoubleType)
     case _                                                    => None
-  }
+  }, l.isNum && r.isNum)
 
   private def binop(op: String, lE: Expr, rE: Expr): Typed = {
     // operands are VALUE position: a nested bool-valued expression
@@ -5255,10 +5282,10 @@ object Lower {
           case (Some(StringType), Some(StringType)) => Typed(concat(l.c, r.c), l.dt)
           case (Some(a: ArrayType), Some(b: ArrayType)) if a == b =>
             Typed(concat(l.c, r.c), l.dt)
-          case _ => Typed(numeric(l, lE) + numeric(r, rE), numOut(l, r))
+          case _ => numOut(numeric(l, lE) + numeric(r, rE), l, r)
         }
-      case "-"   => Typed(numeric(l, lE) - numeric(r, rE), numOut(l, r))
-      case "*"   => Typed(numeric(l, lE) * numeric(r, rE), numOut(l, r))
+      case "-"   => numOut(numeric(l, lE) - numeric(r, rE), l, r)
+      case "*"   => numOut(numeric(l, lE) * numeric(r, rE), l, r)
       case "/"   =>
         // reference Div (vm/exec.rs:866-874): operands coerce via
         // as_f64().unwrap_or(0.0) — a null NUMERATOR divides as 0.0 —
@@ -5297,7 +5324,7 @@ object Lower {
         // errors — matching ANSI's REMAINDER_BY_ZERO only for the
         // integer lane. Untypeable operands bail rather than guess.
         val (lc, rc) = (numeric(l, lE), numeric(r, rE))
-        Typed((l.dt, r.dt) match {
+        numOut((l.dt, r.dt) match {
           case (Some(a), Some(b)) if !integralDt(a) || !integralDt(b) =>
             val rd = rc.cast("double")
             when(rd === lit(0.0), lit(Double.NaN))
@@ -5306,7 +5333,7 @@ object Lower {
           // the raw remainder — ANSI errors on a zero divisor, which is
           // the interpreter's integer-lane behavior too
           case _ => lc % rc
-        }, numOut(l, r))
+        }, l, r)
       // operands of different kinds (number, string, bool) are never
       // equal and never ordered in the interpreter (JValue.eq/cmpOk),
       // where Spark would cast one side — and under ANSI raise on the
@@ -5340,7 +5367,7 @@ object Lower {
         // division-by-zero or bad cast falls through to the default),
         // not just null — TryOrNull absorbs the ANSI runtime error
         // inside codegen exactly like the try/else lowering
-        Typed(coalesce(graft.functions.TryOrNull(l.c), r.c), agree(l.dt, r.dt))
+        either(coalesce(graft.functions.TryOrNull(l.c), r.c), l, r)
       case "~="  =>
         // case-insensitive bidirectional substring (vm Fuzzy) over the
         // DISPLAY form. Only statically-string operands lower — numeric
@@ -5424,13 +5451,11 @@ object Lower {
   private def orOp(lE: Expr, rE: Expr, value: Boolean): Typed = {
     val (l, r) = (typed(lE), typed(rE))
     def picked = when(coalesce(truthy(l, lE), lit(false)), l.c).otherwise(r.c)
-    (l.dt, r.dt) match {
-      case (Some(BooleanType), Some(BooleanType)) =>
-        Typed(if (value) picked else l.c || r.c, l.dt)
-      case (Some(a), Some(b)) if a == b || (numericDt(a) && numericDt(b)) =>
-        Typed(picked, agree(l.dt, r.dt))
-      case _ => bail(s"`or` over mixed operand kinds: $lE or $rE")
-    }
+    if (l.dt.contains(BooleanType) && r.dt.contains(BooleanType))
+      Typed(if (value) picked else l.c || r.c, l.dt)
+    else if ((l.dt.isDefined && l.dt == r.dt) || (l.isNum && r.isNum))
+      either(picked, l, r)
+    else bail(s"`or` over mixed operand kinds: $lE or $rE")
   }
 
   /** Ternary and try/else: the branches lower in the caller's position
@@ -5442,13 +5467,13 @@ object Lower {
       case IfElse(c, t, f) =>
         val cond = pred(c)
         val (tt, ft) = (branch(t), branch(f))
-        Typed(when(cond, tt.c).otherwise(ft.c), agree(tt.dt, ft.dt))
+        either(when(cond, tt.c).otherwise(ft.c), tt, ft)
       case TryElse(b, d) =>
         // reference semantics: null OR evaluation error → default.
         // TryOrNull absorbs the error half (ANSI division/cast failures)
         // inside codegen; coalesce handles the null half.
         val (bt, dt) = (branch(b), branch(d))
-        Typed(coalesce(graft.functions.TryOrNull(bt.c), dt.c), agree(bt.dt, dt.dt))
+        either(coalesce(graft.functions.TryOrNull(bt.c), dt.c), bt, dt)
       case other => bail(s"not a ternary or try: $other")
     }
   }
@@ -5481,9 +5506,9 @@ object Lower {
     * to the parquet scan. Null-SENSITIVE sites (negation, universal
     * quantifier) must wrap with `coalesce(_, false)` themselves. */
   private def truthy(t: Typed, e: Expr): Column = t.dt match {
-    case Some(BooleanType)    => t.c
-    case Some(_: NumericType) => t.c =!= lit(0)
-    case Some(StringType)     => length(t.c) > 0
+    case Some(BooleanType) => t.c
+    case Some(StringType)  => length(t.c) > 0
+    case _ if t.isNum      => t.c =!= lit(0)
     case _ => bail(s"cannot type truthiness of $e")
   }
 

@@ -1599,6 +1599,29 @@ class GraftCompileSpec extends NoCachedLeftovers with BeforeAndAfterAll {
     lowersLikeDoc("""$.nation.map({a: not (n_name + "x")})""")
   }
 
+  test("an int/float mix stays a number under truthiness, `or` and a d format spec") {
+    // no Spark type keeps the interpreter's ints and floats apart, but
+    // the kind is known: truthiness tests against zero and `:d`
+    // truncates, where the display form would print "1234.56"; the
+    // display form of an integral value prints no ".0" on either lane
+    lowersLikeDoc("""$.supplier.map({a: f"{(s_acctbal ?? 0):d}"})""")
+    lowersLikeDoc("""$.lineitem.map({a: f"{l_quantity ?? 0}", b: f"{l_quantity ?? 0:>6}"})""")
+    lowersLikeDoc("""$.lineitem{l_discount ?? 0}""")
+    lowersLikeDoc("""$.lineitem.map({a: not (l_discount or 1)})""")
+    lowersLikeDoc("""$.lineitem.map({a: f"{(l_discount if l_linenumber > 2 else 1):d}"})""")
+    // compared with a string it is never equal, where Spark would cast
+    // the string and fail the job; the `??` may raise, so the
+    // interpreter rungs own it
+    val e = """$.region.map({a: (r_regionkey ?? 1.5) == "a"})"""
+    assert(graft.plans.Lower.tryCompile(e, t => graft.core.Tables(spark, sfDir, t)).isEmpty)
+    assert(canonRows(Graft.query(spark, sfDir, e)) == Vector.fill(5)("""{"a":false}"""))
+  }
+
+  test("a .Nf format spec displays a string, as the interpreter does") {
+    // Spark would cast the string to a double and fail the job
+    lowersLikeDoc("""$.region.map({a: f"{r_name:.2f}", b: f"{r_regionkey:.1f}"})""")
+  }
+
   test("an integral sum zero-pads under a 0N format spec, as the interpreter does") {
     lowersLikeDoc("""$.region.map({a: f"{r_regionkey + 1:03}"})""")
   }

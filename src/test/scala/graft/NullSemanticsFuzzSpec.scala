@@ -12,10 +12,11 @@ import graft.jexpr.{JValue, Jetro}
   * lanes is excluded from that shape surface: the interpreter ERRORS on
   * non-number arithmetic (vm semantics) while the relational lane
   * nulls the cell — a documented rung-granularity divergence that the
-  * arithmetic-tier test pins instead. Its pool mixes statically
-  * non-numeric operands (strings, a bool, a string literal) in with
-  * the numeric ones: any shape that does arithmetic on one must stay
-  * off the lowering, which would cast it where the interpreter raises.
+  * arithmetic-tier test pins instead. Past its all-numeric rounds it
+  * draws extra rounds that mix statically non-numeric operands
+  * (strings, a bool, a string literal) in with the numeric ones: any
+  * shape that does arithmetic on one must stay off the lowering, which
+  * would cast it where the interpreter raises.
   */
 class NullSemanticsFuzzSpec extends NoCachedLeftovers with BeforeAndAfterAll {
 
@@ -170,10 +171,11 @@ class NullSemanticsFuzzSpec extends NoCachedLeftovers with BeforeAndAfterAll {
 
     val atomsNum = Seq("a", "b", "id", "2", "3")
     // statically non-numeric operands: strings s and t, bool p and a
-    // string literal, one atom in four
+    // string literal, one atom in four in the mixed rounds
     val atomsOther = Seq("s", "t", "p", "\"1\"")
+    var mixed = false
     def atom(): String =
-      if (rng.nextInt(4) == 0) atomsOther(rng.nextInt(atomsOther.length))
+      if (mixed && rng.nextInt(4) == 0) atomsOther(rng.nextInt(atomsOther.length))
       else atomsNum(rng.nextInt(atomsNum.length))
     val opsAdd = Seq("+", "-", "*")
     def addExpr(): String = {
@@ -186,7 +188,10 @@ class NullSemanticsFuzzSpec extends NoCachedLeftovers with BeforeAndAfterAll {
       }
     }
     var cases = 0
-    (0 until 40).foreach { _ =>
+    var compared = 0 // all-numeric shapes that lowered and met tier 3
+    var kept = 0     // mixed shapes the lowering left to the interpreter
+    (0 until 60).foreach { round =>
+      mixed = round >= 40
       // (expr, divIsTopLevel): only a TOP-LEVEL division carries the
       // "must raise compiled on a zero denominator" guarantee. Nested
       // under another arithmetic op (pool D), Spark's null-short-
@@ -239,8 +244,14 @@ class NullSemanticsFuzzSpec extends NoCachedLeftovers with BeforeAndAfterAll {
           s"$$.t.sort_by(id).map({id: id, v: ($e)})", _ => df)
         val atoms = "\"1\"|[a-z]+|\\d+".r.findAllIn(e).toVector
         val concat = atoms.forall(Set("s", "t", "\"1\"")) && !e.exists("-*/%".contains(_))
-        if (atoms.exists(atomsOther.contains) && !concat)
+        if (atoms.exists(atomsOther.contains) && !concat) {
           assert(lowered.isEmpty, s"non-numeric arithmetic operand lowered: $e")
+          kept += 1
+        }
+        if (!mixed) {
+          assert(lowered.isDefined, s"should lower: $e")
+          compared += 1
+        }
         lowered.foreach { cdf =>
           val ran =
             try Some(cdf.toJSON.collect().toVector
@@ -267,6 +278,7 @@ class NullSemanticsFuzzSpec extends NoCachedLeftovers with BeforeAndAfterAll {
         }
       }
     }
-    assert(cases >= 100, s"only $cases generated")
+    assert(cases == 240 && compared == 160 && kept >= 20,
+      s"$cases generated, $compared compared, $kept kept off the lowering")
   }
 }
