@@ -1,6 +1,6 @@
 package graft.jexpr
 
-import scala.collection.immutable.VectorMap
+import scala.collection.immutable.{SeqMap, VectorMap}
 import Expr.Arg
 import Interp.err
 
@@ -71,9 +71,9 @@ object Builtins {
     case other    => err(s"$what requires an array, got ${other.kind}")
   }
 
-  private def objOnly(v: JValue, what: String): VectorMap[String, JValue] = v match {
+  private def objOnly(v: JValue, what: String): SeqMap[String, JValue] = v match {
     case JObj(fs) => fs
-    case JNull    => VectorMap.empty
+    case JNull    => Fields.empty
     case other    => err(s"$what requires an object, got ${other.kind}")
   }
 
@@ -163,7 +163,7 @@ object Builtins {
             case Expr.Unary("-", inner) => (Interp.body(inner, env), true)
             case other                  => (Interp.body(other, env), false)
           }
-        val byKey = Ordering.fromLessThan[(JValue, JValue)]((a, b) => JValue.cmp(a._1, b._1) < 0)
+        val byKey: Ordering[(JValue, JValue)] = (a, b) => JValue.cmp(a._1, b._1)
         xs.map(x => (keyFn(x), x)).sorted(if (desc) byKey.reverse else byKey).map(_._2)
     }
   }
@@ -229,9 +229,10 @@ object Builtins {
     // ═══ filters / projections (§2.2) ═══
     case "filter" | "find" | "find_all" | "where" =>
       // multi-arg form ANDs all predicates (deep_search.rs find_shallow_multi_pred_and)
-      val ps = if (args.isEmpty) Vector((_: JValue) => JBool(true))
-               else args.indices.map(i => bodyOr(args, i, env)).toVector
-      JArr(elems(recv).filter(x => ps.forall(p => p(x).truthy)))
+      // one predicate, made once: a closure per element is slow to make
+      val keep = args.indices.map(i => bodyOr(args, i, env))
+        .foldLeft((_: JValue) => true)((acc, p) => x => acc(x) && p(x).truthy)
+      JArr(elems(recv).filter(keep))
     case "map" =>
       val f = bodyOr(args, 0, env)
       JArr(elems(recv).map(f))
@@ -403,19 +404,19 @@ object Builtins {
     // ═══ grouping (§2.4) ═══
     case "group_by" =>
       val k = bodyOr(args, 0, env)
-      JObj(VectorMap.from(groupedBy(arrOnly(recv, "group_by"), k).map { case (g, xs) => g -> JArr(xs) }))
+      JObj(Fields.from(groupedBy(arrOnly(recv, "group_by"), k).map { case (g, xs) => g -> JArr(xs) }))
     case "count_by" =>
       val k = bodyOr(args, 0, env)
-      JObj(VectorMap.from(groupedBy(arrOnly(recv, "count_by"), k).map { case (g, xs) => g -> JInt(xs.length.toLong) }))
+      JObj(Fields.from(groupedBy(arrOnly(recv, "count_by"), k).map { case (g, xs) => g -> JInt(xs.length.toLong) }))
     case "index_by" => // last wins (M:72-73)
       val k = bodyOr(args, 0, env)
-      var out = VectorMap.empty[String, JValue]
-      arrOnly(recv, "index_by").foreach(x => out += keyStr(k(x)) -> x)
-      JObj(out)
+      val out = Fields.newBuilder
+      arrOnly(recv, "index_by").foreach(x => out.add(keyStr(k(x)), x))
+      JObj(out.result())
     case "group_shape" =>
       val k = bodyOr(args, 0, env)
       val shape = bodyOr(args, 1, env)
-      JObj(VectorMap.from(groupedBy(arrOnly(recv, "group_shape"), k).map {
+      JObj(Fields.from(groupedBy(arrOnly(recv, "group_shape"), k).map {
         case (g, xs) => g -> shape(JArr(xs))
       }))
     case "pivot" => pivot(recv, args, env)

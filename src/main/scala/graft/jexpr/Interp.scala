@@ -1,6 +1,5 @@
 package graft.jexpr
 
-import scala.collection.immutable.VectorMap
 import Expr._
 
 final class EvalException(msg: String) extends RuntimeException(msg)
@@ -8,7 +7,7 @@ final class EvalException(msg: String) extends RuntimeException(msg)
 /** Evaluation environment: `$` root, `@` current, lexical bindings. */
 final case class Env(root: JValue, current: JValue, vars: Map[String, JValue],
     rootAliases: Set[String] = Set.empty) {
-  def withCurrent(c: JValue): Env = copy(current = c)
+  def withCurrent(c: JValue): Env = new Env(root, c, vars, rootAliases)
   def bind(n: String, v: JValue): Env =
     copy(vars = vars + (n -> v), rootAliases = rootAliases - n)
   def bindRootAlias(n: String, v: JValue): Env =
@@ -33,7 +32,10 @@ object Interp {
     case Current     => env.current
     case Lit(v)      => v
     case id @ Ident(name) =>
-      env.vars.getOrElse(name, {
+      // a default that reads `env` would be a closure made per lookup
+      val bound = env.vars.getOrElse(name, null)
+      if (bound != null) bound
+      else {
         // bare builtin name over an ARRAY or STRING current applies the
         // zero-arg builtin — `map(len)` on strings is len(@), not a
         // field lookup (reference exec.rs:829-846 LoadIdent). Objects
@@ -45,7 +47,7 @@ object Interp {
         }
         if (asBuiltin) Builtins.call(name, env.current, Vector.empty, env)
         else fieldOf(env.current, name)
-      })
+      }
     case Lambda(ps, body) => JFun(ps, body, env.vars)
     case FString(parts)   => JStr(parts.map(fpart(_, env)).mkString)
     case ArrLit(elems)    =>
@@ -395,22 +397,22 @@ object Interp {
   }
 
   private def evalObjLit(fields: Vector[ObjField], env: Env): JValue = {
-    var out = VectorMap.empty[String, JValue]
+    val out = Fields.newBuilder
     def keyOf(e: Expr): String = eval(e, env) match {
       case JStr(s) => s
       case other   => JValue.display(other)
     }
     fields.foreach {
-      case ObjField.Short(n)    => out += n -> eval(Ident(n), env)
+      case ObjField.Short(n)    => out.add(n, eval(Ident(n), env))
       case ObjField.OptShort(n) =>
-        eval(Ident(n), env) match { case JNull => (); case v => out += n -> v }
+        eval(Ident(n), env) match { case JNull => (); case v => out.add(n, v) }
       case ObjField.KV(k, v, when) =>
-        if (when.forall(w => eval(w, env).truthy)) out += keyOf(k) -> eval(v, env)
+        if (when.forall(w => eval(w, env).truthy)) out.add(keyOf(k), eval(v, env))
       case ObjField.OptKV(k, v) =>
-        eval(v, env) match { case JNull => (); case x => out += keyOf(k) -> x }
-      case ObjField.Dyn(k, v) => out += keyOf(k) -> eval(v, env)
+        eval(v, env) match { case JNull => (); case x => out.add(keyOf(k), x) }
+      case ObjField.Dyn(k, v) => out.add(keyOf(k), eval(v, env))
       case ObjField.Spread(e) => eval(e, env) match {
-        case JObj(fs) => fs.foreach { case (k, v) => out += k -> v }
+        case JObj(fs) => fs.foreachEntry((k, v) => out.add(k, v))
         case JNull    => ()
         case _        => ()
       }
@@ -418,8 +420,8 @@ object Interp {
         // deep_merge_concat semantics: objects recurse, arrays at the
         // same key CONCATENATE (reference regression.rs
         // spread_deep_concatenates_arrays), scalars replace
-        case JObj(fs) => fs.foreach { case (k, v) =>
-          out += k -> (out.get(k) match {
+        case JObj(fs) => fs.foreachEntry { (k, v) =>
+          out.add(k, out.get(k) match {
             case Some(prev) => Builtins.deepMergeConcat(prev, v)
             case None       => v
           })
@@ -427,7 +429,7 @@ object Interp {
         case _ => ()
       }
     }
-    JObj(out)
+    JObj(out.result())
   }
 
   private def evalComp(kind: CompKind, keyE: Expr, valE: Option[Expr],
@@ -462,15 +464,15 @@ object Interp {
         }
         JArr(out.result())
       case CompKind.Dict =>
-        var out = VectorMap.empty[String, JValue]
+        val out = Fields.newBuilder
         kept.foreach { e =>
           val kk = eval(keyE, e) match {
             case JStr(s) => s
             case other   => JValue.display(other)
           }
-          out += kk -> eval(valE.get, e)
+          out.add(kk, eval(valE.get, e))
         }
-        JObj(out)
+        JObj(out.result())
     }
   }
 

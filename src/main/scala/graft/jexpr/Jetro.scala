@@ -94,7 +94,7 @@ object Jetro {
         val doc = JValue.parse(json)
         exprs.map { e =>
           try JValue.display(cached(e).evalValue(doc))
-          catch { case _: EvalException | _: ParseException => null }
+          catch { case _: EvalException | _: ParseException | _: JsonParseException => null }
         }
       } catch { case _: JsonParseException => null }
   }
@@ -134,7 +134,7 @@ object Jetro {
           case JNull    => Array.empty[String]
           case scalar   => Array(scalar.render)
         } catch {
-          case _: EvalException | _: ParseException =>
+          case _: EvalException | _: ParseException | _: JsonParseException =>
             // a malformed row must not kill a 100 TB job (SCALE.md
             // per-row tier): null the row — the caller's explode drops
             // it — but COUNT the drop so the mass is observable
@@ -179,7 +179,7 @@ object Jetro {
           catch { case _: RuntimeException => return null }
         exprVec.map { e =>
           try JValue.display(cached(e).evalValue(docV))
-          catch { case _: EvalException | _: ParseException => null }
+          catch { case _: EvalException | _: ParseException | _: JsonParseException => null }
         }.toArray
       }
     }

@@ -2,7 +2,6 @@ package graft.jexpr
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
-import scala.collection.immutable.VectorMap
 
 /** Direct Spark-value → [[JValue]] bridge: feed the document-mode
   * interpreter from a STRUCT column without a `to_json` + parse round
@@ -76,19 +75,20 @@ object RowBridge {
     case MapType(_, vt, _) =>
       val vc = converter(vt)
       v =>
-        JObj(VectorMap.from(v.asInstanceOf[scala.collection.Map[Any, Any]].iterator
-          .map { case (k, mv) =>
-            String.valueOf(k) -> (if (mv == null) JNull else vc(mv))
-          }))
+        val b = Fields.newBuilder
+        v.asInstanceOf[scala.collection.Map[Any, Any]].foreachEntry { (k, mv) =>
+          b.add(String.valueOf(k), if (mv == null) JNull else vc(mv))
+        }
+        JObj(b.result())
     case st: StructType =>
       val fields = st.fields.map(f => (f.name, converter(f.dataType)))
       v => {
         val row = v.asInstanceOf[Row]
-        val b = VectorMap.newBuilder[String, JValue]
+        val b = Fields.newBuilder
         var i = 0
         while (i < fields.length) {
           val cell = row.get(i)
-          if (cell != null) b += fields(i)._1 -> fields(i)._2(cell)
+          if (cell != null) b.add(fields(i)._1, fields(i)._2(cell))
           i += 1
         }
         JObj(b.result())

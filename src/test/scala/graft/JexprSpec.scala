@@ -450,4 +450,14 @@ class JexprSpec extends AnyFunSuite {
     assert(sums == nest(e => Binary("+", e, Lit(JInt(1)))))
     assert(secs < 5.0, f"40-deep brackets parsed in $secs%.1f s")
   }
+
+  test("a \\u escape takes exactly four hex digits, else JsonParseException") {
+    // Integer.parseInt once read these: ZZZZ threw NumberFormatException
+    // past every catch, and +041 read as "A"
+    for (bad <- Seq("\"\\uZZZZ\"", "\"\\u+041\"", "\"\\u12\"", "\"\\u00e", "\"x\\u"))
+      intercept[JsonParseException](JValue.parse(bad))
+    assert(JValue.parse("\"\\u0041\\u00e9\\u00E9\"") == JStr("A\u00e9\u00e9"))
+    val doc = JObj.of("s" -> JStr("\"\\uZZZZ\"")).render
+    assert(run(doc, "try $.s.from_json() else 0") == "0")
+  }
 }

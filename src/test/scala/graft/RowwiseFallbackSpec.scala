@@ -369,6 +369,22 @@ class RowwiseFallbackSpec extends SparkSpec {
     assert(c.errored.value == mid)
   }
 
+  test("a malformed from_json row drops and counts through the struct-fed UDF") {
+    // its text twin jetro_eval nulls the same row; a JsonParseException
+    // out of the struct-fed UDF once failed the whole job
+    import org.apache.spark.sql.functions.{col, explode, struct}
+    val ss = spark
+    import ss.implicits._
+    val df = Seq("{bad", """{"k": 7}""").toDF("props").select(struct(col("props")).as("doc"))
+    val docType = df.schema("doc").dataType.asInstanceOf[org.apache.spark.sql.types.StructType]
+    val errored = Graft.rowwiseCounters(spark).errored
+    val before = errored.value
+    val got = df.select(explode(jexpr.Jetro.jetroEvalElemsStruct(
+      "$.props.from_json().k", col("doc"), docType, None, Some(errored)))).as[String].collect()
+    assert(got.toSeq == Seq("7"))
+    assert(errored.value - before == 1, s"errored grew by ${errored.value - before}")
+  }
+
   // ── the chain's leading filters run in the scan ──
 
   private val words = "nw: s_name.words().len().rec(@)"
