@@ -1,6 +1,7 @@
 package graft.jexpr
 
-import scala.collection.immutable.{SeqMap, VectorMap}
+import scala.collection.immutable.SeqMap
+import scala.collection.mutable
 import Expr.Arg
 import Interp.err
 
@@ -451,12 +452,12 @@ object Builtins {
       })
     case "fanout" => JArr(args.map(a => Interp.body(a.e, env)(recv)))
     case "zip_shape" =>
-      var out = VectorMap.empty[String, JValue]
+      val out = Fields.newBuilder
       args.foreach { a =>
         val k = a.name.getOrElse(err("zip_shape requires named args"))
-        out += k -> Interp.body(a.e, env)(recv)
+        out.add(k, Interp.body(a.e, env)(recv))
       }
-      JObj(out)
+      JObj(out.result())
 
     // ═══ windows / sequences (§2.5) ═══
     case "window" =>
@@ -588,21 +589,21 @@ object Builtins {
     case "entries" | "to_pairs" =>
       JArr(objOnly(recv, name).toVector.map { case (k, v) => JArr(Vector(JStr(k), v)) })
     case "from_pairs" =>
-      var out = VectorMap.empty[String, JValue]
+      val out = Fields.newBuilder
       arrOnly(recv, "from_pairs").foreach {
-        case JArr(Vector(k, v)) => out += keyStr(k) -> v
+        case JArr(Vector(k, v)) => out.add(keyStr(k), v)
         case JObj(fs) if fs.size == 2 =>
           (fs.get("key"), fs.get("value")) match {
-            case (Some(k), Some(v)) => out += keyStr(k) -> v
+            case (Some(k), Some(v)) => out.add(keyStr(k), v)
             case _                  =>
           }
         case _ =>
       }
-      JObj(out)
+      JObj(out.result())
     case "invert" =>
-      var out = VectorMap.empty[String, JValue]
-      objOnly(recv, "invert").foreach { case (k, v) => out += keyStr(v) -> JStr(k) }
-      JObj(out)
+      val out = Fields.newBuilder
+      objOnly(recv, "invert").foreachEntry((k, v) => out.add(keyStr(v), JStr(k)))
+      JObj(out.result())
     case "merge" =>
       JObj(args.foldLeft(objOnly(recv, "merge")) { (acc, a) => acc ++ objOnly(ev(a, env), "merge") })
     case "deep_merge" =>
@@ -624,12 +625,12 @@ object Builtins {
       JObj(fs)
     case "transform_keys" =>
       val f = bodyOr(args, 0, env)
-      var out = VectorMap.empty[String, JValue]
-      objOnly(recv, name).foreach { case (k, v) => out += keyStr(f(JStr(k))) -> v }
-      JObj(out)
+      val out = Fields.newBuilder
+      objOnly(recv, name).foreachEntry((k, v) => out.add(keyStr(f(JStr(k))), v))
+      JObj(out.result())
     case "transform_values" =>
       val f = bodyOr(args, 0, env)
-      JObj(objOnly(recv, name).map { case (k, v) => k -> f(v) })
+      JObj(Fields.from(objOnly(recv, name).iterator.map { case (k, v) => k -> f(v) }))
     case "filter_keys" =>
       val p = bodyOr(args, 0, env)
       JObj(objOnly(recv, name).filter { case (k, _) => p(JStr(k)).truthy })
@@ -670,14 +671,14 @@ object Builtins {
         (acc, p) => delPath(acc, strOnly(p).split('.').toList)
       }
     case "flatten_keys" =>
-      var out = VectorMap.empty[String, JValue]
+      val out = Fields.newBuilder
       def go(prefix: String, v: JValue): Unit = v match {
         case JObj(fs) if fs.nonEmpty =>
           fs.foreach { case (k, x) => go(if (prefix.isEmpty) k else s"$prefix.$k", x) }
-        case leaf => out += prefix -> leaf
+        case leaf => out.add(prefix, leaf)
       }
       go("", recv)
-      JObj(out)
+      JObj(out.result())
     case "unflatten_keys" =>
       objOnly(recv, "unflatten_keys").foldLeft(JObj.empty: JValue) {
         case (acc, (k, v)) => setPath(acc, k.split('.').toList, v)
@@ -746,18 +747,18 @@ object Builtins {
 
   private def pick(recv: JValue, args: Vector[Arg], env: Env): JValue = {
     def one(o: JValue): JValue = {
-      var out = VectorMap.empty[String, JValue]
+      val out = Fields.newBuilder
       args.foreach { a =>
         a.name match {
-          case Some(alias) => out += alias -> Interp.body(a.e, env)(o)
+          case Some(alias) => out.add(alias, Interp.body(a.e, env)(o))
           case None => a.e match {
-            case Expr.Ident(n)     => out += n -> Interp.fieldOf(o, n)
-            case Expr.Lit(JStr(n)) => out += n -> Interp.fieldOf(o, n)
+            case Expr.Ident(n)     => out.add(n, Interp.fieldOf(o, n))
+            case Expr.Lit(JStr(n)) => out.add(n, Interp.fieldOf(o, n))
             case e                 => err(s"pick: unsupported selector $e")
           }
         }
       }
-      JObj(out)
+      JObj(out.result())
     }
     recv match {
       case JArr(xs) => JArr(xs.map(one))
@@ -777,18 +778,19 @@ object Builtins {
     }
     if (args.length >= 3) { // pivot(row, col, val) → {rowK: {colK: v}}
       val rk = accessor(0); val ck = accessor(1); val vk = accessor(2)
-      var out = VectorMap.empty[String, JValue]
+      val rows = mutable.LinkedHashMap.empty[String, Fields.Builder]
       xs.foreach { x =>
         val r = keyStr(rk(x)); val c = keyStr(ck(x)); val v = vk(x)
-        val inner = out.get(r) match { case Some(JObj(m)) => m; case _ => VectorMap.empty[String, JValue] }
-        out += r -> JObj(inner + (c -> v))
+        rows.getOrElseUpdate(r, Fields.newBuilder).add(c, v)
       }
-      JObj(out)
+      val out = Fields.newBuilder
+      rows.foreachEntry((r, row) => out.add(r, JObj(row.result())))
+      JObj(out.result())
     } else { // pivot(k, v) → flat {k: v}
       val kf = accessor(0); val vf = accessor(1)
-      var out = VectorMap.empty[String, JValue]
-      xs.foreach(x => out += keyStr(kf(x)) -> vf(x))
-      JObj(out)
+      val out = Fields.newBuilder
+      xs.foreach(x => out.add(keyStr(kf(x)), vf(x)))
+      JObj(out.result())
     }
   }
 
@@ -860,14 +862,14 @@ object Builtins {
       JObj.of("type" -> JStr("Array"), "len" -> JInt(xs.length.toLong), "items" -> items)
     case JObj(fs) =>
       var required = Vector.empty[JValue]
-      var fields = VectorMap.empty[String, JValue]
-      fs.foreach { case (k, child) =>
+      val fields = Fields.newBuilder
+      fs.foreachEntry { (k, child) =>
         var f = schemaOf(child)
         if (child == JNull) f = setField(f, "nullable", JBool(true))
         else required :+= JStr(k)
-        fields += k -> f
+        fields.add(k, f)
       }
-      JObj.of("type" -> JStr("Object"), "required" -> JArr(required), "fields" -> JObj(fields))
+      JObj.of("type" -> JStr("Object"), "required" -> JArr(required), "fields" -> JObj(fields.result()))
     case _ => tyObj("Mixed")
   }
 
@@ -914,8 +916,8 @@ object Builtins {
 
   private def unifyObjSchemas(a: JValue, b: JValue): JValue = {
     def fields(v: JValue) = v match {
-      case JObj(fs) => fs.get("fields") match { case Some(JObj(m)) => m; case _ => VectorMap.empty[String, JValue] }
-      case _        => VectorMap.empty[String, JValue]
+      case JObj(fs) => fs.get("fields") match { case Some(JObj(m)) => m; case _ => Fields.empty }
+      case _        => Fields.empty
     }
     def req(v: JValue): Set[String] = v match {
       case JObj(fs) => fs.get("required") match {
@@ -927,7 +929,7 @@ object Builtins {
     val (fa, fb) = (fields(a), fields(b))
     val (ra, rb) = (req(a), req(b))
     var required = Vector.empty[JValue]
-    var out = VectorMap.empty[String, JValue]
+    val out = Fields.newBuilder
     (fa.keysIterator ++ fb.keysIterator.filterNot(fa.contains)).foreach { k =>
       val f = (fa.get(k), fb.get(k)) match {
         case (Some(x), Some(y)) => unifySchema(x, y)
@@ -936,9 +938,9 @@ object Builtins {
         case _                  => tyObj("Unknown")
       }
       if (ra.contains(k) && rb.contains(k)) required :+= JStr(k)
-      out += k -> f
+      out.add(k, f)
     }
-    JObj.of("type" -> JStr("Object"), "required" -> JArr(required), "fields" -> JObj(out))
+    JObj.of("type" -> JStr("Object"), "required" -> JArr(required), "fields" -> JObj(out.result()))
   }
 
   private def getPath(v: JValue, path: String): JValue =
@@ -947,7 +949,7 @@ object Builtins {
   private def setPath(v: JValue, path: List[String], nv: JValue): JValue = path match {
     case Nil => nv
     case k :: rest =>
-      val fs = v match { case JObj(m) => m; case _ => VectorMap.empty[String, JValue] }
+      val fs = v match { case JObj(m) => m; case _ => Fields.empty }
       JObj(fs + (k -> setPath(fs.getOrElse(k, JNull), rest, nv)))
   }
 

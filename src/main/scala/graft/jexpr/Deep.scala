@@ -62,7 +62,7 @@ object Deep {
   def walkPost(v: JValue, f: JValue => JValue): JValue = {
     val rebuilt = v match {
       case JArr(xs) => JArr(xs.map(walkPost(_, f)))
-      case JObj(fs) => JObj(fs.map { case (k, x) => k -> walkPost(x, f) })
+      case JObj(fs) => JObj(Fields.from(fs.iterator.map { case (k, x) => k -> walkPost(x, f) }))
       case other    => other
     }
     f(rebuilt)
@@ -71,7 +71,7 @@ object Deep {
   /** `walk_pre(fn)` — pre-order: node first, then recurse into result. */
   def walkPre(v: JValue, f: JValue => JValue): JValue = f(v) match {
     case JArr(xs) => JArr(xs.map(walkPre(_, f)))
-    case JObj(fs) => JObj(fs.map { case (k, x) => k -> walkPre(x, f) })
+    case JObj(fs) => JObj(Fields.from(fs.iterator.map { case (k, x) => k -> walkPre(x, f) }))
     case other    => other
   }
 

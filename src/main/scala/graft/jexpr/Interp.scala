@@ -7,7 +7,7 @@ final class EvalException(msg: String) extends RuntimeException(msg)
 /** Evaluation environment: `$` root, `@` current, lexical bindings. */
 final case class Env(root: JValue, current: JValue, vars: Map[String, JValue],
     rootAliases: Set[String] = Set.empty) {
-  def withCurrent(c: JValue): Env = new Env(root, c, vars, rootAliases)
+  def withCurrent(c: JValue): Env = copy(current = c)
   def bind(n: String, v: JValue): Env =
     copy(vars = vars + (n -> v), rootAliases = rootAliases - n)
   def bindRootAlias(n: String, v: JValue): Env =

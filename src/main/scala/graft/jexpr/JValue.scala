@@ -103,6 +103,11 @@ final class Fields private (keys: Array[String], vals: Array[JValue], index: Arr
 
   def updated[V1 >: JValue](k: String, v: V1): SeqMap[String, V1] = VectorMap.from[String, V1](this).updated(k, v)
   def removed(k: String): SeqMap[String, JValue] = if (contains(k)) VectorMap.from(this).removed(k) else this
+
+  // `filter`, `filterNot` and `partition` build their results here
+  override def empty: Fields = Fields.empty
+  override protected def fromSpecific(coll: IterableOnce[(String, JValue)]): Fields = Fields.from(coll)
+  override protected def newSpecificBuilder: mutable.Builder[(String, JValue), Fields] = Fields.newBuilder
 }
 
 object Fields {
@@ -357,13 +362,15 @@ private final class JsonParser(s: String) {
   private val MaxDepth = 512
   // Keys read so far in this parse, by the hash of their text: the same
   // key in every record of an array is one String, not one per record.
-  // Made on the first object, so a scalar document pays nothing for it.
-  private var keyTable: Array[String] = null
+  // Only a text of KeyTableMinChars or more gets one: a small document
+  // (one row's JSON) repeats too few keys to pay for the table.
+  private val keyTable: Array[String] =
+    if (cs.length >= KeyTableMinChars) new Array[String](KeySlots) else null
   // One object builder per nesting depth, reused by every object at that
   // depth, and one stack for the elements of the open arrays: a value
-  // allocates only its own exact-size storage.
-  private val objBuilders = mutable.ArrayBuffer.empty[Fields.Builder]
-  private var elems = new Array[AnyRef](64)
+  // allocates only its own exact-size storage. Both are made on first use.
+  private var objBuilders: Array[Fields.Builder] = null
+  private var elems: Array[AnyRef] = null
   private var top = 0
   def atEnd: Boolean = pos >= cs.length
 
@@ -410,9 +417,10 @@ private final class JsonParser(s: String) {
   private def parseObj(): JValue = {
     expect('{'); skipWs()
     if (!atEnd && cs(pos) == '}') { pos += 1; return JObj.empty }
-    if (keyTable == null) keyTable = new Array[String](KeySlots)
-    while (objBuilders.length <= depth) objBuilders += Fields.newBuilder
-    val b = objBuilders(depth)
+    if (objBuilders == null) objBuilders = new Array[Fields.Builder](depth + 4)
+    else if (objBuilders.length <= depth) objBuilders = java.util.Arrays.copyOf(objBuilders, depth * 2)
+    var b = objBuilders(depth)
+    if (b == null) { b = Fields.newBuilder; objBuilders(depth) = b }
     var done = false
     while (!done) {
       skipWs()
@@ -429,6 +437,7 @@ private final class JsonParser(s: String) {
   private def parseArr(): JValue = {
     expect('['); skipWs()
     if (!atEnd && cs(pos) == ']') { pos += 1; return JArr(Vector.empty) }
+    if (elems == null) elems = new Array[AnyRef](16)
     val base = top
     var done = false
     while (!done) {
@@ -460,7 +469,7 @@ private final class JsonParser(s: String) {
       val c = cs(p)
       if (c == '"') {
         pos = p + 1
-        if (!key) return s.substring(start, p)
+        if (!key || keyTable == null) return s.substring(start, p)
         val slot = (h ^ (h >>> 16)) & (KeySlots - 1)
         val seen = keyTable(slot)
         if (seen != null && seen.length == p - start && s.regionMatches(start, seen, 0, p - start)) return seen
@@ -578,6 +587,8 @@ private final class JsonParser(s: String) {
 private object JsonParser {
   /** Slots in a parse's key table (a power of two). */
   final val KeySlots = 512
+  /** The shortest text whose parse keeps a key table. */
+  final val KeyTableMinChars = 1024
   /** Most significant digits an exact double mantissa holds for sure. */
   final val FastDigits = 15
   /** 1e0 … 1e22: every power of ten a double holds exactly. */

@@ -1,6 +1,5 @@
 package graft.jexpr
 
-import scala.collection.immutable.VectorMap
 import Expr._
 
 /** Structural patches: `patch $ { path: value when cond, … }` plus the
@@ -59,7 +58,7 @@ object PatchEval {
       case PatchStep.Field(name) :: rest =>
         val fields = node match {
           case JObj(fs) => fs
-          case _        => VectorMap.empty[String, JValue]
+          case _        => Fields.empty
         }
         val child = fields.getOrElse(name, JNull)
         val origChild = orig match {
@@ -103,15 +102,15 @@ object PatchEval {
           }
           if (any) Changed(JArr(out)) else Skipped
         case JObj(fs) =>
-          val om = orig match { case JObj(o) => o; case _ => VectorMap.empty[String, JValue] }
+          val om = orig match { case JObj(o) => o; case _ => Fields.empty }
           var any = false
-          val out = fs.flatMap { case (k, v) =>
+          val out = Fields.from(fs.iterator.flatMap { case (k, v) =>
             patch(v, om.getOrElse(k, JNull), rest, f, env) match {
               case Changed(nv) => any = true; Some(k -> nv)
               case Deleted     => any = true; None
               case Skipped     => Some(k -> v)
             }
-          }
+          })
           if (any) Changed(JObj(out)) else Skipped
         case _ => Skipped
       }
@@ -136,9 +135,9 @@ object PatchEval {
         // no further descent inside a patched subtree)
         def go(x: JValue, ox: JValue): (JValue, Boolean) = x match {
           case JObj(fs) =>
-            val om = ox match { case JObj(o) => o; case _ => VectorMap.empty[String, JValue] }
+            val om = ox match { case JObj(o) => o; case _ => Fields.empty }
             var any = false
-            val out = fs.flatMap { case (k, v) =>
+            val out = Fields.from(fs.iterator.flatMap { case (k, v) =>
               if (k == name) patch(v, om.getOrElse(k, JNull), rest, f, env) match {
                 case Changed(nv) => any = true; Some(k -> nv)
                 case Deleted     => any = true; None
@@ -148,7 +147,7 @@ object PatchEval {
                 if (a) any = true
                 Some(k -> nv)
               }
-            }
+            })
             (JObj(out), any)
           case JArr(xs) =>
             val os = ox match { case JArr(o) => o; case _ => Vector.empty }

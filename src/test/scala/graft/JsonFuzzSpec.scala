@@ -179,6 +179,14 @@ class JsonFuzzSpec extends AnyFunSuite {
     }
   }
 
+  test("the first object of a parse may sit at any depth") {
+    for (d <- Seq(0, 1, 3, 4, 5, 9, 40)) {
+      val text = "[" * d + """{"a": {"b": [1, {"c": 2}]}, "d": 3}""" + "]" * d
+      val want = (0 until d).foldLeft(JValue.parse("""{"a": {"b": [1, {"c": 2}]}, "d": 3}"""))((v, _) => JArr(Vector(v)))
+      assert(JValue.parse(text) == want, s"depth $d")
+    }
+  }
+
   test("a truncated document raises JsonParseException") {
     val rng = new scala.util.Random(seed)
     docs.foreach { t =>
@@ -254,6 +262,33 @@ class JsonFuzzSpec extends AnyFunSuite {
     }
     assert(fs.size == n)
     assert(secs < 20.0, f"count_by over $n groups took $secs%.1f s")
+  }
+
+  test("every object an expression builds once is a Fields table") {
+    val doc = JValue.parse(
+      """{"o": {"a": 1, "b": {"c": 2}}, "ps": [["x", 1], ["y", 2], ["x", 3]],
+        | "rs": [{"r": "n", "c": "p", "v": 1}, {"r": "s", "c": "q", "v": 2}, {"r": "n", "c": "q", "v": 3}]}""".stripMargin)
+    /** The first object under `v` that is not a Fields, if any. */
+    def other(v: JValue): Option[String] = v match {
+      case JObj(fs) if !fs.isInstanceOf[Fields] => Some(s"${fs.getClass.getSimpleName} in ${v.render}")
+      case JObj(fs) => fs.valuesIterator.flatMap(other).nextOption()
+      case JArr(xs) => xs.iterator.flatMap(other).nextOption()
+      case _        => None
+    }
+    val texts = Seq(
+      "$.o", "{a: 1, b: [1, 2], c: {d: 3}}", "{k: v for k, v in $.o}", "{...$.o, z: 1}",
+      "$.ps.from_pairs()", "$.o.invert()", "$.o.transform_keys(@ + \"_\")",
+      "$.o.transform_values(@)", "$.o.filter_keys(@ == \"a\")", "$.o.filter_values(@ != 1)",
+      "$.o.flatten_keys()", "$.o.pick(a, z: b)", "$.rs.pivot(\"r\", \"v\")",
+      "$.rs.pivot(\"r\", \"c\", \"v\")", "$.rs.schema()", "$.rs.group_by(r)", "$.rs.count_by(r)",
+      "$.rs.index_by(r)", "$.rs.group_shape(r, len())", "$.o.zip_shape(x: a, y: b)",
+      "$.o.walk(@)", "$.o.walk_pre(@)", "$.rs.partition(v > 1)", "$.rs.map({r, v})")
+    for (t <- texts) {
+      val v = Jetro.compile(t).evalValue(doc)
+      assert(v.isInstanceOf[JObj] || v.isInstanceOf[JArr], s"$t gave ${v.render}")
+      val built = other(v)
+      assert(built.isEmpty, s"$t built $built")
+    }
   }
 
   test("a Fields object equals a VectorMap object with the same content") {
